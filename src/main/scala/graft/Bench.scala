@@ -57,31 +57,26 @@ object Bench {
       }
       (name, if (times.exists(_ < 0)) -1.0 else times.min)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // stdout: one small line per query, then ONE closing total line.
+    // A reader that keeps only the tail of the output cut the old
+    // single-line per-query map mid-line; short lines survive any tail
+    // cut whole, and the total line always comes last.
+    results.foreach { case (name, sec) =>
+      println(s"""{"metric":"query","query":"$name","value":$sec,"unit":"sec","stat":"min_of_3"}""")
+    }
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"min_of_3","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
-    println(line)
-    // Round 15 (VERDICT r14 item 2): the driver snapshots only the TAIL
-    // of the sbt output, and the ~8 KB per-query line above has been
-    // truncated mid-line in BENCH_r07/r13/r14 (parsed=null every time).
-    // Emit a SECOND, compact closing line — total/count/failures only,
-    // well under any tail window — so the driver's parse always finds
-    // at least one complete JSON line. The full per-query map stays in
-    // the big line (printed first, same format as every prior round)
-    // and in the bench.json file written below.
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"min_of_3","n":${results.size},"n_failed":${results.count(_._2 < 0)},"sf":"$sfDir"}"""
-    println(compact)
-    // ALSO persist to a file: the driver snapshots only the tail of
-    // sbt output and has truncated the one-line JSON mid-line before
-    // (BENCH_r07 parsed=null) — the file survives verbatim. The path
-    // is env-overridable and logged ABSOLUTE so a run from another
-    // cwd can't silently leave a stale repo-root snapshot looking
-    // current.
+    val head =
+      s"""{"metric":"total","value":$total,"unit":"sec","stat":"min_of_3","n":${results.size},"failed":$failed,"sf":"$sfDir""""
+    println(head + "}")
+    // bench.json keeps the whole record on one line: the total line's
+    // fields plus the per-query map. The path is env-overridable and
+    // logged ABSOLUTE so a run from another cwd can't silently leave a
+    // stale repo-root snapshot looking current.
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val line = s"""$head,"queries":$qs}"""
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
       .toAbsolutePath

@@ -56,12 +56,15 @@ object AsofJoin {
     * (e.g. epoch micros) — the pick compares subtractions.
     *
     * Same union-sort scale shape as [[asof]]: ONE shuffle on the key,
-    * then the backward and forward fills are two frames over the SAME
-    * partitioning and sort (the exchange and sort are shared between
-    * the two Window nodes), and the pick is stateless column
-    * arithmetic. A same-time right row is captured by the backward
-    * fill at distance 0, which wins every comparison, so the forward
-    * frame's strict exclusion of same-time rights never shows.
+    * then the backward and forward fills are two growing frames over
+    * the same partitioning. Only the exchange is shared: the forward
+    * fill orders in reverse (t DESC, _side DESC), so each of the two
+    * Window nodes pays its own per-partition sort — the price of two
+    * O(n) frames instead of one O(partition²) following frame. The
+    * pick is stateless column arithmetic. A same-time right row is
+    * captured by the backward fill at distance 0, which wins every
+    * comparison, so the forward frame's strict exclusion of same-time
+    * rights never shows.
     *
     * The matched right time lands in `nearest_<timeCol>`; payload
     * columns keep their names (NULL when the key has no right rows).

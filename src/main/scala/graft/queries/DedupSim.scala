@@ -940,7 +940,7 @@ object DedupSim {
         col("x.sz").as("sz_a"), col("y.sz").as("sz_b"))
       .distinct()
       .withColumn("n_bands",
-        (lit(Dedup.NumHashes) / col("rows_per_band")).cast("int"))
+        expr(s"${Dedup.NumHashes} div rows_per_band").cast("int"))
       .localCheckpoint()
     // one exact-Jaccard verify over the DISTINCT pair union (uncapped
     // shingle sets — the minhash verify step, same as minhashDedup)

@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
+import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, SpecifiedWindowFrame,
+  UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
 
-/** Global scale lint: every registered query's plan, swept for the two
+/** Global scale lint: every registered query's plan, swept for the
   * shapes that silently stop scaling — quadratic joins (cartesian /
-  * pure-theta against an unbounded side) and whole-relation windows.
+  * pure-theta against an unbounded side), whole-relation windows and
+  * re-aggregating following frames (`currentRow..unboundedFollowing`).
   * PlanSpec asserts shapes query-by-query; this spec guards every
   * FUTURE query by construction: a new registration with a stray
   * crossJoin or unpartitioned window fails here unless it is
@@ -78,8 +80,27 @@ class PlanLintSpec extends SparkSpec {
     // prefix sums run on that table, never the event log
     "q_events_survival")
 
+  /** Reviewed shrinking frames: q_events_interpolate's cross-day
+    * next-observation carry runs `(1, unboundedFollowing)` over the
+    * per-(event_type, day) observation table — one row per calendar
+    * day, not per event (the q_events_concurrency bounded-input
+    * contract); its per-row neighbour scan is a reversed growing
+    * frame. */
+  private val shrinkingAllowed = Set("q_events_interpolate")
+
   private def small(p: LogicalPlan): Boolean =
     p.maxRows.exists(_ <= SmallSide)
+
+  /** Frames that end at unboundedFollowing but start after
+    * unboundedPreceding, e.g. `currentRow..unboundedFollowing`: Spark
+    * re-aggregates the whole remaining partition for every row,
+    * O(partition²). The O(n) form is the same frame as a growing
+    * `unboundedPreceding..currentRow` over the reversed order. */
+  private def shrinkingFrames(w: LWindow): Seq[SpecifiedWindowFrame] =
+    w.windowExpressions.flatMap(_.collect {
+      case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing)
+        if lower != UnboundedPreceding => f
+    })
 
   test("the lint detectors fire on deliberately bad plans (negative control)") {
     import spark.implicits._
@@ -106,6 +127,20 @@ class PlanLintSpec extends SparkSpec {
           if lw.partitionSpec.isEmpty && !lw.child.maxRows.exists(_ <= 1000) => lw
       }
     assert(unpart.nonEmpty, "unpartitioned-window detector is blind")
+    // a following frame (the pre-reversal as-of forward fill) trips the
+    // shrinking-frame detector; its reversed growing twin does not
+    import org.apache.spark.sql.expressions.{Window => W, WindowSpec}
+    def frames(w: WindowSpec) =
+      big.withColumn("nx", first(col("o_totalprice"), ignoreNulls = true).over(w))
+        .queryExecution.optimizedPlan.collect { case lw: LWindow => lw }
+        .flatMap(shrinkingFrames)
+    val byCust = W.partitionBy(col("o_custkey"))
+    assert(frames(byCust.orderBy(col("o_orderdate"))
+        .rowsBetween(W.currentRow, W.unboundedFollowing)).nonEmpty,
+      "shrinking-frame detector is blind")
+    assert(frames(byCust.orderBy(col("o_orderdate").desc)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)).isEmpty,
+      "growing frame falsely flagged as shrinking")
   }
 
   test("no registered plan hides a quadratic join or unpartitioned window") {
@@ -131,6 +166,10 @@ class PlanLintSpec extends SparkSpec {
           if (w.partitionSpec.isEmpty && !w.child.maxRows.exists(_ <= 1000)
               && !unpartitionedAllowed(name))
             offences += s"$name: unpartitioned window over unbounded input"
+          if (!shrinkingAllowed(name))
+            shrinkingFrames(w).foreach { f =>
+              offences += s"$name: re-aggregating following frame $f (O(partition²))"
+            }
         case _ =>
       }
       // CartesianProduct never survives review outside the parity query
