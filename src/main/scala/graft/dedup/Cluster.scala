@@ -36,7 +36,9 @@ object Cluster {
     * cluster_id = min id reachable through the pair graph.
     *
     * @param pairs undirected edges, one per row
-    * @param maxIter safety bound on propagation rounds (diameter) */
+    * @param maxIter bound on propagation rounds (diameter); a graph
+    *                that needs more throws instead of returning
+    *                upper-bound labels */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
@@ -102,9 +104,9 @@ object Cluster {
       iter += 2
     }
     if (!converged)
-      System.err.println(
-        s"[graft] connectedComponents stopped at maxIter=$maxIter before " +
-          "convergence — labels are an upper bound on the true components")
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter=$maxIter rounds; " +
+          "its labels would only be an upper bound on the true components")
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
@@ -182,7 +184,8 @@ object Cluster {
     * the edges ARE the component assignment (v → component min).
     *
     * @param pairs undirected edges, one per row
-    * @param maxIter safety bound on large+small rounds */
+    * @param maxIter bound on large+small rounds; a graph that needs
+    *                more throws instead of returning upper-bound labels */
   def connectedComponentsStar(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30): DataFrame = {
@@ -234,12 +237,10 @@ object Cluster {
       iter += 1
     }
     if (!converged)
-      System.err.println(
-        s"[graft] connectedComponentsStar stopped at maxIter=$maxIter " +
-          "before convergence — labels are an upper bound")
+      throw new IllegalStateException(
+        s"connectedComponentsStar did not converge within maxIter=$maxIter rounds; " +
+          "its labels would only be an upper bound on the true components")
     // fixpoint edges are stars (v, componentMin); centers label themselves.
-    // min() guards the not-fully-converged case where a vertex still
-    // holds several pointers.
     val lbl = edges.groupBy(col("u").as("vid")).agg(min(col("v")).as("lbl"))
     vertices.join(lbl, vertices("id") === lbl("vid"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))

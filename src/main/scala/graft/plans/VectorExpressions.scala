@@ -223,6 +223,7 @@ object VecLshSignature {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BandedRangeJoinRule)
+    ext.injectOptimizerRule(_ => ExactDecimalRule)
     ext.injectFunction((
       FunctionIdentifier("vec_cosine"),
       new ExpressionInfo(classOf[VecCosine].getName, "vec_cosine"),

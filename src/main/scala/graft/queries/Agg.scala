@@ -14,8 +14,14 @@ import graft.Tables
   * Spark-first: `groupBy(...).agg(...)` compiles to a partial (map-side)
   * hash aggregate + final aggregate after a shuffle on the group keys —
   * the plan that scales to 100 TB. Sums over money-like doubles are
-  * computed on DECIMAL(18,4) so the result is exact and order-independent,
-  * making the DuckDB oracle comparison bit-stable.
+  * computed on DECIMAL(18,4) (`Money.dec`) so the result is exact and
+  * order-independent, making the DuckDB oracle comparison bit-stable.
+  * This is also the cheap path: `graft.plans.ExactDecimalRule` runs the
+  * casts, the `+ − ×` closed by a DECIMAL(≤18) cast and the SUMs on
+  * unscaled longs. Envelope: a double |d| < 2³⁸ with at most 4 decimals
+  * casts on the fast path, products and sums stay on it while no long
+  * overflows (sums keep a two-long total); anything else evaluates
+  * Spark's own expression, with identical results (see `Money`).
   *
   * Output-type contract for big sums: a DECIMAL→DOUBLE cast is only
   * cross-engine bit-stable while the decimal's unscaled value fits in
@@ -35,7 +41,7 @@ import graft.Tables
   * is the portable output type.
   */
 object Agg {
-  private def dec(c: String) = col(c).cast("decimal(18,4)")
+  import Money.dec
 
   /** TPC-H Q1-shaped pricing summary — the flagship query. */
   def qTpch1(spark: SparkSession, dir: String): DataFrame = {

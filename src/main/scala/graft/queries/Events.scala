@@ -17,7 +17,7 @@ import graft.Tables
   */
 object Events {
 
-  private def dec(c: String) = col(c).cast("decimal(18,4)")
+  import Money.dec
 
   /** Tumbling 1-hour windows — batch twin of the streaming agg. */
   def qEventsTumbling(s: SparkSession, d: String): DataFrame =

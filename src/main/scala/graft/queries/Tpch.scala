@@ -14,7 +14,7 @@ import graft.Tables
   */
 object Tpch {
 
-  private def dec(c: String) = col(c).cast("decimal(18,4)")
+  import Money.dec
   private def revenue: org.apache.spark.sql.Column =
     (dec("l_extendedprice") * (lit(1).cast("decimal(18,4)") - dec("l_discount")))
       .cast("decimal(18,8)")

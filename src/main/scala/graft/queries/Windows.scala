@@ -21,7 +21,7 @@ import graft.api.Win
   */
 object Windows {
 
-  private def dec(c: String) = col(c).cast("decimal(18,4)")
+  import Money.dec
 
   /** Sliding ROWS frames (preceding + following) — stupidb
     * test_rows_window / Window.rows. */

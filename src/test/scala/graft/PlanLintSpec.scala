@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, SpecifiedWindowFrame,
-  UnboundedFollowing, UnboundedPreceding}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualNullSafe, EqualTo,
+  SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Global scale lint: every registered query's plan, swept for the
   * shapes that silently stop scaling — quadratic joins (cartesian /
@@ -270,5 +272,28 @@ class PlanLintSpec extends SparkSpec {
     } yield s"$name: ${f.name} is ${f.dataType}"
     assert(offences.isEmpty,
       s"decimal output columns defeat the oracle hash:\n${offences.mkString("\n")}")
+  }
+
+  test("the bench TPC-H plans keep no money arithmetic on Spark's BigDecimal path") {
+    // graft.plans.ExactDecimalRule runs the DECIMAL(18,4) money policy
+    // on unscaled longs; a Sum over a decimal or a double → DECIMAL(≤18)
+    // Cast left in the optimized plan is the per-row BigDecimal path.
+    def bigDecimalPath(plan: LogicalPlan): Seq[String] =
+      plan.flatMap(_.expressions.flatMap(_.collect {
+        case s @ Sum(c, _) if c.dataType.isInstanceOf[DecimalType] => s.toString
+        case c: Cast if c.child.dataType == DoubleType && (c.dataType match {
+          case d: DecimalType => d.precision <= 18
+          case _ => false
+        }) => c.toString
+      }))
+    val names = Seq("q_tpch1", "q_tpch3", "q_tpch9", "q_tpch18")
+    def plan(name: String) = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+    val offences = for (name <- names; e <- bigDecimalPath(plan(name))) yield s"$name: $e"
+    assert(offences.isEmpty, s"BigDecimal money path:\n${offences.mkString("\n")}")
+    // negative control: with the rule excluded every query trips the check
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, graft.plans.ExactDecimalRule.ruleName)
+    try names.foreach(n => assert(bigDecimalPath(plan(n)).nonEmpty, s"$n without the rule"))
+    finally spark.conf.unset(key)
   }
 }
