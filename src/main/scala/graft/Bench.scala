@@ -1,17 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Timed run of the registered queries: warm-up, then per query the min
+  * of 3 noop-sink passes. Optional argument: a comma-separated query
+  * subset (`runMain graft.Bench q_tpch1,q_tpch3`); without one every
+  * registered query runs. Input dir from `SPARK_GRAFT_SF_DIR`, record
+  * path from `SPARK_GRAFT_BENCH_OUT`. */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(args.headOption)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // warm the session (codegen compiler, parquet footers, shuffle
     // infra, window/generate/join codegen paths) so the first timed
     // queries don't absorb one-time JIT costs — r1 showed the first
@@ -36,7 +33,7 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       // min over 3 passes: pass 1 absorbs residual JIT/GC noise, the
       // min is the reproducible cost of the plan itself (the driver's
       // per-round comparisons need a low-variance statistic — totals

@@ -28,6 +28,23 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defBlocks.reduce(_ ++ _)
 
+  /** The registered queries named in a comma-separated `subset`, or all
+    * of them when there is none, sorted by name. An empty subset, or one
+    * with names that are not registered, throws IllegalArgumentException
+    * naming every unknown name, so a mistyped subset fails instead of
+    * quietly running less. */
+  def select(subset: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = subset.fold(all.keySet)(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    if (names.isEmpty) throw new IllegalArgumentException("empty query subset")
+    val unknown = (names -- all.keySet).toSeq.sorted
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown queries: ${unknown.mkString(", ")}")
+    names.toSeq.sorted.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

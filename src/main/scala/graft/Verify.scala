@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,10 @@ object Verify {
     // args: <sfDir> <outDir> [comma-separated query subset — local use]
     val sfDir = args(0)
     val outDir = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val subset = args.lift(2)
+    val selected = SparkEntry.select(subset)
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -57,13 +46,13 @@ object Verify {
     val meta =
       s"""{"registered": ${SparkEntry.queries.size},
          | "written": ${selected.size - failed.size},
-         | "subset": ${only.isDefined},
+         | "subset": ${subset.isDefined},
          | "failed": ${failed.sorted.map(q).mkString("[", ",", "]")},
          | "unoracled": ${unoracled.map(q).mkString("[", ",", "]")}}"""
         .stripMargin.replace("\n", "")
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta)
     println(s"[verify] registered=${SparkEntry.queries.size} " +
-      s"written=${selected.size - failed.size} subset=${only.isDefined} " +
+      s"written=${selected.size - failed.size} subset=${subset.isDefined} " +
       s"failed=${failed.mkString(",")} unoracled=${unoracled.mkString(",")}")
     spark.stop()
   }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * instead shipped every token row through a `lead()`-over-(id, pos)
   * window — a full Exchange + sort per pipeline — to look up
   * neighbors that are adjacent in the document's own word array
-  * (interleaved A/B at sf0.1: window shape 1.4–1.5 s per shingle
-  * pass, array shape 0.25–0.36 s; tools/AbShingle).
+  * (interleaved A/B at sf0.1, local[32]: window shape 1.4–1.5 s per
+  * shingle pass, array shape 0.25–0.36 s; OPTIMIZATION_r14.md).
   *
   * Two hard-won rules for array expressions in hot paths (the r7
   * array-based MinHash spent 657s where the relational shape spends
@@ -73,20 +73,6 @@ object Dedup {
   }
 
   // ---- relational token/shingle backbone ---------------------------
-
-  /** One row per token: (id, blockCols…, pos, h) with h = xxhash64 of
-    * the word. The split runs exactly once per document, inside the
-    * Generate (posexplode) operator — whole-stage codegen'd. */
-  def tokenRows(
-      docs: DataFrame, idCol: String, textCol: String,
-      blockCols: Seq[String] = Nil): DataFrame =
-    docs
-      .select(
-        (col(idCol).as("id") +: blockCols.map(col)) :+
-          posexplode(split(col(textCol), "\\s+")).as(Seq("pos", "word")): _*)
-      .select(
-        (col("id") +: blockCols.map(col)) :+
-          col("pos") :+ xxhash64(col("word")).as("h"): _*)
 
   /** One row per DISTINCT n-gram shingle: (id, blockCols…, h3) where
     * h3 = xxhash64 over n consecutive word hashes (set-identical to
@@ -378,12 +364,6 @@ object Dedup {
         col("y.id").as("id_b"), col("y.sz").as("sz_b"))
       .distinct()
   }
-
-  /** LSH candidate pairs straight from documents. */
-  def minhashCandidates(
-      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    minhashCandidatesFromShingles(
-      minhashShingleRows(docs, idCol, textCol, n))
 
   /** Full MinHash-LSH near-dup pipeline: LSH candidates re-checked with
     * exact Jaccard (the standard verify step), computed relationally:

@@ -11,8 +11,8 @@ import graft.graph.PageRank
   */
 object Graph {
 
-  /** Supplier-node key offset (shared with dev tools so profiling
-    * always measures the same graph the query builds). */
+  /** Supplier-node key offset (shared with the oracle twins so both
+    * engines build the same graph). */
   val SuppOffset = 10000000L
 
   /** PageRank importance of every part and supplier after a fixed
@@ -28,16 +28,6 @@ object Graph {
         (col("l_suppkey") + SuppOffset).as("supp"))
       .repartition(s.sparkContext.defaultParallelism)
     PageRank.pagerank(edges, "part", "supp")
-      .orderBy(col("node"))
-  }
-
-  /** Single-job experimental shape (see PageRank.pagerankOneJob). */
-  def qGraphPagerankOneJob(s: SparkSession, d: String): DataFrame = {
-    val edges = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("part"),
-        (col("l_suppkey") + SuppOffset).as("supp"))
-      .repartition(s.sparkContext.defaultParallelism)
-    PageRank.pagerankOneJob(edges, "part", "supp")
       .orderBy(col("node"))
   }
 

@@ -16,10 +16,6 @@ object TextAnalysis {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: word-parts + digits + punctuation runs. */
-  def subwordCount(text: Column): Column =
-    size(split(text, "(?<=[a-z])(?=[A-Z])|\\s+|(?=[^\\w\\s])"))
-
   def charCount(text: Column): Column = length(text)
 
   /** Punctuation character ratio. */
@@ -36,11 +32,6 @@ object TextAnalysis {
     val sw = filter(toks, t => t.isInCollection(stopwords))
     size(sw).cast("double") / greatest(size(toks).cast("double"), lit(1.0))
   }
-
-  /** Mean token length — proxy for gibberish/boilerplate detection. */
-  def meanTokenLen(text: Column): Column =
-    (length(regexp_replace(text, "\\s+", ""))).cast("double") /
-      greatest(tokenCount(text).cast("double"), lit(1.0))
 
   /** Composite quality score in [0,1]: favors mid-length docs with low
     * punctuation density and a natural stopword rate. Deliberately

@@ -1,14 +1,17 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import graft.{Session, SparkEntry}
 
 /** Dev tool: snapshot formatted physical plans of representative
   * queries into PLANS.md — the .explain audit trail for the scale
   * posture claims in SURVEY.md §4 (broadcasts, pushdown, partition-
   * parallel windows, banded joins). Regenerate after plan-shape
-  * changes: `sbt "runMain graft.tools.ExplainDump"`. */
+  * changes: `sbt "runMain graft.tools.ExplainDump"`. With query names
+  * as arguments (`runMain graft.tools.ExplainDump q_tpch3 q_tpch5`, or
+  * one comma-separated list) it prints just those plans to stdout
+  * instead. Input dir from `SPARK_GRAFT_SF_DIR` (default sf0.001). */
 object ExplainDump {
 
   private val Show = Seq(
@@ -312,26 +315,27 @@ object ExplainDump {
       "(modality, ahash) — no window over the unbounded hash groups"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val named =
+      if (args.isEmpty) Nil else SparkEntry.select(Some(args.mkString(","))).map(_._1)
+    val spark = Session.local()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val out = new StringBuilder
-    out ++= "# PLANS — formatted physical plans of representative queries\n\n"
-    out ++= "Generated by `graft.tools.ExplainDump` (sf0.001, " +
-      "shuffle.partitions=4 for readability; plan SHAPES are what " +
-      "matters — row counts scale, shapes must not degrade).\n"
-    Show.foreach { case (name, note) =>
-      val plan = graft.SparkEntry.queries(name)(spark, sf)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      out ++= s"\n## $name — $note\n\n```\n$plan```\n"
+    def plan(name: String): String = SparkEntry.queries(name)(spark, sf)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    if (named.nonEmpty)
+      named.foreach(name => println(s"\n========== $name ==========\n${plan(name)}"))
+    else {
+      val out = new StringBuilder
+      out ++= "# PLANS — formatted physical plans of representative queries\n\n"
+      out ++= "Generated by `graft.tools.ExplainDump` (sf0.001, " +
+        s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
+        "for readability; plan SHAPES are what matters — row counts " +
+        "scale, shapes must not degrade).\n"
+      Show.foreach { case (name, note) =>
+        out ++= s"\n## $name — $note\n\n```\n${plan(name)}```\n"
+      }
+      Files.writeString(Paths.get("PLANS.md"), out.toString)
+      println(s"wrote PLANS.md (${Show.size} plans)")
     }
-    Files.writeString(Paths.get("PLANS.md"), out.toString)
-    println(s"wrote PLANS.md (${Show.size} plans)")
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Derive an N× dataset from an existing SF dir by KEY-OFFSET UNION —
   * the round-12 scaling-curve generator (VERDICT r11 item 1: measure
@@ -132,14 +132,7 @@ object ScaleGen {
     val out = args(1)
     val factor = args(2).toInt
     val skew = args.length > 3 && args(3) == "--skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Tables.all.foreach { t =>
       val df = replicate(spark, src, t, factor)
       (if (skew) skewify(t, df, SkewEvery) else df)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming-twin THROUGHPUT bench (round 13; VERDICT r12 item 5: the
@@ -33,15 +33,7 @@ object StreamBench {
     val sfDir = args(0)
     val outPath = args(1)
     val chunk = if (args.length > 2) args(2).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     // the feed: real corpus rows in event-time order, so watermarks

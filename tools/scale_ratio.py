@@ -1,7 +1,15 @@
 #!/usr/bin/env python3
-"""Build the SURVEY §6 scaling table from two ScaleBench JSON dumps.
+"""Build the SURVEY §6 scaling table from two `bench.json` files.
 
-Usage: python3 tools/scale_ratio.py /tmp/scale_sf01.json /tmp/scale_x10.json [factor]
+Each file is the record `graft.Bench` writes to `SPARK_GRAFT_BENCH_OUT`;
+only its "queries" map is read. Time the same query subset at the base
+dir and at a ScaleGen-derived dir, then compare:
+
+  SPARK_GRAFT_SF_DIR=<base> SPARK_GRAFT_BENCH_OUT=/tmp/base.json \
+    sbt "runMain graft.Bench q_tpch1,q_tpch3"
+  (the same with the derived dir and /tmp/big.json)
+  python3 tools/scale_ratio.py /tmp/base.json /tmp/big.json [factor]
+
 Prints a markdown table sorted by growth factor, flagging queries whose
 wall-time grows more than `factor * 1.3` (log-factor headroom over the
 data growth).
@@ -28,7 +36,7 @@ def main(base_path, big_path, factor=10.0, flag_mult=1.3):
         print(f"(not in the {factor:g}x subset: {', '.join(skipped)})\n")
     rows.sort(reverse=True)
     thresh = factor * flag_mult
-    print(f"| query | sf0.1 s | {factor:g}x s | growth | vs {factor:g}x data |")
+    print(f"| query | base s | {factor:g}x s | growth | vs {factor:g}x data |")
     print("|---|---|---|---|---|")
     n_flag = 0
     for r, q, b, g in rows:
