@@ -87,9 +87,9 @@ object Dedup {
     * hashes), and the per-doc array_distinct reproduces the old
     * row-level distinct exactly (ids are unique per document), so
     * every consumer's output is unchanged; each pipeline's plan
-    * loses one Exchange + Sort (plans/r14/). The two projections
-    * stay separate on purpose: `_hs` is referenced n times per
-    * shingle, so CollapseProject would otherwise inline (and
+    * loses one Exchange + Sort (plans/r14/ at commit b5c0a46). The two
+    * projections stay separate on purpose: `_hs` is referenced n times
+    * per shingle, so CollapseProject would otherwise inline (and
     * re-evaluate) the split+hash per reference. */
   def shingleRows(
       docs: DataFrame, idCol: String, textCol: String,
@@ -243,9 +243,9 @@ object Dedup {
     * paid a full Exchange + sort of every token row to look up
     * neighbors that are adjacent in the document's own word array;
     * this shape has no exchange at all before the signature
-    * aggregate (plans/r14/). Two projections on purpose — `_sh` is
-    * referenced twice, so CollapseProject would otherwise inline the
-    * split per reference. */
+    * aggregate (plans/r14/ at commit b5c0a46). Two projections on
+    * purpose — `_sh` is referenced twice, so CollapseProject would
+    * otherwise inline the split per reference. */
   def minhashShingleRows(
       docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     // the words array MUST be its own projection: embedded in the

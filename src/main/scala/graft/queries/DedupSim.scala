@@ -521,7 +521,10 @@ object DedupSim {
     * of n/16 with a constant cell count. Fully oracle-checked — the
     * md5-fraction centroid pick, the rounded argmax assignment, AND the
     * derived cell count (FLOOR(SQRT(COUNT(*)))) are engine-portable, so
-    * DuckDB rebuilds the identical index. */
+    * DuckDB rebuilds the identical index. The nested-loop joins in its
+    * plan are deliberate: each vector crosses the ONE broadcast row
+    * that packs all centroids (Similarity.packCentroids) and scores
+    * them in a per-row expression, so the cross is a linear scan. */
   def qAnnIvf(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     Similarity.ivfTopK(
@@ -541,7 +544,9 @@ object DedupSim {
     * exact re-rank (FAISS refine). Fully oracle-checked: the md5
     * codebook pick, the per-subspace argmin encode, the ADC sum, and
     * the refine cosine are all engine-portable arithmetic, so DuckDB
-    * rebuilds the identical compressed index end-to-end. */
+    * rebuilds the identical compressed index end-to-end. Its
+    * nested-loop joins cross the corpus with single broadcast rows
+    * (the packed centroids, the codebook), so they stay linear. */
   def qAnnIvfpq(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     Similarity.ivfPqTopK(
@@ -599,7 +604,10 @@ object DedupSim {
     * centroid). Fully oracle-checked: the quantized-BIGINT component
     * means make the refined centroids bit-identical across engines
     * (see Similarity.kmeansRefine), and the oracle SQL below unrolls
-    * the same two iterations from the same constants. */
+    * the same two iterations from the same constants. Each nearest-cell
+    * assignment is a nested-loop cross against ONE broadcast
+    * centroid-array row (Similarity.packCentroids) — linear in the
+    * corpus, no n·K candidate rows. */
   def qAnnKmeans(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     val cent = Similarity.kmeansRefine(
@@ -741,7 +749,9 @@ object DedupSim {
     * two XOR+popcount ops per candidate, no float math in the scan at
     * all. Ranks ascending (hamming, vec_id); fully oracle-checked —
     * the strict x > 0 sign test and the distinct powers of two are
-    * exact in both engines. */
+    * exact in both engines. The scan is a nested-loop cross of the
+    * packed corpus with the bounded, broadcast query set — linear in
+    * the corpus, as for q_ann_bruteforce. */
   def qEmbedBitsim(s: SparkSession, d: String): DataFrame = {
     val packed = embParallel(s, d).select(col("vec_id"),
       Similarity.signWord(col("embedding"), 0).as("w0"),

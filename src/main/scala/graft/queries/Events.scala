@@ -401,13 +401,14 @@ object Events {
     * triage). Deliberately written as the naive theta-join
     * `abs(e_ts − ts_us) <= radius` with NO equi key: Catalyst alone
     * would plan BroadcastNestedLoopJoin — O(|errors|·|events|) — and
-    * the registered BandedRangeJoinRule (plans/BandedRangeJoinRule)
+    * the registered BandedRangeJoinRule (graft.plans.BandedRangeJoinRule)
     * rewrites it into the exact banded equi-join (width-radius bins,
     * 3-bin left expansion, predicate re-checked), so the physical plan
     * is an ordinary shuffled join. This query is the end-to-end
-    * production use of the rule; PlanSpec asserts no nested-loop join
-    * survives. Self-pair excluded; errors with an empty neighborhood
-    * come back as zeros via the equi join-back. */
+    * production use of the rule; Round11OperatorsSpec ("error context:
+    * banded rewrite…") asserts no nested-loop join survives. Self-pair
+    * excluded; errors with an empty neighborhood come back as zeros
+    * via the equi join-back. */
   def qEventsErrorContext(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
@@ -620,7 +621,9 @@ object Events {
     * broadcast back in. Bucketing is pure epoch FLOOR arithmetic
     * (unix_micros − pmod, matching DuckDB's `//` floor division even
     * for pre-1970 timestamps), so both engines compute identical
-    * bucket keys. */
+    * bucket keys. The grid crosses the event-type dimension (a
+    * distinct() of a low-cardinality column, small by data contract):
+    * those are the nested-loop joins in its plan. */
   def qEventsGapfill(s: SparkSession, d: String): DataFrame = {
     val (dense, dayObs) = gridParts(s, d)
     val wDay = Window.partitionBy(col("event_type"), col("day"))

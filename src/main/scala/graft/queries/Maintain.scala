@@ -528,10 +528,13 @@ object Maintain {
     * .selectedPartitions — driver-side metadata, bounded by
     * |partitions|) and n_files_total from the unfiltered file index,
     * so the 6-of-30 answer is the scan's, not an assumption;
-    * PartitionPruneSpec additionally asserts the partitionFilters are
-    * present and the pruned listing shrank. At 100 TB the same
-    * predicate skips the same 80% of the table at the METADATA level —
-    * zero data tasks ever launch for pruned days. */
+    * Round12OperatorsSpec ("partition prune: …") additionally asserts
+    * the partitionFilters are present and the pruned listing shrank.
+    * At 100 TB the same predicate skips the same 80% of the table at
+    * the METADATA level — zero data tasks ever launch for pruned
+    * days. The scan's PushedFilters are empty for the same reason:
+    * the day predicate is a partition filter, resolved on the file
+    * listing, so nothing is left for the reader. */
   def qPartitionPrune(s: SparkSession, d: String): DataFrame = {
     val scratch = scratchDir("partition_prune", d)
     val ev = Tables.events(s, d)
@@ -745,7 +748,9 @@ object Maintain {
     * of writes would produce, synthesized reproducibly so both engines
     * build the identical pair: keys ≡ 0 (mod 89) are deleted, keys ≡ 0
     * (mod 97) get a price bump, and keys ≡ 0 (mod 101) are re-inserted
-    * shifted by 10⁷ (the "added" rows). */
+    * shifted by 10⁷ (the "added" rows). The diff's join is a
+    * sort-merge join on purpose: a full outer join is the one join
+    * type Spark cannot broadcast. */
   def qSnapshotDiff(s: SparkSession, d: String): DataFrame = {
     val rowHash =
       concat_ws("|", col("o_orderkey"), col("o_custkey"),

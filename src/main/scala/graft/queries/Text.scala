@@ -263,7 +263,8 @@ object Text {
     * copy; ADVICE r12 item 2). Mixture shares close on the
     * truncating integer-ppm grid with the numerator widened through
     * DECIMAL(38,0) (the q_pareto discipline — a 100 TB corpus's
-    * token count overflows ppm-scaled BIGINT). */
+    * token count overflows ppm-scaled BIGINT). The one nested-loop
+    * join is the cross with the provably 1-row broadcast totals. */
   def corpusCap(scored: DataFrame, cap: Int): DataFrame = {
     val topk = graft.operators.TopK.topk(cap)
     val ranked = scored.withColumn("rank_v",

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.plans.PlanShape
 import graft.sources.Bucketing
 
 /** Bucketed joins must not shuffle: the write-time hash partitioning
@@ -19,10 +20,10 @@ class BucketingSpec extends SparkSpec {
         sortCols = Seq("c_custkey"))
       val joined = Bucketing.bucketedJoin(
         spark, "b_orders", "b_customer", "o_custkey", "c_custkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"bucketed join should not shuffle:\n$plan")
+      val plan = PlanShape.of(joined)
+      assert(plan.joins.exists(_.strategy == "SMJ"), s"expected SMJ:\n${plan.json}")
+      assert(plan.exchanges.isEmpty && plan.broadcasts == 0 && plan.reused == 0,
+        s"bucketed join should not shuffle:\n${plan.json}")
       // and it still returns the right rows
       assert(joined.count() ==
         Tables.orders(spark, sf).join(
@@ -142,9 +143,9 @@ class BucketingSpec extends SparkSpec {
       val agg = spark.table("b_orders2")
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"))
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed aggregation should not shuffle:\n$plan")
+      val plan = PlanShape.of(agg)
+      assert(plan.exchanges.isEmpty && plan.broadcasts == 0 && plan.reused == 0,
+        s"bucketed aggregation should not shuffle:\n${plan.json}")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS b_orders2")

@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Cast, EqualNullSafe, EqualTo,
   SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.plans.PlanShape
 
 /** Global scale lint: every registered query's plan, swept for the
   * shapes that silently stop scaling — quadratic joins (cartesian /
@@ -15,6 +18,31 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * crossJoin or unpartitioned window fails here unless it is
   * explicitly reviewed onto an allowlist. */
 class PlanLintSpec extends SparkSpec {
+
+  /** Every registered query, built once in name order with its
+    * plans.jsonl line, for the sweeps below: a build runs the eager
+    * jobs of iterative queries, so rebuilding all of them per sweep
+    * repeated that work. The cache is cleared first and each plan is
+    * read right after its build, as ExplainDump does in a fresh
+    * session, because a query that caches a subplan changes the plans
+    * of the queries built after it. */
+  private var built: Seq[(String, DataFrame, String)] = _
+
+  private def registered: Seq[(String, DataFrame, String)] = {
+    if (built == null) {
+      spark.catalog.clearCache()
+      built = SparkEntry.select(None).map { case (name, q) =>
+        val df = q(spark, sf)
+        (name, df, PlanShape.line(name, df))
+      }
+    }
+    built
+  }
+
+  override def afterAll(): Unit = {
+    built = null
+    super.afterAll()
+  }
 
   /** A join side this small is broadcast-trivial at any scale: 1-row
     * bounds/count aggregates, a LIMITed centroid pick, etc. */
@@ -147,8 +175,8 @@ class PlanLintSpec extends SparkSpec {
 
   test("no registered plan hides a quadratic join or unpartitioned window") {
     val offences = Seq.newBuilder[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val qe = fn(spark, sf).queryExecution
+    for ((name, df, _) <- registered) {
+      val qe = df.queryExecution
       qe.optimizedPlan.foreach {
         case j: Join =>
           // a join is quadratic-shaped when it has no equality
@@ -175,7 +203,7 @@ class PlanLintSpec extends SparkSpec {
         case _ =>
       }
       // CartesianProduct never survives review outside the parity query
-      if (qe.executedPlan.toString.contains("CartesianProduct")
+      if (PlanShape.of(df).joins.exists(_.strategy == "Cartesian")
           && name != "q_cross_join")
         offences += s"$name: CartesianProduct in the physical plan"
     }
@@ -248,8 +276,8 @@ class PlanLintSpec extends SparkSpec {
     assert(offendingWindows(bad.queryExecution.optimizedPlan).nonEmpty,
       "hash-key rank-window detector is blind")
     val offences = for {
-      (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-      w <- offendingWindows(fn(spark, sf).queryExecution.optimizedPlan)
+      (name, df, _) <- registered
+      w <- offendingWindows(df.queryExecution.optimizedPlan)
     } yield s"$name: sorted window partitioned by a content-hash key " +
       s"(${w.partitionSpec.mkString(", ")})"
     assert(offences.isEmpty,
@@ -266,8 +294,8 @@ class PlanLintSpec extends SparkSpec {
     // STRING (q_table_fingerprint's exact-128-bit form). Schema-only
     // analysis: nothing executes here.
     val offences = for {
-      (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-      f <- fn(spark, sf).schema.fields
+      (name, df, _) <- registered
+      f <- df.schema.fields
       if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
     } yield s"$name: ${f.name} is ${f.dataType}"
     assert(offences.isEmpty,
@@ -295,5 +323,18 @@ class PlanLintSpec extends SparkSpec {
     spark.conf.set(key, graft.plans.ExactDecimalRule.ruleName)
     try names.foreach(n => assert(bigDecimalPath(plan(n)).nonEmpty, s"$n without the rule"))
     finally spark.conf.unset(key)
+  }
+
+  test("plans.jsonl holds every registered query's current plan shape") {
+    // the committed record of every plan: a plan change fails here
+    // until the file is regenerated, so it shows up as a one-line diff
+    import scala.jdk.CollectionConverters._
+    val committed = Files.readAllLines(Paths.get("plans.jsonl")).asScala.toSeq
+    val current = registered.map(_._3)
+    val changed = (committed.diff(current) ++ current.diff(committed))
+      .map(_.stripPrefix("{\"query\":\"").takeWhile(_ != '"')).distinct.sorted
+    if (committed != current)
+      fail(s"plans.jsonl differs for ${changed.size} queries: ${changed.mkString(", ")}; " +
+        "regenerate it with `sbt \"runMain graft.tools.ExplainDump\"` and review the diff")
   }
 }

@@ -224,9 +224,9 @@ class Round7OperatorsSpec extends SparkSpec {
     assert(out.select("doc_id").except(again.select("doc_id")).count() == 0)
     assert(again.select("doc_id").except(out.select("doc_id")).count() == 0)
     // no shuffle in the membership filter (scan -> filter -> sort only)
-    val p = out.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"weighted sampling must not shuffle:\n$p")
+    val p = graft.plans.PlanShape.of(out)
+    assert(!p.exchanges.exists(_.kind == "hash"),
+      s"weighted sampling must not shuffle:\n${p.json}")
     out.unpersist()
   }
 

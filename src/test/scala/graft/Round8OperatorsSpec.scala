@@ -167,9 +167,9 @@ class Round8OperatorsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(salted == plain, "salting changed the join result")
     // the physical join key must carry the salt (that IS the operator)
-    val p = graft.queries.Relational.qSkewJoin(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("_salt"), s"salt not in the join keys:\n$p")
+    val p = graft.plans.PlanShape.of(graft.queries.Relational.qSkewJoin(spark, sf))
+    assert(p.joins.exists(j => (j.leftKeys ++ j.rightKeys).contains("_salt")),
+      s"salt not in the join keys:\n${p.json}")
   }
 
   test("pca projection: one score per vector, bounded by the vector norms") {
@@ -249,18 +249,22 @@ class Round8OperatorsSpec extends SparkSpec {
     // test SFs are far below the threshold — the registered queries
     // must take the value-exact branch (what the oracle gate hashes)
     assert(ScaleRouting.exactPercentileOk(spark, s"$sf/lineitem.parquet"))
-    def planOf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.toString
-    val exactPlan = planOf(graft.queries.Agg.qAggMedianMode(spark, sf))
-    assert(exactPlan.contains("percentile(")
-      && !exactPlan.contains("approx_percentile"),
-      s"registered median not on the exact branch:\n$exactPlan")
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Percentile}
+    // the percentile aggregates of the optimized plan, by kind
+    def percentiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case _: Percentile => "percentile"
+        case _: ApproximatePercentile => "approx_percentile"
+      })).toSet
+    val exactPlan = percentiles(graft.queries.Agg.qAggMedianMode(spark, sf))
+    assert(exactPlan == Set("percentile"),
+      s"registered median not on the exact branch: $exactPlan")
     // the scale branch is a REAL plan: forced approx swaps the
     // bounded-memory sketch into both queries
-    val approxPlan = planOf(graft.queries.Agg.aggMedianMode(spark, sf, exact = false))
+    val approxPlan = percentiles(graft.queries.Agg.aggMedianMode(spark, sf, exact = false))
     assert(approxPlan.contains("approx_percentile"),
-      s"approx branch missing the sketch:\n$approxPlan")
-    assert(planOf(graft.queries.Text.textQuantiles(spark, sf, exact = false))
+      s"approx branch missing the sketch: $approxPlan")
+    assert(percentiles(graft.queries.Text.textQuantiles(spark, sf, exact = false))
       .contains("approx_percentile"))
     // sketch accuracy is a RANK bound (the sketch returns observed
     // values, not interpolations — value distance is meaningless in a

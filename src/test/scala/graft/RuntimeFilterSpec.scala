@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.functions._
+import graft.plans.PlanShape
 
 /** Spark's runtime bloom-filter join pruning — the shuffle-reduction
   * lever for selective fact⋈dim joins at 100 TB: the selective side's
@@ -11,6 +14,10 @@ import org.apache.spark.sql.functions._
   * at test scale — this spec lowers the gate to prove the plan shape
   * our scans get at real scale, and that results are unchanged. */
 class RuntimeFilterSpec extends SparkSpec {
+
+  private def mightContain(df: DataFrame): Boolean =
+    PlanShape.nodes(df.queryExecution.executedPlan)
+      .exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomFilterMightContain])))
 
   test("a selective join injects a bloom filter on the fact side at scale thresholds") {
     val conf = spark.conf
@@ -31,9 +38,8 @@ class RuntimeFilterSpec extends SparkSpec {
       val j = li.join(sel, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("might_contain"),
-        s"no bloom filter injected:\n${plan.take(2000)}")
+      assert(mightContain(j),
+        s"no bloom filter injected:\n${PlanShape.of(j).json}")
       val withBloom = j.collect()
 
       // same query with the filter disabled → identical result
@@ -41,8 +47,7 @@ class RuntimeFilterSpec extends SparkSpec {
       val without = li.join(sel, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))
-      assert(!without.queryExecution.executedPlan.toString
-        .contains("might_contain"))
+      assert(!mightContain(without))
       assert(withBloom.sameElements(without.collect()))
     } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }

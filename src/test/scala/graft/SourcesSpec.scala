@@ -34,10 +34,11 @@ class SourcesSpec extends SparkSpec {
     val o = Sources.readOrc(spark, s"$dir/o")
     assert(o.count() == src.count())
     assert(o.columns.toSet == src.columns.toSet)
-    val plan = o.where(org.apache.spark.sql.functions.col("n_nationkey") > 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(n_nationkey)"),
-      s"ORC scan did not receive pushed filters:\n$plan")
+    val plan = graft.plans.PlanShape.of(
+      o.where(org.apache.spark.sql.functions.col("n_nationkey") > 5))
+    assert(plan.scans.map(_.pushed) ==
+      Seq(Seq("GreaterThan(n_nationkey,5)", "IsNotNull(n_nationkey)")),
+      s"ORC scan did not receive pushed filters:\n${plan.json}")
   }
 
   test("partitioned parquet write enables partition pruning") {
@@ -46,9 +47,10 @@ class SourcesSpec extends SparkSpec {
       partitionBy = Seq("n_regionkey"))
     val pruned = Sources.readParquet(spark, s"$dir/p")
       .where(org.apache.spark.sql.functions.col("n_regionkey") === 1)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(n_regionkey"),
-      s"no partition pruning:\n$plan")
+    val plan = graft.plans.PlanShape.of(pruned)
+    assert(plan.scans.map(_.partitionFilters) ==
+      Seq(Seq("(n_regionkey = 1)", "(n_regionkey IS NOT NULL)")),
+      s"no partition pruning:\n${plan.json}")
   }
 
   test("size-targeted write picks a data-proportional file count") {

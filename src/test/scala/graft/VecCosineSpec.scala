@@ -26,11 +26,9 @@ class VecCosineSpec extends SparkSpec {
 
   test("vec_cosine participates in whole-stage codegen") {
     val emb = Tables.embeddings(spark, sf)
-    val p = emb.select(call_function("vec_cosine", col("embedding"), col("embedding")))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    assert(p.contains("WholeStageCodegen"))
-    assert(!p.contains("Found 0 WholeStageCodegen"), s"no codegen subtree:\n$p")
+    val p = graft.plans.PlanShape.of(
+      emb.select(call_function("vec_cosine", col("embedding"), col("embedding"))))
+    assert(p.codegenStages > 0, s"no codegen subtree:\n${p.json}")
   }
 
   test("native vec_lsh signature equals the portable formula") {
