@@ -23,8 +23,8 @@ object Bench {
           System.err.println(s"[bench] warmup $q failed: ${e.getMessage}")
         }
       }
-    // release whatever a query pinned (dedup pipelines cache shingle
-    // tables; CC loops leave localCheckpoint RDDs) and force a full GC
+    // release the checkpoint blocks a query's build left (iterative
+    // operators and shared subplans materialize) and force a full GC
     // so the next query's timing doesn't pay this one's garbage — the
     // r2 bench showed a 2-5× band on untouched queries that ran right
     // after the heavy tail, which made real regressions undiagnosable

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Connected components over a near-duplicate pair list — the final
   * step of every corpus dedup pipeline: candidate PAIRS (from MinHash /
@@ -42,29 +43,25 @@ object Cluster {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    // both directions once; reused by every round. Round 15 (guide
-    // §2.4): ONE explode scans the pair plan once (the union-of-two-
-    // projections form ran the full upstream pair pipeline twice when
-    // the caller had not checkpointed it), the dedup rides the same
-    // hash(src) exchange (subset rule — hash(src) clusters (src, dst)),
-    // and the checkpoint CARRIES that partitioning so every round's
-    // edge-side join needs no exchange and no sort (the r14 lpaLabels
-    // pattern).
-    val edges = pairs
+    // both directions once; reused by every round. ONE explode scans
+    // the pair plan once (the union-of-two-projections form ran the
+    // full upstream pair pipeline twice when the caller had not
+    // checkpointed it), and the dedup rides the hash(src) exchange
+    // (subset rule — hash(src) clusters (src, dst)).
+    val edges = Materialize(pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("ed"))
       .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
       .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint()
+      .dropDuplicates("src", "dst"))
 
     // one propagation round: each vertex takes min(label, neighbors')
     // and carries a change flag, so convergence folds into the pass.
-    // The label side is the SHUFFLE_HASH build (|V| rows, bounded per
-    // partition) so the edge side streams off its checkpointed layout;
-    // nbrMin likewise builds against the streamed labels — no
-    // sort-merge sorts anywhere in a round.
+    // The label side is the SHUFFLE_HASH build (|V| rows): the second
+    // round's labels are estimated from the edge join, so unhinted the
+    // planner can broadcast the edge list instead. nbrMin (|V| rows)
+    // builds against the labels, so no round pays a sort-merge sort.
     def propagate(labels: DataFrame): DataFrame = {
       val nbrMin = edges
         .join(labels.hint("shuffle_hash"), edges("src") === labels("id"))
@@ -82,12 +79,10 @@ object Cluster {
     // fused round 0: initialize each vertex straight to
     // min(id, min neighbor) — one aggregation instead of an identity
     // init plus a full propagation round (cliques converge immediately).
-    // Grouped by SRC (≡ by dst on the symmetric list), so the aggregate
-    // reads the checkpointed hash(src) layout with no exchange at all.
-    var labels = edges.groupBy(col("src").as("id"))
+    // Grouped by SRC (≡ by dst on the symmetric list).
+    var labels = Materialize(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("_m"))
-      .select(col("id"), least(col("id"), col("_m")).as("label"))
-      .localCheckpoint()
+      .select(col("id"), least(col("id"), col("_m")).as("label")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -97,7 +92,7 @@ object Cluster {
       // Dedup graphs are diameter-≤2 cliques (init already reaches
       // distance 1), so the common case is ONE count() job total —
       // half the per-round driver/job overhead of check-every-round.
-      val next = propagate(propagate(labels).drop("_chg")).localCheckpoint()
+      val next = Materialize(propagate(propagate(labels).drop("_chg")))
       val changed = next.where(col("_chg")).limit(1).count()
       labels = next.drop("_chg")
       converged = changed == 0
@@ -141,8 +136,8 @@ object Cluster {
       existing: DataFrame, newPairs: DataFrame,
       aCol: String, bCol: String, maxIter: Int = 20): DataFrame = {
     val rep = existing.select(col("id").as("_v"), col("cluster_id").as("_r"))
-    val e = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
-      .localCheckpoint() // feeds the collapse AND the new-vertex scan
+    // feeds the collapse AND the new-vertex scan
+    val e = Materialize(newPairs.select(col(aCol).as("_a"), col(bCol).as("_b")))
     val collapsed = e
       .join(rep.select(col("_v").as("_a"), col("_r").as("_ra")),
         Seq("_a"), "left")
@@ -189,17 +184,15 @@ object Cluster {
   def connectedComponentsStar(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30): DataFrame = {
-    val vertices = pairs.select(col(aCol).as("id"))
+    val vertices = Materialize(pairs.select(col(aCol).as("id"))
       .union(pairs.select(col(bCol).as("id")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // oriented big→small, self-loops dropped
-    var edges = pairs
+    var edges = Materialize(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var edgeCount = edges.count()
 
     // m = min over the undirected neighborhood of each center (incl u)
@@ -219,13 +212,12 @@ object Cluster {
       // ---- small-star (input already oriented big→small) ----
       val ss0 = ls
       val sm = centerMin(ss0)
-      val next = ss0.join(sm, "u")
+      val next = Materialize(ss0.join(sm, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(ss0.select(col("u"), col("v")).join(sm, "u")
           .select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       // convergence: the edge multiset is stable (next ⊆ prev by
       // anti-join emptiness + equal counts ⇒ sets equal). Edge counts
       // are non-increasing, so the count also tracks the shrinkage.

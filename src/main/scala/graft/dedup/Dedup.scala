@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Deduplication operators for LLM training-data pipelines
   * (SURVEY.md §2, dedup block). None of these are in the reference —
@@ -185,8 +186,8 @@ object Dedup {
       .agg(count(lit(1)).as("_df"))
       .where(col("_df") <= dfCap)
       .select(dfKey.map(col): _*)
-    // cached: feeds the size aggregate and both join sides
-    val capped = shRows.join(keep, dfKey).cache()
+    // materialized once: feeds the size aggregate and both join sides
+    val capped = Materialize(shRows.join(keep, dfKey))
     // per-doc shingle counts as an aggregate + join, NOT a window over
     // the full shingle table: the aggregate is map-side partial and
     // produces one row per doc, which AQE then broadcasts — vs a
@@ -370,13 +371,12 @@ object Dedup {
     * join the candidate pairs back to the shingle rows of both sides
     * and count matches. The shingle table feeds two consumers
     * (signatures+sizes in one aggregate, intersection counts), so it
-    * is cached for the duration — at corpus scale this is the
-    * persist(DISK) checkpoint every MinHash pipeline materializes
-    * anyway. */
+    * is materialized once — at corpus scale this is the checkpoint
+    * every MinHash pipeline materializes anyway. */
   def minhashDedup(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
-    val sh = minhashShingleRows(docs, idCol, textCol, n).cache()
+    val sh = Materialize(minhashShingleRows(docs, idCol, textCol, n))
     minhashCandidatesFromShingles(sh)
       .join(sh.select(col("id").as("id_a"), col("s_id").as("ha")), "id_a")
       .join(sh.select(col("id").as("idb2"), col("s_id").as("hb")),

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed PageRank over an edge list — the web-graph importance
   * signal corpus-curation pipelines use to weight crawl documents
@@ -127,7 +128,7 @@ object PageRank {
       .dropDuplicates("src", "dst")
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("sdeg"))
     // degree-enriched edges, materialized once for the iterations
-    val e = sym.join(deg, "src").localCheckpoint()
+    val e = Materialize(sym.join(deg, "src"))
     val nodes = e.groupBy(col("src")).agg(first(col("sdeg")).as("deg"))
       .select(col("src").as("node"), col("deg"))
     val nn = e.agg(countDistinct(col("src")).as("n"))

@@ -114,9 +114,11 @@ object PlanShape {
     case p => p +: (p.children ++ p.subqueries).flatMap(nodes)
   }
 
-  /** `{"query":…,"plan":…}`, the line plans.jsonl holds per query. */
-  def line(query: String, df: DataFrame): String =
-    s"""{"query":${js(query)},"plan":${of(df).json}}"""
+  /** `{"query":…,"plan":…,"materialized":[…]}`, the line plans.jsonl
+    * holds per query: its plan and, in build order, the plans its build
+    * materialized (see graft.Materialize.recording). */
+  def line(query: String, df: DataFrame, materialized: Seq[PlanShape]): String =
+    s"""{"query":${js(query)},"plan":${of(df).json},"materialized":${js(materialized)}}"""
 
   private def pretty(e: Expression): String = toPrettySQL(e)
 

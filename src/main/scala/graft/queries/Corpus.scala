@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize
 
 /** Corpus-preparation operators beyond the curation/dedup blocks
   * (SURVEY.md §2, LLM-pipeline): retrieval chunking and the chunk
@@ -124,10 +125,9 @@ object Corpus {
     // The vocab table feeds all 4 sketch rows AND the candidate probes
     // (8 plan branches); checkpoint it once so the corpus tokenize+count
     // runs once (the q_minhash_recall shared-backbone pattern).
-    val vocab = docs(s, d).select(
+    val vocab = Materialize(docs(s, d).select(
         explode(split(lower(col("text")), "\\s+")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val sketch = graft.operators.CountMin.sketch(vocab, "tok", "c")
     val cand = vocab.orderBy(col("c").desc, col("tok")).limit(20)
     val probes = (0 until CmsDepth).map { j =>
@@ -327,13 +327,11 @@ object Corpus {
     // count) and the eval shingles two (bits, exact) — checkpoint each
     // once so the window-based shingle build runs once per side (the
     // q_minhash_recall shared-backbone pattern; 3.9 s → ~1.6 s at sf0.1)
-    val trainSh = Dedup.minhashShingleRows(
-      docsAll.where(col("source") =!= "src0"), "doc_id", "text", n = 5)
-      .localCheckpoint()
-    val evalSh = Dedup.minhashShingleRows(
+    val trainSh = Materialize(Dedup.minhashShingleRows(
+      docsAll.where(col("source") =!= "src0"), "doc_id", "text", n = 5))
+    val evalSh = Materialize(Dedup.minhashShingleRows(
       docsAll.where(col("source") === "src0"), "doc_id", "text", n = 5)
-      .select(col("s_id")).distinct()
-      .localCheckpoint()
+      .select(col("s_id")).distinct())
     // bit position of shingle id under hash function j
     def bitpos(j: Int) =
       conv(substring(md5(concat(lit(s"$j:"), col("s_id").cast("string"))),

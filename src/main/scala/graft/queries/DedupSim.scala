@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.similarity.Similarity
+import graft.Materialize
 
 /** Dedup + similarity-search queries (SURVEY.md §2, LLM-pipeline block).
   *
@@ -120,12 +121,11 @@ object DedupSim {
     * split by endpoint source. */
   def qDedupClusterIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = docsParallel(s, d)
-    val allPairs = Dedup.ngramJaccardPairs(
+    val allPairs = Materialize(Dedup.ngramJaccardPairs(
       docs, "doc_id", "text",
-      blockCols = Seq("lang"), n = 3, threshold = 0.3)
-      .localCheckpoint()
-    val batchIds = docs.where(col("source") === "src0")
-      .select(col("doc_id")).localCheckpoint()
+      blockCols = Seq("lang"), n = 3, threshold = 0.3))
+    val batchIds = Materialize(docs.where(col("source") === "src0")
+      .select(col("doc_id")))
     val oldPairs = allPairs
       .join(batchIds.select(col("doc_id").as("id_a")), Seq("id_a"),
         "left_anti")
@@ -182,9 +182,9 @@ object DedupSim {
     val cos = Similarity.cosineIn(s) _
     val cent = Similarity.kmeansRefine(
       emb, k = derivedCells(s, d), iters = 1, cosineFn = cos)
-    val asg = Similarity.ivfAssign(emb, cent, "vec_id", "embedding", 1, cos)
-      .select(col("vec_id"), col("embedding"), col("cell_id"))
-      .localCheckpoint() // feeds both pair sides and the verdict rollup
+    // feeds both pair sides and the verdict rollup
+    val asg = Materialize(Similarity.ivfAssign(emb, cent, "vec_id", "embedding", 1, cos)
+      .select(col("vec_id"), col("embedding"), col("cell_id")))
     val v = asg.select(col("vec_id").as("id"), col("embedding").as("v"),
       col("cell_id"))
     val nbrs = v.as("x").join(v.as("y"),
@@ -220,10 +220,9 @@ object DedupSim {
     // keeping the checkpoint measured faster here — the CC edge job
     // otherwise re-plans the whole shingle-index join inside its own
     // eager materialization (tried without: 5.75 → 6.46 s; kept)
-    val pairs = Dedup.ngramJaccardPairs(
+    val pairs = Materialize(Dedup.ngramJaccardPairs(
       docs, "doc_id", "text",
-      blockCols = Seq("lang", "source"), n = 3, threshold = 0.3)
-      .localCheckpoint()
+      blockCols = Seq("lang", "source"), n = 3, threshold = 0.3))
     val cl = graft.dedup.Cluster.connectedComponents(pairs, "id_a", "id_b")
       .select(col("id").as("doc_id"), col("cluster_id"))
     val scored = docs.select(col("doc_id"))
@@ -324,8 +323,8 @@ object DedupSim {
     * jaccard 0.0 instead of vanishing. One checkpointed shingle
     * backbone feeds signatures, candidates, and the verify join. */
   def qMinhashEstimate(s: SparkSession, d: String): DataFrame = {
-    val sh = Dedup.minhashShingleRows(
-      docsParallel(s, d), "doc_id", "text", 3).localCheckpoint()
+    val sh = Materialize(Dedup.minhashShingleRows(
+      docsParallel(s, d), "doc_id", "text", 3))
     val sigArr = Dedup.minhashSigTable(sh)
       .select(col("id"),
         array((0 until Dedup.NumHashes).map(i => col(s"m$i")): _*).as("ms"))
@@ -680,16 +679,14 @@ object DedupSim {
   def qIvfDedupRecall(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val v = embParallel(s, d).select(col("vec_id"), col("embedding"))
-    val truth = v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
+    val truth = Materialize(v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
       .where(round(Similarity.cosineIn(s)(col("x.embedding"),
         col("y.embedding")), 6) >= 0.4)
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-      .localCheckpoint()
-    val approx = qDedupEmbeddingIvf(s, d)
+      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b")))
+    val approx = Materialize(qDedupEmbeddingIvf(s, d)
       .select(lit("probe1").as("method"), col("id_a"), col("id_b"))
       .unionByName(qDedupEmbeddingIvf2(s, d)
-        .select(lit("probe2").as("method"), col("id_a"), col("id_b")))
-      .localCheckpoint()
+        .select(lit("probe2").as("method"), col("id_a"), col("id_b"))))
     val nPairs = approx.groupBy(col("method"))
       .agg(count(lit(1)).as("n_pairs"))
     val hits = approx.join(truth, Seq("id_a", "id_b"), "left_semi")
@@ -795,8 +792,7 @@ object DedupSim {
   def qEmbedMrl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = embParallel(s, d)
-    val truth = qAnnBruteforce(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+    val truth = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val runs = MrlDims.map { dd =>
       val sl = emb.select(col("vec_id"),
         slice(col("embedding"), 1, dd).as("embedding"))
@@ -887,10 +883,8 @@ object DedupSim {
     // count); localCheckpoint materializes each once instead of
     // re-running the full dedup pipelines per consumer — same oracle
     // hash, roughly half the wall time
-    val truth = qDedupNgramJaccard(s, d).select(col("id_a"), col("id_b"))
-      .localCheckpoint()
-    val mh = qDedupMinhash(s, d).select(col("id_a"), col("id_b"))
-      .localCheckpoint()
+    val truth = Materialize(qDedupNgramJaccard(s, d).select(col("id_a"), col("id_b")))
+    val mh = Materialize(qDedupMinhash(s, d).select(col("id_a"), col("id_b")))
     val hit = truth.join(mh, Seq("id_a", "id_b"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
     val t = truth.agg(count(lit(1)).as("n_truth"))
@@ -926,11 +920,9 @@ object DedupSim {
     * three. All pairwise work stays inside LSH buckets; the truth
     * subplan is the registered q_dedup_ngram_jaccard verbatim. */
   def qMinhashBandSweep(s: SparkSession, d: String): DataFrame = {
-    val sh = Dedup.minhashShingleRows(docsParallel(s, d), "doc_id", "text", 3)
-      .localCheckpoint()
-    val sig = Dedup.minhashSigTable(sh).localCheckpoint()
-    val truth = qDedupNgramJaccard(s, d).select(col("id_a"), col("id_b"))
-      .localCheckpoint()
+    val sh = Materialize(Dedup.minhashShingleRows(docsParallel(s, d), "doc_id", "text", 3))
+    val sig = Materialize(Dedup.minhashSigTable(sh))
+    val truth = Materialize(qDedupNgramJaccard(s, d).select(col("id_a"), col("id_b")))
     // round 15 (guide §2.4): ONE self-join over the union of all three
     // geometries' band tables, keyed on (rows_per_band, band, bucket),
     // instead of one exchange + join + distinct PER geometry — the
@@ -940,7 +932,7 @@ object DedupSim {
     val bandsAll = BandSweepRows.map { r =>
       Dedup.minhashBandsOfSig(sig, r).withColumn("rows_per_band", lit(r))
     }.reduce(_ unionByName _)
-    val candU = bandsAll.as("x").join(bandsAll.as("y"),
+    val candU = Materialize(bandsAll.as("x").join(bandsAll.as("y"),
         col("x.rows_per_band") === col("y.rows_per_band") &&
         col("x.band") === col("y.band") &&
         col("x.bucket") === col("y.bucket") &&
@@ -950,11 +942,10 @@ object DedupSim {
         col("x.sz").as("sz_a"), col("y.sz").as("sz_b"))
       .distinct()
       .withColumn("n_bands",
-        expr(s"${Dedup.NumHashes} div rows_per_band").cast("int"))
-      .localCheckpoint()
+        expr(s"${Dedup.NumHashes} div rows_per_band").cast("int")))
     // one exact-Jaccard verify over the DISTINCT pair union (uncapped
     // shingle sets — the minhash verify step, same as minhashDedup)
-    val ver = candU.select("id_a", "id_b", "sz_a", "sz_b").distinct()
+    val ver = Materialize(candU.select("id_a", "id_b", "sz_a", "sz_b").distinct()
       .join(sh.select(col("id").as("id_a"), col("s_id").as("ha")), "id_a")
       .join(sh.select(col("id").as("idb2"), col("s_id").as("hb")),
         col("id_b") === col("idb2") && col("ha") === col("hb"))
@@ -963,8 +954,7 @@ object DedupSim {
       .where(round(col("n_inter").cast("double") /
         greatest((col("sz_a") + col("sz_b") - col("n_inter")).cast("double"),
           lit(1.0)), 6) >= 0.3)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint()
+      .select(col("id_a"), col("id_b")))
     val perCand = candU.groupBy(col("rows_per_band"), col("n_bands"))
       .agg(count(lit(1)).as("n_candidates"))
     val perVer = candU.join(ver, Seq("id_a", "id_b"))
@@ -1022,8 +1012,7 @@ object DedupSim {
     // assignment pass dominates and ivfPqTopKFromAssign accepts a
     // persisted assignment — the sharing seam exists; the bench keeps
     // the measured-faster shape.)
-    val cents = Similarity.ivfCentroids(emb, derivedCells(s, d))
-      .localCheckpoint()
+    val cents = Materialize(Similarity.ivfCentroids(emb, derivedCells(s, d)))
     val asgIvf = Similarity.ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
     val asgPq = Similarity.ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
     val ivf = Similarity.ivfTopKFromIndex(queries,
@@ -1047,8 +1036,7 @@ object DedupSim {
   def qAnnRecall(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // checkpointed: the truth feeds both the semi-join and the totals
-    val bf = qAnnBruteforce(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+    val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val approx = annApproxRanked(s, d).drop("rk")
     val hits = approx.join(bf, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("method")).agg(count(lit(1)).as("nhit"))
@@ -1090,8 +1078,7 @@ object DedupSim {
     * exact. Misses score zero via the static (method × query) grid. */
   def qAnnRankMetrics(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val bf = qAnnBruteforce(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+    val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val approx = annApproxRanked(s, d)
     val dArr = array(NdcgDiscountPpb.map(lit): _*)
     val perQ = approx.join(bf, Seq("query_id", "vec_id"), "left_semi")
@@ -1157,13 +1144,11 @@ object DedupSim {
         col("probe_rk"), col("cell_id"))
     // candidate scores computed ONCE for the deepest probe set; every
     // shallower depth is a probe_rk filter over this table
-    val cand = probes.join(cells, "cell_id")
+    val cand = Materialize(probes.join(cells, "cell_id")
       .where(col("query_id") =!= col("vec_id"))
       .withColumn("sim", round(cos(col("qv"), col("cv")), 6))
-      .select(col("query_id"), col("vec_id"), col("probe_rk"), col("sim"))
-      .localCheckpoint()
-    val bf = qAnnBruteforce(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+      .select(col("query_id"), col("vec_id"), col("probe_rk"), col("sim")))
+    val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val pdim = ProbeSweepDepths.toDF("nprobe")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("nprobe"), col("query_id"))
@@ -1215,14 +1200,13 @@ object DedupSim {
       queries, cents, "vec_id", "embedding", ProbeSweepDepths.max, cos)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("probe_rk"), col("cell_id"))
-    val adc = probes.join(index, "cell_id")
+    val adc = Materialize(probes.join(index, "cell_id")
       .where(col("query_id") =!= col("vec_id"))
       .crossJoin(broadcast(cbRow))
       .withColumn("adist_e6",
         Similarity.pqAdcE6(col("qv"), col("codes"), col("_cw")))
       .select(col("query_id"), col("qv"), col("vec_id"), col("probe_rk"),
-        col("adist_e6"))
-      .localCheckpoint()
+        col("adist_e6")))
     val pdim = ProbeSweepDepths.toDF("nprobe")
     val wAdc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("nprobe"), col("query_id"))
@@ -1240,8 +1224,7 @@ object DedupSim {
       .withColumn("sim", round(cos(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(wSim))
       .where(col("rk") <= 5)
-    val bf = qAnnBruteforce(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+    val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val hits = topk.join(bf, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("nprobe")).agg(count(lit(1)).as("nhit"))
     val tot = bf.agg(countDistinct(col("query_id")).as("n_queries"),
@@ -1272,14 +1255,13 @@ object DedupSim {
     * no n·k candidate rows); n_cells_used exposes empty-cell collapse
     * at small k. */
   def qAnnKmeansElbow(s: SparkSession, d: String): DataFrame = {
-    val emb = embParallel(s, d).localCheckpoint()
+    val emb = Materialize(embParallel(s, d))
     // round 15: ONE corpus top-k pick seeds every ladder point —
     // ivfCentroids orders by (md5-fraction, id), so its k smallest
     // rows for k ≤ max(KmeansElbowKs) ARE ivfCentroids(emb, k)
     // (identical cell_ids, identical vectors); each chain's refinement
     // is unchanged via kmeansRefineFrom.
-    val seedsMax = Similarity.ivfCentroids(emb, KmeansElbowKs.max)
-      .localCheckpoint()
+    val seedsMax = Materialize(Similarity.ivfCentroids(emb, KmeansElbowKs.max))
     KmeansElbowKs.map { k =>
       val cent = Similarity.kmeansRefineFrom(
         seedsMax.where(col("cell_id") <= k), emb, iters = KmeansIters,
@@ -1447,10 +1429,9 @@ object DedupSim {
     * eigenvector sign. */
   def qEmbedPca(s: SparkSession, d: String): DataFrame = {
     val cov = qEmbedCovariance(s, d)
-    val full = cov.union(
+    val full = Materialize(cov.union(
       cov.where(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov")))
-      .localCheckpoint()
+        .select(col("j").as("i"), col("i").as("j"), col("cov"))))
     def snap(c: Column, p: Int): Column = round(c, p).cast(s"decimal(28,$p)")
     var v = full.select(col("i")).distinct()
       .select(col("i").as("idx"), lit(0.125).cast("decimal(28,12)").as("v"))

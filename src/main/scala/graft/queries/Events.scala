@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize
 
 /** Event / time-series queries (SURVEY.md §2 events block).
   *
@@ -1068,12 +1069,11 @@ object Events {
   private def hourlyDense(s: SparkSession, d: String): DataFrame = {
     val hourUs = 3600000000L
     val dayUs = 86400000000L
-    val perHour = Tables.events(s, d)
+    val perHour = Materialize(Tables.events(s, d)
       .select((expr("unix_micros(ts)") - pmod(expr("unix_micros(ts)"),
         lit(hourUs))).as("b"), col("event_type"))
       .groupBy(col("event_type"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val days = perHour.agg(min(col("b")).as("lo"), max(col("b")).as("hi"))
       .select(explode(sequence(col("lo") - pmod(col("lo"), lit(dayUs)),
         col("hi"), lit(dayUs))).as("day"), col("lo"), col("hi"))
@@ -1101,7 +1101,7 @@ object Events {
     * IEEE sequence at 6 dp. Output is |types|²·7 rows. */
   def qEventsXcorr(s: SparkSession, d: String): DataFrame = {
     val hourUs = 3600000000L
-    val dense = hourlyDense(s, d).localCheckpoint()
+    val dense = Materialize(hourlyDense(s, d))
     val bexp = dense.select(col("event_type").as("tb"), col("x").as("y"),
       explode(array((-3 to 3).map(k =>
         struct(lit(k).as("lag"),
@@ -1492,10 +1492,9 @@ object Events {
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
     val tot = cnt.groupBy(col("from_type")).agg(sum(col("n")).as("t"))
-    val m = cnt.join(tot, "from_type")
+    val m = Materialize(cnt.join(tot, "from_type")
       .select(col("from_type"), col("to_type"),
-        expr("CAST((2000000 * n + t) DIV (2 * t) AS BIGINT)").as("np"))
-      .localCheckpoint()
+        expr("CAST((2000000 * n + t) DIV (2 * t) AS BIGINT)").as("np")))
     val types = ev.select(col("event_type")).distinct()
     var pi = types
       .crossJoin(broadcast(types.agg(count(lit(1)).as("k"))))
@@ -2095,7 +2094,8 @@ object Events {
       expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY c)")
         .cast("long").as("t"))
     val wHour = Window.orderBy(col("b"))
-    val eps = perHour.crossJoin(broadcast(thr))
+    // feeds both the banded side and the zero-preserving left join
+    val eps = Materialize(perHour.crossJoin(broadcast(thr))
       .where(col("c") > col("t"))
       .withColumn("new_ep",
         when(col("b") - lag(col("b"), 1).over(wHour) === hourUs, 0L)
@@ -2106,9 +2106,7 @@ object Events {
       .groupBy(col("ep"))
       .agg(min(col("b")).as("e_start"),
         (max(col("b")) + lit(hourUs - 1)).as("e_end"),
-        count(lit(1)).as("n_hours"), max(col("c")).as("peak"))
-      // feeds both the banded side and the zero-preserving left join
-      .localCheckpoint()
+        count(lit(1)).as("n_hours"), max(col("c")).as("peak")))
     val sessB = sess.withColumn("bucket",
       explode(sequence(expr(s"s_start DIV $dayUs"),
         expr(s"s_end DIV $dayUs"))))
@@ -2281,10 +2279,9 @@ object Events {
     val cnt = trans.groupBy(col("from_state"), col("to_state"))
       .agg(count(lit(1)).as("n"))
     val tot = cnt.groupBy(col("from_state")).agg(sum(col("n")).as("t"))
-    val m = cnt.join(tot, "from_state")
+    val m = Materialize(cnt.join(tot, "from_state")
       .select(col("from_state"), col("to_state"),
-        expr("CAST((2000000 * n + t) DIV (2 * t) AS BIGINT)").as("np"))
-      .localCheckpoint()
+        expr("CAST((2000000 * n + t) DIV (2 * t) AS BIGINT)").as("np")))
 
     // ALL removal variants iterate in ONE chain: the variant-tagged
     // matrices union into a single <=(1+|channels|)*(channels+2)^2 row
@@ -2294,13 +2291,13 @@ object Events {
     // the oracle's per-variant CTE chains still hash-match)
     val variants = Seq("full" -> None) ++
       AttributionChannels.map(c => s"rm_$c" -> Some(c))
-    val mAll = variants.map { case (tag, rm) =>
+    val mAll = Materialize(variants.map { case (tag, rm) =>
       rm.map(c =>
         m.where(col("from_state") =!= c && col("to_state") =!= c))
         .getOrElse(m)
         .select(lit(tag).as("variant"), col("from_state"),
           col("to_state"), col("np"))
-    }.reduce(_ unionByName _).localCheckpoint()
+    }.reduce(_ unionByName _))
     def conv = variants.map { case (tag, _) => (tag, "CONV", 1000000L) }
       .toDF("variant", "st", "p")
     var p = conv
@@ -2316,7 +2313,7 @@ object Events {
         .select(col("variant"), col("from_state").as("st"), col("p"))
         .unionByName(conv)
     }
-    val pStart = p.where(col("st") === "START").localCheckpoint()
+    val pStart = Materialize(p.where(col("st") === "START"))
     // close the scalar through a global aggregate so the planner can
     // PROVE maxRows=1 (the lint's broadcast-scalar-cross contract);
     // (full, START) appears exactly once, so max == the value

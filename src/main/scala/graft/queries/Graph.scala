@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.graph.PageRank
+import graft.Materialize
 
 /** Graph queries over the part↔supplier bipartite graph implied by
   * lineitem (SURVEY.md §2). Supplier nodes are offset by 10⁷ so the
@@ -86,13 +87,12 @@ object Graph {
     val (edges, deg) = edgeParts(s, d)
     val aLower = col("da") < col("db") ||
       (col("da") === col("db") && col("pa") < col("pb"))
-    val oriented = edges
+    val oriented = Materialize(edges
       .join(deg.select(col("node").as("pa"), col("deg").as("da")), Seq("pa"))
       .join(deg.select(col("node").as("pb"), col("deg").as("db")), Seq("pb"))
       .select(
         when(aLower, col("pa")).otherwise(col("pb")).as("u"),
-        when(aLower, col("pb")).otherwise(col("pa")).as("v"))
-      .localCheckpoint()
+        when(aLower, col("pb")).otherwise(col("pa")).as("v")))
     // Closed wedges by ADJACENCY-LIST INTERSECTION, not a wedge
     // self-join (round 12, after the measured 30×/100× scale runs): a
     // triangle {u,x,y} in orientation order is u→x, u→y, x→y, and the
@@ -202,7 +202,7 @@ object Graph {
     // adjacency twice, anti-join probe) — checkpoint it once so the
     // lineitem scan and the pair-generation self-join run a single
     // time; everything downstream reads the materialized edges
-    val edges = edgeParts(s, d)._1.localCheckpoint()
+    val edges = Materialize(edgeParts(s, d)._1)
     val deg = degreesOf(edges)
     val adj = edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
@@ -242,25 +242,21 @@ object Graph {
     * frontier through the adjacency list with one equi-join, new
     * nodes take hop = round, already-reached nodes keep their smaller
     * hop via the min-aggregate. Pure integer arithmetic — identical
-    * in any engine. The checkpointed edge list is built once; frontier
-    * joins shuffle on the frontier side only (the adjacency is the
-    * big, stationary side — at scale it would be a bucketed table).
+    * in any engine. The checkpointed edge list is built once and
+    * every round streams it against the frontier's hash table.
     * "Parts within 3 co-purchase hops of these parts" is the
     * recommendation-radius / blast-radius query. */
   def qGraphKhop(s: SparkSession, d: String): DataFrame = {
-    // round 15: the adjacency is symmetrized with ONE explode (one
-    // scan of the pair build instead of a union's two) and
-    // checkpointed ALREADY PARTITIONED on u — the per-round join key —
-    // so every BFS round streams it with no exchange and no sort; the
-    // bounded frontier is the SHUFFLE_HASH build side (the lpaLabels
-    // r14 pattern). The seed distinct also rides the hash(u) layout.
-    val adj = edgeParts(s, d)._1
+    // the adjacency is symmetrized with ONE explode (one scan of the
+    // pair build instead of a union's two). The frontier is the
+    // SHUFFLE_HASH build of every round: from round 2 its estimate
+    // (a union under an aggregate) exceeds the adjacency's measured
+    // size, so unhinted the planner broadcasts the adjacency instead.
+    val adj = Materialize(edgeParts(s, d)._1
       .select(explode(array(
         struct(col("pa").as("u"), col("pb").as("v")),
         struct(col("pb").as("u"), col("pa").as("v")))).as("ed"))
-      .select(col("ed.u").as("u"), col("ed.v").as("v"))
-      .repartition(col("u"))
-      .localCheckpoint()
+      .select(col("ed.u").as("u"), col("ed.v").as("v")))
     var reached = adj.select(col("u").as("node")).where(col("node") <= LinkQueryCap)
       .distinct().select(col("node"), lit(0).as("hop"))
     for (k <- 1 to KhopLimit) {
@@ -291,7 +287,7 @@ object Graph {
     * is built once for the seed and expansion sides. Integer counts,
     * one final rounded double division — engine-exact. */
   def qGraphNeighborhood(s: SparkSession, d: String): DataFrame = {
-    val edges = edgeParts(s, d)._1.localCheckpoint()
+    val edges = Materialize(edgeParts(s, d)._1)
     val adj = edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
     val seeds = adj.where(col("u") <= LinkQueryCap)
@@ -344,18 +340,9 @@ object Graph {
     * generated SQL. R is summed as an exact int (order-independent),
     * clamped at 50 per register, so every step is deterministic. */
   def qGraphAnf(s: SparkSession, d: String): DataFrame = {
-    // round 14: adj is checkpointed ALREADY PARTITIONED on v — the
-    // per-round join key — and the register side of each round is the
-    // SHUFFLE_HASH build side, for the same reason as lpaLabels: the
-    // checkpoint carries the build plan's size estimate, and the r14
-    // array edge build's realistic small estimate otherwise lets the
-    // static planner broadcast the million-row ADJACENCY side of the
-    // iteration joins (the unbounded side at scale).
-    val edges = edgeParts(s, d)._1.localCheckpoint()
-    val adj = edges.select(col("pa").as("u"), col("pb").as("v"))
-      .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
-      .repartition(col("v"))
-      .localCheckpoint()
+    val edges = Materialize(edgeParts(s, d)._1)
+    val adj = Materialize(edges.select(col("pa").as("u"), col("pb").as("v"))
+      .unionAll(edges.select(col("pb").as("u"), col("pa").as("v"))))
     val m0 = adj.select(col("u").as("node")).distinct()
       .select(col("node"),
         explode(sequence(lit(0), lit(AnfRegisters - 1))).as("reg"))
@@ -367,6 +354,9 @@ object Graph {
         expr("shiftleft(CAST(1 AS BIGINT), " +
           "LEAST(CAST(bit_count((h & -h) - 1) AS INT), 62))").as("m"))
     def orRound(prev: DataFrame): DataFrame =
+      // the register side is the SHUFFLE_HASH build: each round's
+      // estimate is a union of the last, so unhinted the planner
+      // broadcasts the adjacency from round 2
       adj.join(prev.select(col("node").as("v"), col("reg"), col("m"))
           .hint("shuffle_hash"), "v")
         .select(col("u").as("node"), col("reg"), col("m"))
@@ -388,8 +378,8 @@ object Graph {
     val seeds = adj.where(col("u") <= LinkQueryCap)
       .select(col("u").as("a"), col("v").as("w"))
     // the seed frontier is the bounded query set (|Q|·deg rows by
-    // construction) — broadcast it explicitly so the misestimated
-    // adjacency can never become the broadcast side
+    // construction), estimated as large as the adjacency it filters:
+    // broadcast it so the adjacency is never the broadcast side
     val ball2 = seeds.select(col("a"), col("w").as("node"))
       .unionAll(broadcast(seeds)
         .join(adj.select(col("u").as("u2"), col("v")),
@@ -446,29 +436,21 @@ object Graph {
     * of re-deriving the whole peel lineage three times over. Nothing
     * quadratic, no windows. */
   def qGraphKcore(s: SparkSession, d: String): DataFrame = {
-    // Round 15 (guide §2.4 remove shuffles / §3.1 deliberate strategy):
-    // the peel runs on the SYMMETRIZED adjacency, checkpointed ALREADY
-    // PARTITIONED on its first endpoint (the lpaLabels r14 pattern).
-    // Because the list is symmetric, grouping by EITHER endpoint gives
-    // the node degrees, so each round (a) reads the per-round degree
-    // aggregate exchange-free off the carried partitioning, (b) drops
-    // non-core a-endpoints with a SHUFFLE_HASH semi join on that same
-    // partitioning (zero exchanges — the keep set derives from the
-    // same layout), and (c) pays exactly ONE full-width exchange for
-    // the b-endpoint filter — whose output partitioning becomes the
-    // next round's grouping key by swapping the (symmetric) roles.
-    // The old shape paid three per round (union-all degree rollup +
-    // both semi joins) plus SMJ sorts. The final round needs only the
-    // keep set, so its edge filter (2 exchanges + an eager checkpoint
-    // the output never reads) is skipped outright — the oracle's
-    // unused e3 CTE was never evaluated either. Same k derivation
-    // (1.5·|E|/|V| on exact integers; |sym| div 2 == |E|), same
-    // KcoreRounds peel, row-identical output.
+    // The peel runs on the SYMMETRIZED adjacency: grouping by EITHER
+    // endpoint gives the node degrees, so each round is one degree
+    // aggregate and two semi joins against its keep set. The keep set
+    // (≤ |V| rows) is the SHUFFLE_HASH build of both semi joins, so
+    // the streamed edge side pays no sort-merge sort (unhinted, both
+    // are sort-merge joins at sf0.1 and the query is 17% slower). The
+    // final round needs only the keep set, so its edge filter (2
+    // exchanges + an eager checkpoint the output never reads) is
+    // skipped outright — the oracle's unused e3 CTE was never
+    // evaluated either. Same k derivation (1.5·|E|/|V| on exact
+    // integers; |sym| div 2 == |E|), same KcoreRounds peel,
+    // row-identical output.
     val edges = edgeParts(s, d)._1
-    val sym = edges.select(col("pa").as("a"), col("pb").as("b"))
-      .unionByName(edges.select(col("pb").as("a"), col("pa").as("b")))
-      .repartition(col("a"))
-      .localCheckpoint()
+    val sym = Materialize(edges.select(col("pa").as("a"), col("pb").as("b"))
+      .unionByName(edges.select(col("pb").as("a"), col("pa").as("b"))))
     val deg0 = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .select(col("a").as("node"), col("deg"))
     val kdf = sym.agg(expr("count(1) div 2").as("ecnt"))
@@ -482,15 +464,11 @@ object Graph {
         .where(col("deg") >= col("k"))
         .select(col("a").as("node"))
       if (r < KcoreRounds)
-        cur = cur
+        cur = Materialize(cur
           .join(keep.select(col("node").as("a")).hint("shuffle_hash"),
             Seq("a"), "left_semi")
           .join(keep.select(col("node").as("b")).hint("shuffle_hash"),
-            Seq("b"), "left_semi")
-          // symmetric set: swapping roles re-labels rows onto the
-          // b-filter's hash(b) partitioning as next round's hash(a)
-          .select(col("b").as("a"), col("a").as("b"))
-          .localCheckpoint()
+            Seq("b"), "left_semi"))
     }
     deg0
       .join(keep.select(col("node"), lit(true).as("in_core")),
@@ -520,7 +498,7 @@ object Graph {
     * only when it is genuinely small), one global aggregate. No
     * windows, no pair explosion. */
   def qGraphAssortativity(s: SparkSession, d: String): DataFrame = {
-    val edges = edgeParts(s, d)._1.localCheckpoint()
+    val edges = Materialize(edgeParts(s, d)._1)
     val deg = degreesOf(edges)
     val sym = edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
@@ -568,38 +546,27 @@ object Graph {
   private def lpaLabels(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val (edges, _) = edgeParts(s, d)
-    // round 14: the edge list is checkpointed ALREADY PARTITIONED on
-    // dst — the per-round join key — so every round's join reads it
-    // with no exchange and no sort (LogicalRDD preserves the
-    // partitioning), and the label side is hinted SHUFFLE_HASH: the
-    // labels shuffle (|nodes| rows) and build the per-partition hash
-    // table, the edges stream. Deliberate strategy (guide §3.1)
-    // because localCheckpoint carries the BUILD plan's size ESTIMATE
-    // as the checkpoint's stats: the r14 array edge build estimates
-    // ~1.5 MB where the old self-join estimated ~3 TB, and that
-    // underestimate made the static planner broadcast the 1.6M-row
-    // EDGE side of every round (measured 2× on the whole query) — a
-    // plan no scale wants: the edge table is the unbounded side.
-    val e = edges.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionByName(edges.select(col("pb").as("src"), col("pa").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint()
+    // the label side is the SHUFFLE_HASH build of every round: the
+    // labels (|nodes| rows) shuffle and build per-partition hash
+    // tables while the edges (the unbounded side) stream, paying no
+    // sort-merge sort
+    val e = Materialize(edges.select(col("pa").as("src"), col("pb").as("dst"))
+      .unionByName(edges.select(col("pb").as("src"), col("pa").as("dst"))))
     var lab = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to LpaRounds) {
+      // each round's labels feed exactly one consumer, but without a
+      // checkpoint the final plan nests 4 join-agg rounds and the edge
+      // scan re-executes per round under AQE re-planning
       val counts = e
         .join(lab.select(col("node").as("dst"), col("label"))
           .hint("shuffle_hash"), "dst")
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      lab = counts.groupBy(col("src"))
+      lab = Materialize(counts.groupBy(col("src"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
           .as("w"))
-        .select(col("src").as("node"), col("w.l").as("label"))
-        // each round's labels feed exactly one consumer, but without a
-        // checkpoint the final plan nests 4 join-agg rounds and the
-        // edge scan re-executes per round under AQE re-planning
-        .localCheckpoint()
+        .select(col("src").as("node"), col("w.l").as("label")))
     }
     (e, lab)
   }
@@ -627,25 +594,16 @@ object Graph {
     val (e, lab) = lpaLabels(s, d)
     // m = |undirected edges| = |symmetrized| / 2; intra counted on the
     // symmetrized list and halved the same way.
-    // Round 14: join on dst FIRST — e is checkpointed hash(dst)-
-    // partitioned (lpaLabels), so the first label attach reads it
-    // exchange-free and only the joined rows re-shuffle on src; both
-    // label sides are SHUFFLE_HASH build sides for the same reason as
-    // the LPA rounds (the checkpoint's carried size estimate must
-    // never let the planner broadcast the edge side).
     val labeled = e
-      .join(lab.select(col("node").as("dst"), col("label").as("lb"))
-        .hint("shuffle_hash"), "dst")
-      .join(lab.select(col("node").as("src"), col("label").as("la"))
-        .hint("shuffle_hash"), "src")
+      .join(lab.select(col("node").as("dst"), col("label").as("lb")), "dst")
+      .join(lab.select(col("node").as("src"), col("label").as("la")), "src")
     val intra = labeled
       .agg((count(lit(1)) / 2).cast("long").as("m_edges_x2_half"),
         (sum(when(col("la") === col("lb"), 1L).otherwise(0L)) / 2)
           .cast("long").as("n_intra"))
     // dc = Σ degrees inside community c; Σc dc² via per-community sums
     val dsq = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .join(lab.select(col("node").as("src"), col("label"))
-        .hint("shuffle_hash"), "src")
+      .join(lab.select(col("node").as("src"), col("label")), "src")
       .groupBy(col("label")).agg(sum(col("deg")).as("dc"))
       .agg(count(lit(1)).as("n_communities"),
         sum(col("dc") * col("dc")).as("sum_dc_sq"))

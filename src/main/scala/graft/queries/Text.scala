@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.text.TextAnalysis._
+import graft.Materialize
 
 /** Text-analysis queries over `documents` (SURVEY.md §2, text block).
   * Everything is codegen'd column expressions; the SQL oracles mirror
@@ -206,7 +207,7 @@ object Text {
     * (brute-force-equivalence spec). */
   def qTokenBudget(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sc = scoredDocs(s, d).localCheckpoint()
+    val sc = Materialize(scoredDocs(s, d))
     val withB = sc.withColumn("qb",
       floor(col("quality") * TokenBudgetBuckets).cast("int"))
     val bt = withB.groupBy(col("qb")).agg(sum(col("n_toks")).as("bt"))
@@ -557,10 +558,9 @@ object Text {
     // lead() window shuffled + sorted every token row), unigrams and
     // the totals from per-doc explodes/sizes of the same arrays;
     // adjacency over the filtered array == lead over filtered rows
-    val wt = docs(s, d).select(col("doc_id"),
+    val wt = Materialize(docs(s, d).select(col("doc_id"),
       filter(split(lower(col("text")), "\\s+"),
-        w => length(w) > 0).as("toks"))
-      .localCheckpoint()
+        w => length(w) > 0).as("toks")))
     val bi = wt.where(size(col("toks")) >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -662,13 +662,12 @@ object Text {
     * downstream stage — four bounded aggregate rows, never four
     * re-runs of the chain. */
   def qPipelineFunnel(s: SparkSession, d: String): DataFrame = {
-    val scored = docs(s, d)
+    val scored = Materialize(docs(s, d)
       .withColumn("quality", qualityScore(col("text")))
-      .withColumn("n_toks", size(split(col("text"), "\\s+")).cast("long"))
-      .localCheckpoint()
+      .withColumn("n_toks", size(split(col("text"), "\\s+")).cast("long")))
     val kept = scored.where(col("quality") >= 0.5)
-    val canon = graft.dedup.Dedup.exactDedup(kept, "doc_id", "text")
-      .where(col("is_canonical")).localCheckpoint()
+    val canon = Materialize(graft.dedup.Dedup.exactDedup(kept, "doc_id", "text")
+      .where(col("is_canonical")))
     val sampled = graft.operators.Sampling.stratifiedSample(
       canon, keyCol = "doc_id", strataCol = "lang",
       rates = Map("en" -> 0.5), defaultRate = 1.0)
@@ -897,15 +896,14 @@ object Text {
   def qBpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sep = BpeSep
-    var vocab = docs(s, d)
+    var vocab = Materialize(docs(s, d)
       .select(explode(split(col("text"), "\\s+")).as("word"))
       .where(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("freq"),
         array_join(transform(
           filter(split(col("word"), ""), c => c =!= ""),
-          c => concat(lit(sep), c, lit(sep))), "").as("ws"))
-      .localCheckpoint()
+          c => concat(lit(sep), c, lit(sep))), "").as("ws")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (r <- 1 to BpeMerges) {
       val syms = filter(split(col("ws"), sep), x => x =!= "")
@@ -923,10 +921,9 @@ object Text {
         val (p1, p2, n) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((r, p1, p2, n))
-        vocab = vocab.select(col("freq"),
+        vocab = Materialize(vocab.select(col("freq"),
           replace(col("ws"), lit(s"$sep$p1$sep$sep$p2$sep"),
-            lit(s"$sep$p1$p2$sep")).as("ws"))
-          .localCheckpoint()
+            lit(s"$sep$p1$p2$sep")).as("ws")))
       }
     }
     merges.result().toDF("round", "p1", "p2", "n")

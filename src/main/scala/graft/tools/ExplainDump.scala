@@ -2,13 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
-import graft.{Session, SparkEntry}
+import graft.{Materialize, Session, SparkEntry}
 import graft.plans.PlanShape
 
 /** Dev tool: with no arguments, writes `plans.jsonl` — one
-  * [[graft.plans.PlanShape]] line per registered query, sorted by name —
-  * the committed record PlanLintSpec checks the plans against, so a plan
-  * change shows up as a one-line diff. Regenerate after plan-shape
+  * [[graft.plans.PlanShape]] line per registered query, sorted by name,
+  * with the plans its build materialized — the committed record
+  * PlanLintSpec checks the plans against, so a plan change shows up as a
+  * one-line diff. Regenerate after plan-shape
   * changes: `sbt "runMain graft.tools.ExplainDump"`. With query names
   * as arguments (`runMain graft.tools.ExplainDump q_tpch3 q_tpch5`, or
   * one comma-separated list) it prints those formatted plans to stdout
@@ -25,7 +26,10 @@ object ExplainDump {
         println(s"\n========== $name ==========\n$plan")
       }
     else {
-      val lines = queries.map { case (name, q) => PlanShape.line(name, q(spark, sf)) + "\n" }
+      val lines = queries.map { case (name, q) =>
+        val (df, materialized) = Materialize.recording(q(spark, sf))
+        PlanShape.line(name, df, materialized) + "\n"
+      }
       Files.writeString(Paths.get("plans.jsonl"), lines.mkString)
       println(s"wrote plans.jsonl (${lines.size} plans)")
     }

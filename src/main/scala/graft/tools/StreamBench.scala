@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.Materialize
 
 /** Streaming-twin THROUGHPUT bench (round 13; VERDICT r12 item 5: the
   * 26 twins had equivalence proofs but no load numbers). Feeds the
@@ -44,9 +45,9 @@ object StreamBench {
     // run regardless (env-overridable).
     val maxFeed = sys.env.getOrElse("SPARK_GRAFT_STREAM_MAX_ROWS",
       "2000000").toInt
-    val feedDf = graft.Tables.events(spark, sfDir)
+    val feedDf = Materialize(graft.Tables.events(spark, sfDir)
       .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .orderBy("ts", "event_id").limit(maxFeed).as[Ev].localCheckpoint()
+      .orderBy("ts", "event_id").limit(maxFeed).as[Ev])
     val nFeed = feedDf.count()
     println(s"[streambench] feed: $nFeed rows from $sfDir (cap $maxFeed)")
 

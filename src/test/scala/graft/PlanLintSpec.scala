@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Cast, EqualNullSafe, EqualTo,
-  SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+import org.apache.spark.sql.catalyst.expressions.{Cast, SpecifiedWindowFrame,
+  UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.plans.PlanShape
@@ -19,24 +20,30 @@ import graft.plans.PlanShape
   * explicitly reviewed onto an allowlist. */
 class PlanLintSpec extends SparkSpec {
 
-  /** Every registered query, built once in name order with its
-    * plans.jsonl line, for the sweeps below: a build runs the eager
-    * jobs of iterative queries, so rebuilding all of them per sweep
-    * repeated that work. The cache is cleared first and each plan is
-    * read right after its build, as ExplainDump does in a fresh
-    * session, because a query that caches a subplan changes the plans
-    * of the queries built after it. */
-  private var built: Seq[(String, DataFrame, String)] = _
+  /** A registered query as built, with the plans it materialized on
+    * the way and its plans.jsonl line. */
+  private case class Built(name: String, df: DataFrame, materialized: Seq[PlanShape],
+      line: String)
 
-  private def registered: Seq[(String, DataFrame, String)] = {
-    if (built == null) {
-      spark.catalog.clearCache()
+  /** Every registered query, built once in name order, for the sweeps
+    * below: a build runs the eager jobs of iterative queries, so
+    * rebuilding all of them per sweep repeated that work. */
+  private var built: Seq[Built] = _
+
+  private def registered: Seq[Built] = {
+    if (built == null)
       built = SparkEntry.select(None).map { case (name, q) =>
-        val df = q(spark, sf)
-        (name, df, PlanShape.line(name, df))
+        val (df, materialized) = Materialize.recording(q(spark, sf))
+        Built(name, df, materialized, PlanShape.line(name, df, materialized))
       }
-    }
     built
+  }
+
+  // other suites in this JVM cache their outputs, and a cached
+  // relation changes the plans of the queries that contain it
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.catalog.clearCache()
   }
 
   override def afterAll(): Unit = {
@@ -59,6 +66,12 @@ class PlanLintSpec extends SparkSpec {
     *  - q_ann_recall — embeds q_ann_bruteforce AND q_embed_bitsim
     *    verbatim as subplans, so it inherits those bounded broadcast
     *    crosses;
+    *  - q_ann_rank_metrics — ranks the same approximate methods as
+    *    q_ann_recall, so it inherits q_embed_bitsim's bounded cross
+    *    (its only `=` is the self-pair exclusion `query_id <> vec_id`);
+    *  - q_embed_mrl — q_ann_bruteforce's scan of the bounded query set
+    *    (vec_id < 20) at each Matryoshka prefix dimension, with the
+    *    same self-pair exclusion as its only `=`;
     *  - q_ivf_dedup_recall — measurement query whose truth side is the
     *    all-pairs cosine sweep at the dedup threshold; bounded QA
     *    cross by design (run on a sample at real scale), documented on
@@ -83,7 +96,7 @@ class PlanLintSpec extends SparkSpec {
     *    (cl, tok) equality. */
   private val crossAllowed = Set(
     "q_cross_join", "q_ann_bruteforce", "q_embed_bitsim",
-    "q_ann_recall", "q_ivf_dedup_recall",
+    "q_ann_recall", "q_ann_rank_metrics", "q_embed_mrl", "q_ivf_dedup_recall",
     "q_events_gapfill", "q_events_interpolate", "q_events_autocorr",
     "q_events_forecast", "q_events_xcorr", "q_events_seasonality",
     "q_events_hysteresis", "q_nb_langid")
@@ -118,8 +131,37 @@ class PlanLintSpec extends SparkSpec {
     * frame. */
   private val shrinkingAllowed = Set("q_events_interpolate")
 
+  /** Reviewed shuffled hash joins, each with the bound on its build
+    * side: a hash table per partition holds the whole build side, so
+    * an unbounded build spills or fails at scale. */
+  private val shjAllowed = {
+    val cc = "Cluster.connectedComponents rounds: labels and neighbour minima, " +
+      "one row per vertex of the pair graph (|V|), built against the streamed edges"
+    Map(
+      "q_dedup_cluster" -> cc,
+      "q_dedup_cluster_incremental" -> cc,
+      "q_dedup_cluster_stats" -> cc,
+      "q_dedup_keep_best" -> cc,
+      "q_graph_anf" -> "registers: AnfRegisters rows per node (8·|V|)",
+      "q_graph_kcore" -> "keep set: at most one row per node (|V|)",
+      "q_graph_khop" -> "frontier: at most one row per node (|V|)",
+      "q_graph_lpa" -> "labels: one row per node (|V|)",
+      "q_graph_modularity" -> "the q_graph_lpa label rounds (|V| rows)")
+  }
+
+  private def shjOffences(name: String, shapes: Seq[PlanShape]): Seq[String] =
+    if (shjAllowed.contains(name)) Nil
+    else shapes.flatMap(_.joins).filter(_.strategy == "SHJ")
+      .map(j => s"$name: unreviewed SHJ on ${j.leftKeys.mkString(",")}")
+
   private def small(p: LogicalPlan): Boolean =
     p.maxRows.exists(_ <= SmallSide)
+
+  /** A join is quadratic-shaped when no top-level conjunct equates an
+    * expression of each side (the keys a hash or sort-merge join can
+    * use) AND neither side is provably tiny. */
+  private def quadratic(j: Join): Boolean =
+    ExtractEquiJoinKeys.unapply(j).isEmpty && !small(j.left) && !small(j.right)
 
   /** Frames that end at unboundedFollowing but start after
     * unboundedPreceding, e.g. `currentRow..unboundedFollowing`: Spark
@@ -139,16 +181,27 @@ class PlanLintSpec extends SparkSpec {
     // unbounded crossJoin → condition-less Join, neither side small
     val cross = big.crossJoin(Tables.customer(spark, sf))
       .queryExecution.optimizedPlan.collect {
-        case j: Join if j.condition.isEmpty && !small(j.left) && !small(j.right) => j
+        case j: Join if quadratic(j) => j
       }
     assert(cross.nonEmpty, "cross-join detector is blind")
     // a broadcast 1-row aggregate cross MUST stay invisible to it
     val tiny = big.crossJoin(
       org.apache.spark.sql.functions.broadcast(big.agg(count(lit(1)).as("n"))))
       .queryExecution.optimizedPlan.collect {
-        case j: Join if j.condition.isEmpty && !small(j.left) && !small(j.right) => j
+        case j: Join if quadratic(j) => j
       }
     assert(tiny.isEmpty, "1-row broadcast cross falsely flagged")
+    // a band join whose only `=` is the self-pair exclusion has no key
+    val band = big.as("x").join(big.as("y"),
+      abs(col("x.o_totalprice") - col("y.o_totalprice")) <= 1.0 &&
+        col("x.o_orderkey") =!= col("y.o_orderkey"))
+    assert(band.queryExecution.optimizedPlan.collect { case j: Join if quadratic(j) => j }
+      .nonEmpty, "band join with a negated equality passes as an equi-join")
+    // a shuffled hash join outside the reviewed list
+    val planted = big.join(Tables.customer(spark, sf).hint("shuffle_hash"),
+      col("o_custkey") === col("c_custkey"))
+    assert(shjOffences("q_planted", Seq(PlanShape.of(planted))).nonEmpty,
+      "unreviewed SHJ detector is blind")
     // whole-relation window → partitionSpec-less Window, unbounded child
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))
     val unpart = big.withColumn("rk", row_number().over(w))
@@ -175,18 +228,11 @@ class PlanLintSpec extends SparkSpec {
 
   test("no registered plan hides a quadratic join or unpartitioned window") {
     val offences = Seq.newBuilder[String]
-    for ((name, df, _) <- registered) {
+    for (Built(name, df, _, _) <- registered) {
       val qe = df.queryExecution
       qe.optimizedPlan.foreach {
         case j: Join =>
-          // a join is quadratic-shaped when it has no equality
-          // component at all AND neither side is provably tiny
-          val hasEquality = j.condition.exists(_.exists {
-            case _: EqualTo | _: EqualNullSafe => true
-            case _ => false
-          })
-          if (!hasEquality && !small(j.left) && !small(j.right)
-              && !crossAllowed(name))
+          if (quadratic(j) && !crossAllowed(name))
             offences += s"$name: non-equi join over unbounded sides " +
               s"(${j.joinType}, cond=${j.condition})"
         case w: LWindow =>
@@ -276,7 +322,7 @@ class PlanLintSpec extends SparkSpec {
     assert(offendingWindows(bad.queryExecution.optimizedPlan).nonEmpty,
       "hash-key rank-window detector is blind")
     val offences = for {
-      (name, df, _) <- registered
+      Built(name, df, _, _) <- registered
       w <- offendingWindows(df.queryExecution.optimizedPlan)
     } yield s"$name: sorted window partitioned by a content-hash key " +
       s"(${w.partitionSpec.mkString(", ")})"
@@ -294,7 +340,7 @@ class PlanLintSpec extends SparkSpec {
     // STRING (q_table_fingerprint's exact-128-bit form). Schema-only
     // analysis: nothing executes here.
     val offences = for {
-      (name, df, _) <- registered
+      Built(name, df, _, _) <- registered
       f <- df.schema.fields
       if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
     } yield s"$name: ${f.name} is ${f.dataType}"
@@ -330,11 +376,23 @@ class PlanLintSpec extends SparkSpec {
     // until the file is regenerated, so it shows up as a one-line diff
     import scala.jdk.CollectionConverters._
     val committed = Files.readAllLines(Paths.get("plans.jsonl")).asScala.toSeq
-    val current = registered.map(_._3)
+    val current = registered.map(_.line)
     val changed = (committed.diff(current) ++ current.diff(committed))
       .map(_.stripPrefix("{\"query\":\"").takeWhile(_ != '"')).distinct.sorted
     if (committed != current)
       fail(s"plans.jsonl differs for ${changed.size} queries: ${changed.mkString(", ")}; " +
         "regenerate it with `sbt \"runMain graft.tools.ExplainDump\"` and review the diff")
+  }
+
+  test("every shuffled hash join, final or materialized, is reviewed with its build bound") {
+    val offences =
+      registered.flatMap(b => shjOffences(b.name, PlanShape.of(b.df) +: b.materialized))
+    assert(offences.isEmpty, s"unreviewed SHJ:\n${offences.mkString("\n")}")
+  }
+
+  test("building every registered query leaves nothing in the session cache") {
+    registered
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a query build cached a relation that outlives it")
   }
 }

@@ -58,7 +58,10 @@ class PlanShapeSpec extends SparkSpec {
     // q_sketch_rollup's distinct aggregates order its Expand keys by
     // expression-id hashes
     for (q <- Seq("q_tpch3", "q_text_pmi", "q_sketch_rollup")) {
-      def line = PlanShape.line(q, SparkEntry.queries(q)(spark, sf))
+      def line = {
+        val (df, materialized) = Materialize.recording(SparkEntry.queries(q)(spark, sf))
+        PlanShape.line(q, df, materialized)
+      }
       val first = line
       assert(line == first)
     }
