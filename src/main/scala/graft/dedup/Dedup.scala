@@ -46,8 +46,12 @@ object Dedup {
     * the `split` subtree n+1 times (Catalyst expressions are trees, not
     * DAGs) — fine for one-off use, wrong for hot paths; the pipelines
     * below use the relational shape instead. */
-  def shingles(text: Column, n: Int): Column = {
-    val words = split(text, "\\s+")
+  def shingles(text: Column, n: Int): Column =
+    shinglesOfWords(split(text, "\\s+"), n)
+
+  /** `shingles` over a words-array column; pass a MATERIALIZED column
+    * from batch code (the `cdcChunksOfWords` rule). */
+  private def shinglesOfWords(words: Column, n: Int): Column =
     // sequence(1, k) with k < 1 would DESCEND in Spark; guard short docs.
     when(size(words) >= n,
       array_distinct(
@@ -55,7 +59,6 @@ object Dedup {
           sequence(lit(1), size(words) - (n - 1)),
           i => concat_ws(" ", (0 until n).map(k => element_at(words, i + k)): _*))))
       .otherwise(array().cast("array<string>"))
-  }
 
   /** Exact Jaccard similarity between two pre-computed shingle arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -257,15 +260,9 @@ object Dedup {
     // apart because `_w` is referenced n+2 times and split is not
     // cheap; `_sh`'s single explode reference may inline, which is
     // free (its references are to the materialized `_w`).
-    val sh = when(size(col("_w")) >= n,
-      array_distinct(transform(
-        sequence(lit(1), size(col("_w")) - (n - 1)),
-        i => concat_ws(" ",
-          (0 until n).map(k => element_at(col("_w"), i + k)): _*))))
-      .otherwise(array().cast("array<string>"))
     docs
       .select(col(idCol).as("id"), split(col(textCol), "\\s+").as("_w"))
-      .select(col("id"), sh.as("_sh"))
+      .select(col("id"), shinglesOfWords(col("_w"), n).as("_sh"))
       .select(col("id"),
         explode(array_distinct(transform(col("_sh"),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))))
@@ -288,16 +285,20 @@ object Dedup {
     sh.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH candidate pairs from a shingle-row table: band the wide
-    * signature into NumBands bucket hashes, explode to (band, bucket)
-    * rows, self-join buckets. Linear in corpus size; pairwise work only
-    * inside buckets. Each side's shingle-set size rides along so the
-    * verify step needs no extra join. */
   /** (id, sz, band, bucket) rows of a shingle table — the LSH banding
     * shared by the self-join candidate path and the cross-set
     * (batch vs corpus) incremental path. */
   def minhashBands(sh: DataFrame): DataFrame =
     minhashBandsOfSig(minhashSigTable(sh), BandRows)
+
+  /** Band `bnd`'s bucket: the polynomial fold of its `rowsPerBand`
+    * signature elements (`sig(i)` is element i) mod p — portable
+    * integer arithmetic, acc·1000003 + m < 2^52, ANSI-safe. Shared by
+    * the relational banding and the per-row streaming twin. */
+  private def bandBucket(bnd: Int, rowsPerBand: Int, sig: Int => Column): Column =
+    (0 until rowsPerBand).foldLeft(lit(bnd.toLong)) { (acc, r) =>
+      (acc * 1000003L + sig(bnd * rowsPerBand + r)) % MinhashP
+    }
 
   /** The banding of a signature table under an ARBITRARY geometry:
     * `rowsPerBand` signature elements folded per band,
@@ -312,16 +313,11 @@ object Dedup {
     require(NumHashes % rowsPerBand == 0,
       s"rowsPerBand $rowsPerBand must divide NumHashes $NumHashes")
     val nb = NumHashes / rowsPerBand
-    // band bucket = polynomial fold of the band's signature rows mod p
-    // (portable integer arithmetic; acc·1000003 + m < 2^52, ANSI-safe)
-    def bucket(bnd: Int): Column =
-      (0 until rowsPerBand).foldLeft(lit(bnd.toLong)) { (acc, r) =>
-        (acc * 1000003L + col(s"m${bnd * rowsPerBand + r}")) % MinhashP
-      }
     sig.select(
       col("id"), col("sz"),
       explode(array((0 until nb).map { bnd =>
-        struct(lit(bnd).as("band"), bucket(bnd).as("bucket"))
+        struct(lit(bnd).as("band"),
+          bandBucket(bnd, rowsPerBand, i => col(s"m$i")).as("bucket"))
       }: _*)).as("bb"))
       .select(col("id"), col("sz"),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -346,15 +342,16 @@ object Dedup {
       array_min(transform(sids,
         h => (lit(familyA(i)) * (h % MinhashP) + lit(familyB(i))) % MinhashP))
     }
-    def bucket(bnd: Int): Column =
-      (0 until BandRows).foldLeft(lit(bnd.toLong)) { (acc, r) =>
-        (acc * 1000003L + mins(bnd * BandRows + r)) % MinhashP
-      }
     when(size(sids) > 0, array((0 until NumBands).map { bnd =>
-      struct(lit(bnd).as("band"), bucket(bnd).as("bucket"))
+      struct(lit(bnd).as("band"), bandBucket(bnd, BandRows, mins).as("bucket"))
     }: _*)).otherwise(array().cast("array<struct<band:int,bucket:bigint>>"))
   }
 
+  /** LSH candidate pairs from a shingle-row table: band the wide
+    * signature into NumBands bucket hashes, explode to (band, bucket)
+    * rows, self-join buckets. Linear in corpus size; pairwise work only
+    * inside buckets. Each side's shingle-set size rides along so the
+    * verify step needs no extra join. */
   def minhashCandidatesFromShingles(sh: DataFrame): DataFrame = {
     val bands = minhashBands(sh)
     bands.as("x").join(bands.as("y"),
@@ -560,28 +557,23 @@ object Dedup {
     * q_pipeline_train lesson — an embedded split re-executes per
     * element_at). */
   private def spanRows(
-      docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val sp = when(size(col("_w")) >= k,
-      transform(
-        sequence(lit(0), size(col("_w")) - k),
-        i => struct(i.as("pos"),
-          conv(substring(md5(concat_ws(" ",
-            (0 until k).map(j => element_at(col("_w"), i + j + 1)): _*)),
-            1, 15), 16, 10).cast("long").as("s_id"))))
-      .otherwise(array().cast("array<struct<pos:int,s_id:bigint>>"))
+      docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     docs
       .select(col(idCol).as("id"), split(col(textCol), "\\s+").as("_w"))
-      .select(col("id"), explode(sp).as("ps"))
+      .select(col("id"), explode(spanIdsOfWords(col("_w"), k)).as("ps"))
       .select(col("id"), col("ps.pos").as("pos"), col("ps.s_id").as("s_id"))
-  }
 
   /** Per-row positioned k-span ids: array of (pos, s_id) structs with
     * the SAME 0-based positions and portable md5-15 ids as the
     * window-based builder inside duplicatedSpanStats/spanRemoval —
     * the stream-safe form (lead() windows don't run on a stream).
     * Not array_distinct'd: span REMOVAL needs every occurrence. */
-  def spanIdsExpr(text: Column, k: Int): Column = {
-    val words = split(text, "\\s+")
+  def spanIdsExpr(text: Column, k: Int): Column =
+    spanIdsOfWords(split(text, "\\s+"), k)
+
+  /** `spanIdsExpr` over a words-array column; pass a MATERIALIZED
+    * column from batch code (the `cdcChunksOfWords` rule). */
+  private def spanIdsOfWords(words: Column, k: Int): Column =
     // sequence(0, m) with m < 0 would DESCEND in Spark; guard short docs
     when(size(words) >= k,
       transform(
@@ -591,7 +583,6 @@ object Dedup {
             (0 until k).map(j => element_at(words, i + j + 1)): _*)),
             1, 15), 16, 10).cast("long").as("s_id"))))
       .otherwise(array().cast("array<struct<pos:int,s_id:bigint>>"))
-  }
 
   /** The cross-document duplicated-span id set (s_id rows): spans
     * appearing verbatim in ≥ 2 distinct documents. This IS the frozen
@@ -680,6 +671,28 @@ object Dedup {
     * minTok parameter, alongside w and d. */
   val CdcMinTok = 4
 
+  /** The CDC chunk table: one row per (doc, chunk) with its token
+    * count and portable md5-15 content hash — the shared backbone of
+    * the corpus-wide keep-first stats (cdcChunkStats) and the
+    * batch-vs-corpus screen (cdcScreen). Token backbone → boundary
+    * flag (one lag-window concat + md5-15 mod d) → chunk index by
+    * exclusive prefix sum → one ordered reassembly aggregate. */
+  def cdcChunks(
+      docs: DataFrame, idCol: String, textCol: String,
+      w: Int = CdcW, d: Int = CdcD): DataFrame =
+    // round 14: the batch chunker IS the (spec-proven bit-identical)
+    // array twin over a materialized words column — the old relational
+    // shape paid a lag()-window for the boundary flags, a second
+    // window for the prefix-sum chunk index, and an ordered
+    // collect_list reassembly, i.e. an Exchange + sort of every token
+    // row for structure that is per-document by construction. chunk
+    // cast to long matches the old prefix-sum's type.
+    docs
+      .select(col(idCol).as("id"), split(col(textCol), "\\s+").as("_w"))
+      .select(col("id"), explode(cdcChunksOfWords(col("_w"), w, d)).as("ck"))
+      .select(col("id"), col("ck.chunk").cast("long").as("chunk"),
+        col("ck.c_toks").cast("long").as("c_toks"), col("ck.c_hash"))
+
   /** CONTENT-DEFINED CHUNKING dedup — the storage-dedup shape (Rabin
     * fingerprint boundaries: LBFS, Muthitacharoen et al. 2001; FastCDC)
     * applied to corpus text: chunk boundaries depend only on the local
@@ -709,28 +722,6 @@ object Dedup {
     * winner aggregate + join — all linear, nothing pairwise, nothing
     * sorted by a content key. Returns one row per doc:
     * (doc_id, n_tokens, n_chunks, n_dup_chunks, dup_tokens, dup_frac). */
-  /** The CDC chunk table: one row per (doc, chunk) with its token
-    * count and portable md5-15 content hash — the shared backbone of
-    * the corpus-wide keep-first stats (cdcChunkStats) and the
-    * batch-vs-corpus screen (cdcScreen). Token backbone → boundary
-    * flag (one lag-window concat + md5-15 mod d) → chunk index by
-    * exclusive prefix sum → one ordered reassembly aggregate. */
-  def cdcChunks(
-      docs: DataFrame, idCol: String, textCol: String,
-      w: Int = CdcW, d: Int = CdcD): DataFrame =
-    // round 14: the batch chunker IS the (spec-proven bit-identical)
-    // array twin over a materialized words column — the old relational
-    // shape paid a lag()-window for the boundary flags, a second
-    // window for the prefix-sum chunk index, and an ordered
-    // collect_list reassembly, i.e. an Exchange + sort of every token
-    // row for structure that is per-document by construction. chunk
-    // cast to long matches the old prefix-sum's type.
-    docs
-      .select(col(idCol).as("id"), split(col(textCol), "\\s+").as("_w"))
-      .select(col("id"), explode(cdcChunksOfWords(col("_w"), w, d)).as("ck"))
-      .select(col("id"), col("ck.chunk").cast("long").as("chunk"),
-        col("ck.c_toks").cast("long").as("c_toks"), col("ck.c_hash"))
-
   def cdcChunkStats(
       docs: DataFrame, idCol: String, textCol: String,
       w: Int = CdcW, d: Int = CdcD, minTok: Int = CdcMinTok): DataFrame = {
@@ -868,24 +859,6 @@ object Dedup {
     }
     tok.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
       .select(col("id"), bits.reduce(_ + _).as("sig"))
-  }
-
-  /** 64-bit SimHash as a column-level convenience (interpreted — use
-    * `simhashTable` for corpora). Bit-identical to the table form. */
-  def simhash(text: Column): Column = {
-    val words = split(text, "\\s+")
-    val his = transform(words,
-      w => conv(substring(md5(w), 1, 8), 16, 10).cast("long"))
-    val los = transform(words,
-      w => conv(substring(md5(w), 9, 8), 16, 10).cast("long"))
-    val bits = (0 until 64).map { b =>
-      val hs = if (b < 32) los else his
-      val contrib = aggregate(hs, lit(0L),
-        (acc, h) => acc +
-          when(shiftright(h, b % 32).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(contrib > 0, bitValue(b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
   }
 
   /** Hamming distance between two 64-bit signatures. */

@@ -32,29 +32,6 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  /** Triangle census of the part co-purchase graph (parts sharing an
-    * order), by DEGREE-ORDERED ORIENTATION — the scalable triangle
-    * count (Cohen's MapReduce formulation; also Suri & Vassilvitskii):
-    * orient every undirected edge from its lower-(degree, id) endpoint
-    * to the higher one, enumerate wedges only at each edge's SOURCE,
-    * and close them against the oriented edge list. Orientation bounds
-    * every out-degree by O(√m) regardless of how skewed the raw degree
-    * distribution is — a hub of degree 10⁶ generates no wedges at all
-    * (its edges all point INTO it), so wedge work is Σ outdeg² ≤ O(m^1.5)
-    * instead of the Σ deg² blowup of naive wedge counting.
-    *
-    * Every step is an equi-join or aggregate: pair-generation is
-    * bounded by items-per-order (the q_basket_pairs argument), the
-    * wedge join shuffles on the wedge center, the closing check on the
-    * (x, y) edge key. No windows, no driver loops. Each triangle is
-    * counted exactly once (at its lowest-ranked vertex); the wedge
-    * ordering ties break on (deg, id) so both engines enumerate the
-    * identical wedge set. */
-  /** Shared triangle machinery: (edges, deg, oriented, closedWedges)
-    * of the part co-purchase graph. The oriented list is checkpointed
-    * once (it feeds both wedge sides and the closing check); closed
-    * wedges carry all three triangle corners (center u, leaves x, y)
-    * so the census and the per-node coefficient share one plan. */
   /** (edges, deg) of the part co-purchase graph — shared by the
     * triangle family and link prediction.
     *
@@ -82,6 +59,11 @@ object Graph {
       .unionAll(edges.select(col("pb").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
+  /** Shared triangle machinery: (edges, deg, oriented, closedWedges)
+    * of the part co-purchase graph. The oriented list is checkpointed
+    * once (it feeds both wedge sides and the closing check); closed
+    * wedges carry all three triangle corners (center u, leaves x, y)
+    * so the census and the per-node coefficient share one plan. */
   private def triangleParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val (edges, deg) = edgeParts(s, d)
@@ -121,6 +103,24 @@ object Graph {
     (edges, deg, closed)
   }
 
+  /** Triangle census of the part co-purchase graph (parts sharing an
+    * order), by DEGREE-ORDERED ORIENTATION — the scalable triangle
+    * count (Cohen's MapReduce formulation; also Suri & Vassilvitskii):
+    * orient every undirected edge from its lower-(degree, id) endpoint
+    * to the higher one, enumerate wedges only at each edge's SOURCE,
+    * and close them against the oriented edge list. Orientation bounds
+    * every out-degree by O(√m) regardless of how skewed the raw degree
+    * distribution is — a hub of degree 10⁶ generates no wedges at all
+    * (its edges all point INTO it), so wedge work is Σ outdeg² ≤ O(m^1.5)
+    * instead of the Σ deg² blowup of naive wedge counting.
+    *
+    * Every step is an equi-join or aggregate: pair-generation is
+    * bounded by items-per-order (the q_basket_pairs argument), the
+    * wedge join shuffles on the wedge center, the closing check on the
+    * (x, y) edge key. No windows, no driver loops. Each triangle is
+    * counted exactly once (at its lowest-ranked vertex); the wedge
+    * ordering ties break on (deg, id) so both engines enumerate the
+    * identical wedge set. */
   def qGraphTriangles(s: SparkSession, d: String): DataFrame = {
     val (edges, deg, closed) = triangleParts(s, d)
     val tri = closed.agg(count(lit(1)).as("n_triangles"))

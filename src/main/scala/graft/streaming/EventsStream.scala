@@ -36,51 +36,29 @@ case class InterpBucket(
     n_events: Long, interp_value: Double)
 case class EwmaEvent(
     user_id: Long, event_id: Long, ts: java.sql.Timestamp, value: Double)
-case class EwmaState(
-    pending: Seq[(Long, Long, Double)], recent: Seq[Double])
 case class EwmaPoint(user_id: Long, event_id: Long, ewma: Double)
 case class TransEvent(
     user_id: Long, event_id: Long, ts: java.sql.Timestamp,
     event_type: String)
-case class TransState(
-    pending: Seq[(Long, Long, String)], last: Option[String])
 case class TransPair(
     user_id: Long, event_id: Long, from_type: String, to_type: String)
-case class FunnelState(
-    pending: Seq[(Long, Long, String)],
+case class FunnelCarry(
     tView: Option[Long], tClick: Option[Long], tPurchase: Option[Long])
 case class FunnelRow(
     user_id: Long, t_view: Option[Long], t_click: Option[Long],
     t_purchase: Option[Long], stage: Int)
-/** COMPATIBILITY NOTE: lastEmitted and nLate were added after the
-  * original 3-field shape shipped; a streaming checkpoint written by
-  * the old encoder will NOT deserialize into this state — restart
-  * cusumStream from a fresh checkpoint directory after upgrading
-  * (acceptable here: CUSUM state rebuilds from one window of events;
-  * a schema-evolution-tolerant encoder would be the alternative if
-  * the state ever becomes expensive to rebuild). */
-case class AttrState(
-    pending: Seq[(Long, Long, String)], clicks: Seq[Long])
 case class AttrRow(
     event_id: Long, user_id: Long, ts_us: Long,
     first_click_us: Option[Long], last_click_us: Option[Long],
     n_clicks_win: Long)
-case class CusumCarry(
-    pending: Seq[(Long, Long)], open: Map[Long, Long], c: Long,
-    lastEmitted: Long, nLate: Long)
+case class CusumCarry(open: Map[Long, Long], c: Long)
 case class CusumPoint(
     event_type: String, bucket_start: java.sql.Timestamp, cusum: Double)
 case class RateRow(
     user_id: Long, event_id: Long, ts_us: Long, event_type: String,
     c60: Long, throttled: Boolean)
-case class RateCarry(
-    pending: Seq[(Long, Long, String)], recent: Seq[Long],
-    lastHorizon: Long, nLate: Long)
 case class HystCarry(
-    pending: Seq[Long], open: Map[Long, Long], state: Int,
-    lastEmitted: Long, started: Boolean, nLate: Long)
-case class TwapCarry(
-    pending: Seq[(Long, Long, Long)], lastHorizon: Long, nLate: Long)
+    open: Map[Long, Long], state: Int, lastEmitted: Option[Long])
 case class TwapHold(
     user_id: Long, day_us: Long, ts_us: Long, val_c: Long, dt_us: Long)
 case class HystPoint(
@@ -98,6 +76,7 @@ case class HystPoint(
   * checkpoint; the watermark bounds state for late data.
   */
 object EventsStream {
+  import EventTimeFold.micros
 
   /** Tumbling 1-hour aggregate with a 2-hour watermark. */
   def tumblingAgg(events: DataFrame): DataFrame =
@@ -220,20 +199,6 @@ object EventsStream {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
 
-  /** Gap-based sessions with Spark's NATIVE session_window state — the
-    * streaming twin of the batch lag+cumsum sessionization: adjacent
-    * windows within `gap` merge in the state store, the watermark
-    * closes and emits finished sessions. */
-  def sessionAgg(events: DataFrame, gap: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-      .select(col("user_id"),
-        col("sw.start").as("session_start"), col("sw.end").as("session_end"),
-        col("n_events"), col("sum_value"))
-
   /** Streaming twin of queries.Events.qSessionNative (the 20th twin):
     * gap sessions on Spark's native session_window STATE with a real
     * watermark — adjacent windows within the gap MERGE in the session
@@ -335,8 +300,7 @@ object EventsStream {
         (uid: Long, rows: Iterator[CdcEvent], state: GroupState[CompactRow]) =>
           var cur = state.getOption.orNull
           rows.foreach { r =>
-            // µs event time, matching the batch unix_micros(ts)
-            val tsUs = r.ts.getTime * 1000L + (r.ts.getNanos / 1000L) % 1000L
+            val tsUs = micros(r.ts)
             if (cur == null || tsUs > cur.last_ts_us ||
                 (tsUs == cur.last_ts_us && r.event_id > cur.last_event_id))
               cur = CompactRow(uid, tsUs, r.event_id, r.event_type, r.value,
@@ -368,13 +332,11 @@ object EventsStream {
         org.apache.spark.sql.streaming.OutputMode.Update(),
         GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[CdcEvent], state: GroupState[Scd2State]) =>
-          def tsUs(r: CdcEvent): Long =
-            r.ts.getTime * 1000L + (r.ts.getNanos / 1000L) % 1000L
-          val sorted = rows.toSeq.sortBy(r => (tsUs(r), r.event_id))
+          val sorted = rows.map(r => (micros(r.ts), r)).toSeq
+            .sortBy { case (t, r) => (t, r.event_id) }
           var cur = state.getOption.orNull
           val closed = scala.collection.mutable.ListBuffer.empty[VersionRow]
-          sorted.foreach { r =>
-            val t = tsUs(r)
+          sorted.foreach { case (t, r) =>
             if (cur == null) cur = Scd2State(r.event_type, t)
             else if (cur.eventType != r.event_type) {
               closed += VersionRow(uid, cur.eventType, cur.validFromUs,
@@ -416,14 +378,12 @@ object EventsStream {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[CdcEvent], state: GroupState[Scd2State]) =>
-          def tsUs(r: CdcEvent): Long =
-            r.ts.getTime * 1000L + (r.ts.getNanos / 1000L) % 1000L
-          val sorted = rows.toSeq.sortBy(r =>
-            (tsUs(r), if (r.event_type == "purchase") 1 else 0, r.event_id))
+          val sorted = rows.map(r => (micros(r.ts), r)).toSeq
+            .sortBy { case (t, r) =>
+              (t, if (r.event_type == "purchase") 1 else 0, r.event_id) }
           var cur = state.getOption.orNull
           val out = scala.collection.mutable.ListBuffer.empty[PitRow]
-          sorted.foreach { r =>
-            val t = tsUs(r)
+          sorted.foreach { case (t, r) =>
             if (r.event_type == "purchase")
               out += PitRow(r.event_id, uid, t,
                 Option(cur).map(_.eventType),
@@ -474,7 +434,7 @@ object EventsStream {
             .getOrElse(GapfillState(Long.MinValue, None, Map.empty))
           var open = prev.open
           rows.foreach { r =>
-            val b = Math.floorDiv(r.ts.getTime * 1000L, stepMicros)
+            val b = Math.floorDiv(micros(r.ts), stepMicros)
             val (n, s) = open.getOrElse(b, (0L, 0.0))
             open = open.updated(b, (n + 1, s + r.value))
           }
@@ -517,9 +477,7 @@ object EventsStream {
             state.update(GapfillState(next, locf, open))
             // wake this group when the watermark passes the end of the
             // next unemitted bucket, even if no new rows arrive for it
-            state.setTimeoutTimestamp(
-              math.max((next + 1) * stepMicros / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
+            EventTimeFold.arm(state, (next + 1) * stepMicros / 1000L)
             out.result().iterator
           }
       }
@@ -581,7 +539,7 @@ object EventsStream {
             .getOrElse(InterpState(Long.MinValue, None, Map.empty))
           var open = prev.open
           rows.foreach { r =>
-            val b = Math.floorDiv(r.ts.getTime * 1000L, stepMicros)
+            val b = Math.floorDiv(micros(r.ts), stepMicros)
             val (n, s) = open.getOrElse(b, (0L, 0.0))
             open = open.updated(b, (n + 1, s + r.value))
           }
@@ -628,9 +586,7 @@ object EventsStream {
             // a finalized right anchor, so there is nothing to wake
             // for until then
             if (open.nonEmpty)
-              state.setTimeoutTimestamp(
-                math.max((open.keys.min + 1) * stepMicros / 1000L,
-                  state.getCurrentWatermarkMs() + 1L))
+              EventTimeFold.arm(state, (open.keys.min + 1) * stepMicros / 1000L)
             out.result().iterator
           }
       }
@@ -646,7 +602,8 @@ object EventsStream {
     * ≤7-value ring plus only the not-yet-final rows (bounded by the
     * watermark delay × event rate, like any append-mode aggregate);
     * an event-time timeout wakes idle keys so buffered rows flush as
-    * the watermark advances even with no new data for that user.
+    * the watermark advances even with no new data for that user. The
+    * buffer, the µs clock and the timeout are EventTimeFold's.
     *
     * Arithmetic mirrors the batch plan STEP FOR STEP (same
     * Events.EwmaWeights bits, same HALF_UP-on-valueOf rounding at the
@@ -664,41 +621,23 @@ object EventsStream {
     // then ONE decimal→double conversion (never round through a double)
     def close6(sum: java.math.BigDecimal): Double =
       sum.setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, EwmaPoint](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[EwmaEvent], state: GroupState[EwmaState]) =>
-          val prev = state.getOption.getOrElse(EwmaState(Nil, Nil))
-          val pending = prev.pending ++
-            rows.map(r => (r.ts.getTime * 1000L, r.event_id, r.value))
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          // a row at-or-before the watermark is FINAL: nothing earlier
-          // can still arrive, so its kernel position cannot change
-          val (ripe, hold) = pending.partition(_._1 <= horizonUs)
-          var recent = prev.recent
-          val out = ripe.sortBy(t => (t._1, t._2)).map {
-            case (_, eid, v) =>
-              val taps = v +: recent
-              // batch verbatim: round(tap·w, 9) on the double, cast
-              // back to the 9 dp decimal grid, exact decimal sum,
-              // close at 6 dp — term order cannot matter
-              val sum = weights.zip(taps)
-                .map { case (w, t) => r9(r9(t * w).doubleValue()) }
-                .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-              recent = (v +: recent).take(graft.queries.Events.EwmaLags - 1)
-              EwmaPoint(uid, eid, close6(sum))
-          }
-          state.update(EwmaState(hold, recent))
-          // wake when the watermark passes the earliest held row
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+    EventTimeFold(events, watermarkDelay, Seq.empty[Double])(
+      _.user_id, e => (micros(e.ts), e.event_id, e.value)) {
+      (uid, ring, released, _) =>
+        var recent = ring
+        val out = released.map { case (_, eid, v) =>
+          val taps = v +: recent
+          // batch verbatim: round(tap·w, 9) on the double, cast back to
+          // the 9 dp decimal grid, exact decimal sum, close at 6 dp —
+          // term order cannot matter
+          val sum = weights.zip(taps)
+            .map { case (w, t) => r9(r9(t * w).doubleValue()) }
+            .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
+          recent = taps.take(graft.queries.Events.EwmaLags - 1)
+          EwmaPoint(uid, eid, close6(sum))
+        }
+        (recent, out, Nil)
+    }
   }
 
   /** Streaming HISTOGRAM QUANTILES — per-ingest-window p50/p95/p99
@@ -751,10 +690,11 @@ object EventsStream {
     * emitted double is the one correctly-rounded conversion — the
     * spec asserts double-identical output vs the batch query under
     * out-of-order arrival. Rows landing in a bucket that already
-    * finalized (ts <= watermark on arrival) are dropped as late and
-    * counted — never folded out of order or re-emitted. State per
-    * type: the not-yet-final rows (watermark-delay-bounded) + open
-    * bucket sums + the carry, last-emitted bucket, and late count. */
+    * finalized (ts <= watermark on arrival) never reach the fold:
+    * Spark drops them as late (EventTimeFold), so they are never
+    * folded out of order or re-emitted. State per type: the
+    * not-yet-final rows (watermark-delay-bounded) + open bucket sums
+    * + the carry. */
   def cusumStream(
       events: Dataset[TypedEvent],
       kTarget: java.math.BigDecimal,
@@ -767,53 +707,26 @@ object EventsStream {
       java.math.BigDecimal.valueOf(v)
         .setScale(4, java.math.RoundingMode.HALF_UP)
         .unscaledValue().longValueExact()
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumCarry, CusumPoint](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (typ: String, rows: Iterator[TypedEvent],
-            state: GroupState[CusumCarry]) =>
-          val prev = state.getOption.getOrElse(
-            CusumCarry(Nil, Map.empty, 0L, Long.MinValue, 0L))
-          val pending = prev.pending ++
-            rows.map(r => (r.ts.getTime * 1000L, q4(r.value)))
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, hold) = pending.partition(_._1 <= horizonUs)
-          var open = prev.open
-          // a ripe row whose bucket was already finalized in an earlier
-          // batch (it slipped in at ts <= watermark) must NOT re-create
-          // the closed bucket: folding it now would recurse out of
-          // order and emit a duplicate point in append mode. Drop it as
-          // late — the drop-late semantics of Spark's own windowed
-          // aggregates — and count it in the carry for observability.
-          var late = prev.nLate
-          ripe.foreach { case (ts, q) =>
-            val b = ts / hourUs * hourUs
-            if (b <= prev.lastEmitted) late += 1L
-            else open = open.updated(b, open.getOrElse(b, 0L) + q)
-          }
-          // a bucket whose END the watermark passed is final: hold
-          // rows all have ts > horizon, hence sit in later buckets
-          val (closed, still) =
-            open.partition { case (b, _) => b + hourUs <= horizonUs }
-          var c = prev.c
-          val out = closed.keys.toSeq.sorted.map { b =>
-            c = math.max(0L, c + closed(b) - kq)
-            CusumPoint(typ, new java.sql.Timestamp(b / 1000L),
-              c.toDouble / 10000.0)
-          }
-          val lastEmitted =
-            if (closed.isEmpty) prev.lastEmitted else closed.keys.max
-          state.update(CusumCarry(hold, still, c, lastEmitted, late))
-          val wakes = still.keys.map(b => (b + hourUs) / 1000L) ++
-            hold.map(_._1 / 1000L + 1L)
-          if (wakes.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(wakes.min, state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+    EventTimeFold(events, watermarkDelay, CusumCarry(Map.empty, 0L))(
+      _.event_type, e => (micros(e.ts), q4(e.value))) {
+      (typ, carry, released, horizonUs) =>
+        var open = carry.open
+        released.foreach { case (ts, q) =>
+          val b = ts / hourUs * hourUs
+          open = open.updated(b, open.getOrElse(b, 0L) + q)
+        }
+        // a bucket whose END the watermark passed is final: held rows
+        // all have ts > horizon, hence sit in later buckets
+        val (closed, still) =
+          open.partition { case (b, _) => b + hourUs <= horizonUs }
+        var c = carry.c
+        val out = closed.keys.toSeq.sorted.map { b =>
+          c = math.max(0L, c + closed(b) - kq)
+          CusumPoint(typ, new java.sql.Timestamp(b / 1000L),
+            c.toDouble / 10000.0)
+        }
+        (CusumCarry(still, c), out, still.keys.map(_ + hourUs))
+    }
   }
 
   /** Streaming Schmitt-trigger alerting — the PRODUCTION deployment
@@ -833,10 +746,53 @@ object EventsStream {
     *
     * All integer comparisons — bit-identical to the batch fold,
     * spec-asserted under out-of-order arrival. Rows landing in a
-    * finalized bucket drop as late and are counted (the cusumStream
-    * rule). State per type: watermark-bounded pending rows + open
-    * bucket counts + one int of trigger state. Event-time timeouts
-    * keep the dense emission flowing through silent hours. */
+    * finalized bucket never reach the fold (the cusumStream rule). State per type: watermark-bounded pending
+    * rows + open bucket counts + one int of trigger state and the
+    * last emitted hour. Event-time timeouts keep the dense emission
+    * flowing through silent hours. */
+  def hysteresisStream(
+      events: Dataset[TypedEvent],
+      hi: Long, lo: Long,
+      watermarkDelay: String = "10 minutes"): Dataset[HystPoint] = {
+    import events.sparkSession.implicits._
+    val hourUs = 3600000000L
+    EventTimeFold(events, watermarkDelay, HystCarry(Map.empty, 0, None))(
+      _.event_type, e => micros(e.ts)) {
+      (typ, carry, released, horizonUs) =>
+        var open = carry.open
+        released.foreach { ts =>
+          val b = ts / hourUs * hourUs
+          open = open.updated(b, open.getOrElse(b, 0L) + 1L)
+        }
+        // dense finalization: every hour from the cursor whose END the
+        // watermark passed is final — observed or silent alike
+        val out = scala.collection.mutable.ListBuffer.empty[HystPoint]
+        var st = carry.state
+        var lastEmitted = carry.lastEmitted
+        // the dense cursor: resumes one hour past the last emission,
+        // or anchors at the type's first observed bucket, so a
+        // not-yet-finalizable first bucket never poisons the resume
+        var cursor = lastEmitted.map(_ + hourUs).getOrElse(
+          if (open.nonEmpty) open.keys.min else Long.MaxValue)
+        while (cursor != Long.MaxValue && cursor + hourUs <= horizonUs) {
+          val x = open.getOrElse(cursor, 0L)
+          open -= cursor
+          val next =
+            if (x > hi) 1 else if (x < lo) 0 else st
+          out += HystPoint(typ,
+            new java.sql.Timestamp(cursor / 1000L), x, next,
+            next == 1 && st == 0)
+          st = next
+          lastEmitted = Some(cursor)
+          cursor += hourUs
+        }
+        // wake when the next dense hour (or an open bucket) can
+        // finalize, so silent hours keep emitting
+        (HystCarry(open, st, lastEmitted), out.toSeq,
+          lastEmitted.map(_ + 2 * hourUs) ++ open.keys.map(_ + hourUs))
+    }
+  }
+
   /** Streaming sliding-log rate limiter — the per-user twin of
     * q_events_rate_limit's verdict pass (Events.rateLimitVerdicts):
     * for each event at t, c60 counts the user's events in the closed
@@ -845,8 +801,8 @@ object EventsStream {
     * then is the count of ≤ t peers final). State per user: pending
     * unfinalized rows plus the finalized timestamps within 60 s of
     * the horizon — O(rate × window), watermark-bounded. Rows arriving
-    * with ts at or behind the previous horizon are late: dropped and
-    * counted (the cusumStream rule) — processing them would need
+    * with ts at or behind the previous watermark are late: Spark
+    * drops them (the cusumStream rule) — processing them would need
     * peers the 60 s retention has already released. */
   def rateLimitStream(
       events: Dataset[CdcEvent],
@@ -854,37 +810,17 @@ object EventsStream {
       watermarkDelay: String = "10 minutes"): Dataset[RateRow] = {
     import events.sparkSession.implicits._
     val winUs = 60000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RateCarry, RateRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[CdcEvent], state: GroupState[RateCarry]) =>
-          def tsUs(r: CdcEvent): Long =
-            r.ts.getTime * 1000L + (r.ts.getNanos / 1000L) % 1000L
-          val prev = state.getOption.getOrElse(
-            RateCarry(Nil, Nil, Long.MinValue, 0L))
-          val fresh = rows.map(r =>
-            (tsUs(r), r.event_id, r.event_type)).toSeq
-          val (lateRows, ok) = fresh.partition(_._1 <= prev.lastHorizon)
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, hold) = (prev.pending ++ ok).partition(_._1 <= horizonUs)
-          // every known finalized timestamp covering the ripe range
-          val known = prev.recent ++ ripe.map(_._1)
-          val out = ripe.sortBy(t => (t._1, t._2)).map { case (t, id, typ) =>
-            val c60 = known.count(x => x > t - winUs && x <= t).toLong
-            RateRow(uid, id, t, typ, c60, c60 > n)
-          }
-          state.update(RateCarry(hold,
-            known.filter(_ > horizonUs - winUs).sorted,
-            horizonUs, prev.nLate + lateRows.size))
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+    EventTimeFold(events, watermarkDelay, Seq.empty[Long])(
+      _.user_id, e => (micros(e.ts), e.event_id, e.event_type)) {
+      (uid, recent, released, horizonUs) =>
+        // every known finalized timestamp covering the released range
+        val known = recent ++ released.map(_._1)
+        val out = released.map { case (t, id, typ) =>
+          val c60 = known.count(x => x > t - winUs && x <= t).toLong
+          RateRow(uid, id, t, typ, c60, c60 > n)
+        }
+        (known.filter(_ > horizonUs - winUs).sorted, out, Nil)
+    }
   }
 
   /** Streaming twin of q_events_twap's HOLD-INTERVAL MATERIALIZATION —
@@ -894,12 +830,14 @@ object EventsStream {
     * once, when the watermark proves the close can no longer move —
     * close = min(successor ts, own day end) is final once the horizon
     * passes it, because any later arrival at or below the horizon is
-    * late-by-definition and drops (the cusumStream rule). The daily
+    * late-by-definition and drops (the cusumStream rule). The carry
+    * is the last released row: its hold closes when its successor is
+    * released, or when its day end passes the watermark. The daily
     * TWAP downstream is a plain windowed SUM of these deltas. State
-    * per user = the unfinalized pending suffix, bounded by the
-    * watermark delay plus at most one open day; event-time timeouts
-    * close the final interval of a gone-quiet user at its day end.
-    * Spec-asserted equal to the batch hold table
+    * per user = the unfinalized pending rows plus that one open row,
+    * bounded by the watermark delay plus at most one open day;
+    * event-time timeouts close the final interval of a gone-quiet
+    * user at its day end. Spec-asserted equal to the batch hold table
     * (queries.Events.twapHolds) on finalized rows under out-of-order
     * arrival. */
   def twapStream(
@@ -907,121 +845,27 @@ object EventsStream {
       watermarkDelay: String = "10 minutes"): Dataset[TwapHold] = {
     import events.sparkSession.implicits._
     val dayUs = 86400000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TwapCarry, TwapHold](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[CdcEvent], state: GroupState[TwapCarry]) =>
-          def tsUs(r: CdcEvent): Long =
-            r.ts.getTime * 1000L + (r.ts.getNanos / 1000L) % 1000L
-          val prev = state.getOption.getOrElse(
-            TwapCarry(Nil, Long.MinValue, 0L))
-          val fresh = rows.map(r =>
-            (tsUs(r), r.event_id, math.round(r.value * 100))).toSeq
-          val (lateRows, ok) = fresh.partition(_._1 <= prev.lastHorizon)
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val all = (prev.pending ++ ok).sortBy(t => (t._1, t._2))
-          // prefix emission: e_i is final when its close (successor ts
-          // or own day end) is at or below the horizon; e_i final
-          // implies e_{i-1} final, so the finalized set is a prefix
-          val out = scala.collection.mutable.ListBuffer.empty[TwapHold]
-          var keep = 0
-          var i = 0
-          while (i < all.length && keep == i) {
-            val (t, _, vc) = all(i)
-            val dayEnd = (t / dayUs + 1L) * dayUs
-            val close =
-              if (i + 1 < all.length) math.min(all(i + 1)._1, dayEnd)
-              else dayEnd
-            if (close <= horizonUs) {
-              out += TwapHold(uid, t / dayUs * dayUs, t, vc, close - t)
-              keep = i + 1
-            }
-            i += 1
+    def dayEnd(t: Long): Long = (t / dayUs + 1L) * dayUs
+    EventTimeFold(events, watermarkDelay, Option.empty[(Long, Long)])(
+      _.user_id, e => (micros(e.ts), e.event_id, math.round(e.value * 100))) {
+      (uid, last, released, horizonUs) =>
+        def hold(t: Long, vc: Long, close: Long) =
+          TwapHold(uid, t / dayUs * dayUs, t, vc, close - t)
+        val out = scala.collection.mutable.ListBuffer.empty[TwapHold]
+        var open = last
+        released.foreach { case (t, _, vc) =>
+          open.foreach { case (pt, pvc) =>
+            out += hold(pt, pvc, math.min(t, dayEnd(pt)))
           }
-          val hold = all.drop(keep)
-          state.update(
-            TwapCarry(hold, horizonUs, prev.nLate + lateRows.size))
-          if (hold.nonEmpty) {
-            val headDayEnd = (hold.head._1 / dayUs + 1L) * dayUs
-            state.setTimeoutTimestamp(
-              math.max(headDayEnd / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          out.iterator
-      }
-  }
-
-  def hysteresisStream(
-      events: Dataset[TypedEvent],
-      hi: Long, lo: Long,
-      watermarkDelay: String = "10 minutes"): Dataset[HystPoint] = {
-    import events.sparkSession.implicits._
-    val hourUs = 3600000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[HystCarry, HystPoint](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (typ: String, rows: Iterator[TypedEvent],
-            state: GroupState[HystCarry]) =>
-          val prev = state.getOption.getOrElse(
-            HystCarry(Nil, Map.empty, 0, Long.MinValue, false, 0L))
-          val pending = prev.pending ++ rows.map(_.ts.getTime * 1000L)
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, hold) = pending.partition(_ <= horizonUs)
-          var open = prev.open
-          var late = prev.nLate
-          ripe.foreach { ts =>
-            val b = ts / hourUs * hourUs
-            if (prev.started && b <= prev.lastEmitted) late += 1L
-            else open = open.updated(b, open.getOrElse(b, 0L) + 1L)
-          }
-          // dense finalization: every hour from the cursor (first
-          // observed bucket on the first batch) whose END the
-          // watermark passed is final — observed or silent alike
-          val out = scala.collection.mutable.ListBuffer.empty[HystPoint]
-          var st = prev.state
-          var lastEmitted = prev.lastEmitted
-          var started = prev.started
-          // the dense cursor: resumes one hour past the last emission,
-          // or anchors at the type's first observed bucket; `started`
-          // flips only on the first actual emission so a not-yet-
-          // finalizable first bucket never poisons the resume point
-          var cursor =
-            if (started) lastEmitted + hourUs
-            else if (open.nonEmpty) open.keys.min
-            else Long.MaxValue
-          while (cursor != Long.MaxValue && cursor + hourUs <= horizonUs) {
-            val x = open.getOrElse(cursor, 0L)
-            open -= cursor
-            val next =
-              if (x > hi) 1 else if (x < lo) 0 else st
-            out += HystPoint(typ,
-              new java.sql.Timestamp(cursor / 1000L), x, next,
-              next == 1 && st == 0)
-            st = next
-            started = true
-            lastEmitted = cursor
-            cursor += hourUs
-          }
-          state.update(
-            HystCarry(hold, open, st, lastEmitted, started, late))
-          // wake when the next dense hour (or a held row's bucket)
-          // can finalize, so silent hours keep emitting
-          val wakes =
-            (if (started) Seq((lastEmitted + 2 * hourUs) / 1000L)
-             else Nil) ++
-            open.keys.map(b => (b + hourUs) / 1000L) ++
-            hold.map(_ / 1000L + 1L)
-          if (wakes.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(wakes.min, state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+          open = Some((t, vc))
+        }
+        open match {
+          case Some((t, vc)) if dayEnd(t) <= horizonUs =>
+            out += hold(t, vc, dayEnd(t))
+            (None, out.toSeq, Nil)
+          case _ => (open, out.toSeq, open.map(o => dayEnd(o._1)))
+        }
+    }
   }
 
   /** Streaming twin of q_events_transitions' PAIR EXTRACTION: emit the
@@ -1036,34 +880,18 @@ object EventsStream {
       events: Dataset[TransEvent],
       watermarkDelay: String = "10 minutes"): Dataset[TransPair] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TransPair](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[TransEvent], state: GroupState[TransState]) =>
-          val prev = state.getOption.getOrElse(TransState(Nil, None))
-          val pending = prev.pending ++
-            rows.map(r => (r.ts.getTime * 1000L, r.event_id, r.event_type))
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          // finalized rows: nothing earlier can still arrive, so the
-          // predecessor of each ripe row is fixed for good
-          val (ripe, hold) = pending.partition(_._1 <= horizonUs)
-          var last = prev.last
-          val out = ripe.sortBy(t => (t._1, t._2)).flatMap {
-            case (_, eid, typ) =>
-              val pair = last.map(TransPair(uid, eid, _, typ))
-              last = Some(typ)
-              pair
-          }
-          state.update(TransState(hold, last))
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+    EventTimeFold(events, watermarkDelay, Option.empty[String])(
+      _.user_id, e => (micros(e.ts), e.event_id, e.event_type)) {
+      (uid, lastType, released, _) =>
+        // released rows are final, so each one's predecessor is fixed
+        var last = lastType
+        val out = released.flatMap { case (_, eid, typ) =>
+          val pair = last.map(TransPair(uid, eid, _, typ))
+          last = Some(typ)
+          pair
+        }
+        (last, out, Nil)
+    }
   }
 
   /** Streaming twin of queries.Events.qEventsAttribution: each
@@ -1086,42 +914,27 @@ object EventsStream {
       watermarkDelay: String = "10 minutes"): Dataset[AttrRow] = {
     import events.sparkSession.implicits._
     val win = graft.queries.Events.AttrWindowUs
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[TransEvent], state: GroupState[AttrState]) =>
-          val prev = state.getOption.getOrElse(AttrState(Nil, Nil))
-          val pending = prev.pending ++
-            rows.map(r => (r.ts.getTime * 1000L, r.event_id, r.event_type))
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, hold) = pending.partition(_._1 <= horizonUs)
-          var clicks = prev.clicks // ascending finalized click times
-          val out = scala.collection.mutable.ListBuffer.empty[AttrRow]
-          ripe.groupBy(_._1).toSeq.sortBy(_._1).foreach {
-            case (ts, group) =>
-              // all of this timestamp's clicks enter the buffer first:
-              // RANGE-frame peers of any purchase at the same instant
-              clicks = clicks ++ group.filter(_._3 == "click").map(_._1)
-              group.sortBy(_._2).foreach { case (_, eid, typ) =>
-                if (typ == "purchase") {
-                  val inWin = clicks.dropWhile(_ < ts - win)
-                  clicks = inWin // older clicks are dead for later rows too
-                  out += AttrRow(eid, uid, ts,
-                    inWin.headOption, inWin.lastOption, inWin.size.toLong)
-                }
+    EventTimeFold(events, watermarkDelay, Seq.empty[Long])(
+      _.user_id, e => (micros(e.ts), e.event_id, e.event_type)) {
+      (uid, buffered, released, horizonUs) =>
+        var clicks = buffered // ascending finalized click times
+        val out = scala.collection.mutable.ListBuffer.empty[AttrRow]
+        released.groupBy(_._1).toSeq.sortBy(_._1).foreach {
+          case (ts, group) =>
+            // all of this timestamp's clicks enter the buffer first:
+            // RANGE-frame peers of any purchase at the same instant
+            clicks = clicks ++ group.filter(_._3 == "click").map(_._1)
+            group.foreach { case (_, eid, typ) =>
+              if (typ == "purchase") {
+                val inWin = clicks.dropWhile(_ < ts - win)
+                clicks = inWin // older clicks are dead for later rows too
+                out += AttrRow(eid, uid, ts,
+                  inWin.headOption, inWin.lastOption, inWin.size.toLong)
               }
-          }
-          clicks = clicks.dropWhile(_ < horizonUs - win)
-          state.update(AttrState(hold, clicks))
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
+            }
+        }
+        (clicks.dropWhile(_ < horizonUs - win), out.toSeq, Nil)
+    }
   }
 
   /** Streaming FUNNEL twin of queries.Events.qEventsFunnel: each
@@ -1144,37 +957,26 @@ object EventsStream {
       events: Dataset[TransEvent],
       watermarkDelay: String = "10 minutes"): Dataset[FunnelRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[TransEvent], state: GroupState[FunnelState]) =>
-          val prev = state.getOption.getOrElse(FunnelState(Nil, None, None, None))
-          val pending = prev.pending ++
-            rows.map(r => (r.ts.getTime * 1000L, r.event_id, r.event_type))
-          val horizonUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, hold) = pending.partition(_._1 <= horizonUs)
-          var (tv, tc, tp) = (prev.tView, prev.tClick, prev.tPurchase)
-          val stage0 = Seq(tv, tc, tp).count(_.isDefined)
-          ripe.sortBy(t => (t._1, t._2)).foreach { case (ts, _, typ) =>
-            typ match {
-              case "view" if tv.isEmpty => tv = Some(ts)
-              case "click" if tc.isEmpty && tv.exists(ts > _) => tc = Some(ts)
-              case "purchase" if tp.isEmpty && tc.exists(ts > _) =>
-                tp = Some(ts)
-              case _ => ()
-            }
+    EventTimeFold(events, watermarkDelay, FunnelCarry(None, None, None))(
+      _.user_id, e => (micros(e.ts), e.event_id, e.event_type)) {
+      (uid, reached, released, _) =>
+        var (tv, tc, tp) = (reached.tView, reached.tClick, reached.tPurchase)
+        released.foreach { case (ts, _, typ) =>
+          typ match {
+            case "view" if tv.isEmpty => tv = Some(ts)
+            case "click" if tc.isEmpty && tv.exists(ts > _) => tc = Some(ts)
+            case "purchase" if tp.isEmpty && tc.exists(ts > _) =>
+              tp = Some(ts)
+            case _ => ()
           }
-          val stage1 = Seq(tv, tc, tp).count(_.isDefined)
-          state.update(FunnelState(hold, tv, tc, tp))
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          if (stage1 > stage0) Iterator(FunnelRow(uid, tv, tc, tp, stage1))
-          else Iterator.empty
-      }
+        }
+        val stage0 = Seq(reached.tView, reached.tClick, reached.tPurchase)
+          .count(_.isDefined)
+        val stage1 = Seq(tv, tc, tp).count(_.isDefined)
+        (FunnelCarry(tv, tc, tp),
+          if (stage1 > stage0) Seq(FunnelRow(uid, tv, tc, tp, stage1))
+          else Nil,
+          Nil)
+    }
   }
 }

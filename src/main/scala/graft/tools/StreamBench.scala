@@ -58,7 +58,14 @@ object StreamBench {
       "ohlc" ->
         (df => graft.streaming.EventsStream.ohlcStream(df, "2 hours")),
       "dedup" ->
-        (df => graft.streaming.EventsStream.dedupStream(df, "2 hours")))
+        (df => graft.streaming.EventsStream.dedupStream(df, "2 hours")),
+      "ewma" -> (df => graft.streaming.EventsStream
+        .ewmaStream(df.as[graft.streaming.EwmaEvent]).toDF()),
+      "transitions" -> (df => graft.streaming.EventsStream
+        .transitionsStream(df.as[graft.streaming.TransEvent]).toDF()),
+      "cusum" -> (df => graft.streaming.EventsStream
+        .cusumStream(df.as[graft.streaming.TypedEvent],
+          new java.math.BigDecimal("50")).toDF()))
 
     var sid = 0
     val results = twins.map { case (name, twin) =>
@@ -78,11 +85,14 @@ object StreamBench {
         .start()
       val t0 = System.nanoTime()
       // bounded driver memory: pull the checkpointed feed one chunk at
-      // a time (toLocalIterator fetches a partition at a time)
+      // a time (toLocalIterator fetches a partition at a time). Each
+      // chunk is its own micro-batch, so batch counts and max batch ms
+      // do not depend on how fast the trigger drains the source
       import scala.jdk.CollectionConverters._
-      feedDf.toLocalIterator().asScala.grouped(chunk)
-        .foreach(g => ms2.addData(g.toIndexedSeq))
-      q2.processAllAvailable()
+      feedDf.toLocalIterator().asScala.grouped(chunk).foreach { g =>
+        ms2.addData(g.toIndexedSeq)
+        q2.processAllAvailable()
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       val progress = q2.recentProgress
       val batches = progress.length

@@ -72,31 +72,6 @@ class StreamingSpec extends SparkSpec {
     assert(out(2L) == ((1L, 5.0)))
   }
 
-  test("streaming session_window agg equals batch session_window agg") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // two users; user 1 has two sessions separated by a >10 min gap
-    val rows = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
-      (1L, Timestamp.valueOf("2024-01-01 10:05:00"), 2.0),
-      (1L, Timestamp.valueOf("2024-01-01 11:00:00"), 3.0),
-      (2L, Timestamp.valueOf("2024-01-01 10:02:00"), 4.0))
-    val stream = MemoryStream[(Long, Timestamp, Double)]
-    stream.addData(rows)
-    val df = stream.toDF().toDF("user_id", "ts", "value")
-    val q = EventsStream.sessionAgg(df)
-      .writeStream.format("memory").queryName("session_out")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("session_out")
-      .orderBy("user_id", "session_start").collect()
-    val batch = EventsStream.sessionAgg(
-      rows.toDF("user_id", "ts", "value"))
-      .orderBy("user_id", "session_start").collect()
-    assert(streamed.sameElements(batch))
-    assert(streamed.length == 3, "expected 3 sessions (2 for user 1)")
-  }
-
   test("streaming session twin: append-mode finalized sessions equal batch " +
     "under out-of-order arrival, 599/600/601 boundary pinned") {
     implicit val sqlCtx = spark.sqlContext
@@ -1501,5 +1476,127 @@ class StreamingSpec extends SparkSpec {
         ((r.getLong(4), r.getLong(5)))).toMap
     assert(streamed == batch,
       s"stream/batch hold drift:\n$streamed\nvs\n$batch")
+  }
+
+  test("sub-millisecond event times order the buffered twins as unix_micros does") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.{Dataset, Encoder}
+    import graft.streaming.{AttrRow, EwmaEvent, EwmaPoint, FunnelRow,
+      TransEvent, TransPair}
+    def us(t: String): Long = {
+      val x = Timestamp.valueOf(t)
+      x.getTime * 1000L + x.getNanos / 1000L % 1000L
+    }
+    // user 7: a view at .000100 and a click at .000600 of ONE
+    // millisecond (the click is strictly later), then a click at
+    // 10:00:01.000200 whose event_id (4) is the reverse of its time
+    // order against the purchase at 10:00:01.000900 (id 3). A ms
+    // clock ties both pairs and breaks the ties by event_id.
+    val rows: Seq[(Long, Timestamp, Long, String, Double)] = Seq(
+      (1L, "2024-03-01 10:00:00.0001", "view", 10.0),
+      (2L, "2024-03-01 10:00:00.0006", "click", 20.0),
+      (3L, "2024-03-01 10:00:01.0009", "purchase", 30.0),
+      (4L, "2024-03-01 10:00:01.0002", "click", 40.0))
+      .map { case (id, t, typ, v) => (id, Timestamp.valueOf(t), 7L, typ, v) }
+    // pushes the watermark to 10:50; itself stays held
+    val sentinel: (Long, Timestamp, Long, String, Double) =
+      (9L, Timestamp.valueOf("2024-03-01 11:00:00"), 9L, "other", 0.0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_subms_tw").toString
+    (rows :+ sentinel).toDF("event_id", "ts", "user_id", "event_type", "value")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    // the later millisecond arrives first; an empty batch fires timeouts
+    def run[E: Encoder, O: Encoder](
+        name: String, mk: ((Long, Timestamp, Long, String, Double)) => E)(
+        twin: Dataset[E] => Dataset[O]): Seq[O] = {
+      val stream = MemoryStream[E]
+      val q = twin(stream.toDS()).writeStream.format("memory")
+        .queryName(name).outputMode("append").start()
+      try {
+        stream.addData(rows.drop(2).map(mk)); q.processAllAvailable()
+        stream.addData(rows.take(2).map(mk)); q.processAllAvailable()
+        stream.addData(mk(sentinel)); q.processAllAvailable()
+        stream.addData(Seq.empty[E]); q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).as[O].collect().toSeq
+    }
+    def trans(r: (Long, Timestamp, Long, String, Double)) =
+      TransEvent(r._3, r._1, r._2, r._4)
+
+    val ewma = run("subms_ewma", r => EwmaEvent(r._3, r._1, r._2, r._5))(
+      EventsStream.ewmaStream(_, "10 minutes"))
+      .map(p => (p.user_id, p.event_id) -> p.ewma).toMap
+    val ewmaBatch = graft.queries.Events.qEventsEwma(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      .filter { case ((_, eid), _) => eid != 9L }
+    assert(ewma == ewmaBatch, s"ewma stream=$ewma\nbatch=$ewmaBatch")
+
+    val pairs = run("subms_trans", trans _)(
+      EventsStream.transitionsStream(_, "10 minutes"))
+      .groupBy(p => (p.from_type, p.to_type))
+      .map { case (k, v) => k -> v.size.toLong }
+    val pairsBatch = graft.queries.Events.qEventsTransitions(spark, dir)
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(pairs == pairsBatch, s"transitions stream=$pairs\nbatch=$pairsBatch")
+
+    val attr = run("subms_attr", trans _)(
+      EventsStream.attributionStream(_, "10 minutes")).toSet
+    val attrBatch = graft.queries.Events.attributionOver(
+      (rows :+ sentinel).toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withColumn("ts_us", unix_micros(col("ts"))))
+      .as[AttrRow].collect().toSet
+    assert(attr == attrBatch, s"attribution stream=$attr\nbatch=$attrBatch")
+
+    val funnel = run("subms_funnel", trans _)(
+      EventsStream.funnelStream(_, "10 minutes"))
+      .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.stage) }
+    val f = graft.queries.Events.qEventsFunnel(spark, dir).collect().head
+    assert((1 to 3).map(k => funnel.values.count(_.stage >= k).toLong) ==
+      Seq("n_view", "n_click", "n_purchase").map(f.getAs[Long]),
+      s"funnel stream=$funnel\nbatch=$f")
+    assert(funnel(7L) == FunnelRow(7L,
+      Some(us("2024-03-01 10:00:00.0001")), Some(us("2024-03-01 10:00:00.0006")),
+      Some(us("2024-03-01 10:00:01.0009")), 3),
+      s"user 7: ${funnel(7L)}")
+  }
+
+  test("only EventTimeFold buffers rows to the watermark; no ms clock in graft.streaming") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // where an event-time timeout may appear outside the fold, and why
+    val timeoutAllowed = Map(
+      "EventTimeFold.scala" -> "the fold itself",
+      "EventsStream.scala#gapfillStream" ->
+        "adds each row to its bucket partial on arrival: O(open buckets) state, no row buffer",
+      "EventsStream.scala#interpolateStream" ->
+        "bucket partials as in gapfillStream, plus the look-ahead anchor")
+    val TopDef = """^  def (\w+).*""".r
+    val files = Files.walk(Paths.get("src/main/scala/graft")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val timeouts = for {
+      p <- files
+      lines = Files.readAllLines(p).asScala.toSeq
+      (line, i) <- lines.zipWithIndex
+      if line.contains("EventTimeTimeout")
+    } yield {
+      val owner = lines.take(i + 1).reverseIterator
+        .collectFirst { case TopDef(n) => n }.getOrElse("")
+      val file = p.getFileName.toString
+      val where = if (timeoutAllowed.contains(file)) file else s"$file#$owner"
+      where -> s"$p:${i + 1}: ${line.trim}"
+    }
+    val offences = timeouts.filterNot(t => timeoutAllowed.contains(t._1))
+    assert(offences.isEmpty,
+      s"buffer rows to the watermark through EventTimeFold:\n${offences.map(_._2).mkString("\n")}")
+    assert(timeouts.map(_._1).toSet == timeoutAllowed.keySet, "stale allowlist entry")
+    val msClock = for {
+      p <- files if p.toString.contains("/graft/streaming/")
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("getTime * 1000")
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(msClock.isEmpty,
+      s"read event time with EventTimeFold.micros:\n${msClock.mkString("\n")}")
   }
 }
