@@ -332,11 +332,11 @@ object EventsStream {
         org.apache.spark.sql.streaming.OutputMode.Update(),
         GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[CdcEvent], state: GroupState[Scd2State]) =>
-          val sorted = rows.map(r => (micros(r.ts), r)).toSeq
-            .sortBy { case (t, r) => (t, r.event_id) }
+          val sorted = rows.toSeq.sortBy(r => (micros(r.ts), r.event_id))
           var cur = state.getOption.orNull
           val closed = scala.collection.mutable.ListBuffer.empty[VersionRow]
-          sorted.foreach { case (t, r) =>
+          sorted.foreach { r =>
+            val t = micros(r.ts)
             if (cur == null) cur = Scd2State(r.event_type, t)
             else if (cur.eventType != r.event_type) {
               closed += VersionRow(uid, cur.eventType, cur.validFromUs,
@@ -378,12 +378,12 @@ object EventsStream {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[CdcEvent], state: GroupState[Scd2State]) =>
-          val sorted = rows.map(r => (micros(r.ts), r)).toSeq
-            .sortBy { case (t, r) =>
-              (t, if (r.event_type == "purchase") 1 else 0, r.event_id) }
+          val sorted = rows.toSeq.sortBy(r =>
+            (micros(r.ts), if (r.event_type == "purchase") 1 else 0, r.event_id))
           var cur = state.getOption.orNull
           val out = scala.collection.mutable.ListBuffer.empty[PitRow]
-          sorted.foreach { case (t, r) =>
+          sorted.foreach { r =>
+            val t = micros(r.ts)
             if (r.event_type == "purchase")
               out += PitRow(r.event_id, uid, t,
                 Option(cur).map(_.eventType),
