@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.Tables
 import graft.graph.PageRank
 import graft.Materialize
@@ -53,6 +54,15 @@ object Graph {
       .distinct()
     (edges, degreesOf(edges))
   }
+
+  /** Both orientations of every undirected (pa, pb) edge as (a, b)
+    * rows from ONE explode, so the pair plan above it is planned and
+    * read once (a union of two projections plans it twice). */
+  private def symmetric(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(explode(array(
+        struct(col("pa").as(a), col("pb").as(b)),
+        struct(col("pb").as(a), col("pa").as(b)))).as("ed"))
+      .select(col(s"ed.$a").as(a), col(s"ed.$b").as(b))
 
   private def degreesOf(edges: DataFrame): DataFrame =
     edges.select(col("pa").as("node"))
@@ -204,8 +214,7 @@ object Graph {
     // time; everything downstream reads the materialized edges
     val edges = Materialize(edgeParts(s, d)._1)
     val deg = degreesOf(edges)
-    val adj = edges.select(col("pa").as("u"), col("pb").as("v"))
-      .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
+    val adj = symmetric(edges, "u", "v")
     val qn = adj.where(col("u") <= LinkQueryCap)
       .select(col("u").as("a"), col("v").as("w"))
     val wdeg = deg.select(col("node").as("w"),
@@ -247,16 +256,11 @@ object Graph {
     * "Parts within 3 co-purchase hops of these parts" is the
     * recommendation-radius / blast-radius query. */
   def qGraphKhop(s: SparkSession, d: String): DataFrame = {
-    // the adjacency is symmetrized with ONE explode (one scan of the
-    // pair build instead of a union's two). The frontier is the
-    // SHUFFLE_HASH build of every round: from round 2 its estimate
-    // (a union under an aggregate) exceeds the adjacency's measured
-    // size, so unhinted the planner broadcasts the adjacency instead.
-    val adj = Materialize(edgeParts(s, d)._1
-      .select(explode(array(
-        struct(col("pa").as("u"), col("pb").as("v")),
-        struct(col("pb").as("u"), col("pa").as("v")))).as("ed"))
-      .select(col("ed.u").as("u"), col("ed.v").as("v")))
+    // The frontier is the SHUFFLE_HASH build of every round: from
+    // round 2 its estimate (a union under an aggregate) exceeds the
+    // adjacency's measured size, so unhinted the planner broadcasts the
+    // adjacency instead.
+    val adj = Materialize(symmetric(edgeParts(s, d)._1, "u", "v"))
     var reached = adj.select(col("u").as("node")).where(col("node") <= LinkQueryCap)
       .distinct().select(col("node"), lit(0).as("hop"))
     for (k <- 1 to KhopLimit) {
@@ -287,9 +291,7 @@ object Graph {
     * is built once for the seed and expansion sides. Integer counts,
     * one final rounded double division — engine-exact. */
   def qGraphNeighborhood(s: SparkSession, d: String): DataFrame = {
-    val edges = Materialize(edgeParts(s, d)._1)
-    val adj = edges.select(col("pa").as("u"), col("pb").as("v"))
-      .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
+    val adj = symmetric(Materialize(edgeParts(s, d)._1), "u", "v")
     val seeds = adj.where(col("u") <= LinkQueryCap)
       .select(col("u").as("a"), col("v").as("w"))
     val n1 = seeds.groupBy(col("a"))
@@ -340,9 +342,7 @@ object Graph {
     * generated SQL. R is summed as an exact int (order-independent),
     * clamped at 50 per register, so every step is deterministic. */
   def qGraphAnf(s: SparkSession, d: String): DataFrame = {
-    val edges = Materialize(edgeParts(s, d)._1)
-    val adj = Materialize(edges.select(col("pa").as("u"), col("pb").as("v"))
-      .unionAll(edges.select(col("pb").as("u"), col("pa").as("v"))))
+    val adj = Materialize(symmetric(edgeParts(s, d)._1, "u", "v"))
     val m0 = adj.select(col("u").as("node")).distinct()
       .select(col("node"),
         explode(sequence(lit(0), lit(AnfRegisters - 1))).as("reg"))
@@ -422,8 +422,8 @@ object Graph {
     * "dense backbone" extraction (drop every node with degree < k,
     * recompute degrees, repeat): spam/bot subgraph mining, influence
     * cores, graph sparsification. The threshold k is SIZE-DERIVED
-    * in-plan as ¾ of the mean degree, ⌊1.5|E|/|V|⌋, one broadcast
-    * scalar row — a constant k would prune nothing on a dense graph
+    * in-plan as ¾ of the mean degree, ⌊1.5|E|/|V|⌋, one scalar
+    * subquery — a constant k would prune nothing on a dense graph
     * and everything on a sparse one, and the full mean cascades this
     * graph to an empty core (measured: removing the below-mean half
     * drops the survivors' degrees below the mean again). The derived
@@ -447,21 +447,22 @@ object Graph {
     // skipped outright — the oracle's unused e3 CTE was never
     // evaluated either. Same k derivation (1.5·|E|/|V| on exact
     // integers; |sym| div 2 == |E|), same KcoreRounds peel,
-    // row-identical output.
-    val edges = edgeParts(s, d)._1
-    val sym = Materialize(edges.select(col("pa").as("a"), col("pb").as("b"))
-      .unionByName(edges.select(col("pb").as("a"), col("pa").as("b"))))
+    // row-identical output. k is a scalar subquery, not a broadcast
+    // cross join: Spark sizes a cross join as the product of its
+    // sides, so a joined 1-row k multiplied every estimate above it
+    // and the final deg0 ⋈ keep planned as a sort-merge join.
+    val sym = Materialize(symmetric(edgeParts(s, d)._1, "a", "b"))
     val deg0 = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .select(col("a").as("node"), col("deg"))
-    val kdf = sym.agg(expr("count(1) div 2").as("ecnt"))
+    val k = sym.agg(expr("count(1) div 2").as("ecnt"))
       .crossJoin(deg0.agg(count(lit(1)).as("ncnt")))
-      .select(floor(lit(1.5) * col("ecnt") / col("ncnt")).as("k"))
+      .select(floor(lit(1.5) * col("ecnt") / col("ncnt")))
+      .scalar()
     var cur = sym
     var keep: DataFrame = null
     for (r <- 1 to KcoreRounds) {
       keep = cur.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-        .crossJoin(broadcast(kdf))
-        .where(col("deg") >= col("k"))
+        .where(col("deg") >= k)
         .select(col("a").as("node"))
       if (r < KcoreRounds)
         cur = Materialize(cur
@@ -473,8 +474,7 @@ object Graph {
     deg0
       .join(keep.select(col("node"), lit(true).as("in_core")),
         Seq("node"), "left")
-      .crossJoin(broadcast(kdf))
-      .select(col("node"), col("deg").as("degree"), col("k"),
+      .select(col("node"), col("deg").as("degree"), k.as("k"),
         coalesce(col("in_core"), lit(false)).as("in_core"))
       .orderBy(col("node"))
   }
@@ -500,6 +500,10 @@ object Graph {
   def qGraphAssortativity(s: SparkSession, d: String): DataFrame = {
     val edges = Materialize(edgeParts(s, d)._1)
     val deg = degreesOf(edges)
+    // a union of two projections, not `symmetric`: both read the
+    // checkpointed edges, and the one-explode form measured slower here
+    // (graft.Bench min-of-3 at sf0.1, 4 cores, two runs each: 3.21 and
+    // 3.39 s with the union, 3.64 and 3.43 s with the explode)
     val sym = edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(edges.select(col("pb").as("u"), col("pa").as("v")))
     // NO broadcast hint on the degree table: it is |nodes|-sized, so
@@ -534,39 +538,61 @@ object Graph {
     * oracle needs no quantization contract. */
   val LpaRounds = 4
 
+  /** The span of an LPA label in the packed winner key
+    * label − cnt·2³²: the key orders by count descending, then by
+    * label ascending, and pmod(key, 2³²) gives the label back, exactly
+    * for 0 ≤ label < 2³² and 0 < cnt < 2³¹. */
+  private val LpaLabelSpan = 1L << 32
+
+  /** `v`, or the named LPA_RANGE error where `ok` fails: a node id or a
+    * count outside the packed key's range never yields a wrong label. */
+  private def lpaInRange(ok: Column, v: Column): Column =
+    when(ok, v).otherwise(raise_error(lit("LPA_RANGE: label propagation " +
+      "needs node ids in [0, 2^32) and fewer than 2^31 edges per node")))
+
   /** The per-node community labels after LpaRounds synchronous rounds
     * over the symmetrized part co-purchase graph — shared by
-    * q_graph_lpa and q_graph_modularity. Each round is one equi-join
-    * (edges × labels, shuffled on the label side's node key) and one
-    * count aggregate with map-side partials; the winner is a single
-    * min(struct(-cnt, label)) aggregate, NEVER a per-node window —
-    * a hub's neighbor-label counts combine in partials, so a degree-10⁶
-    * node costs its edge count, not a single-task sort. The edge list
-    * is checkpointed once and reused by all rounds. */
+    * q_graph_lpa and q_graph_modularity. Node ids must lie in
+    * [0, 2³²) (l_partkey is at most 200,000·SF in TPC-H); any other id
+    * fails the query with LPA_RANGE as the edge list materializes.
+    *
+    * Round 1 is in closed form: the seed labels are the node ids and
+    * the edge list holds each (src, dst) once (distinct pa < pb pairs,
+    * both orientations), so every neighbour label counts once and the
+    * winner is the smallest neighbour, min(dst) per src.
+    *
+    * Each later round is one equi-join (edges × labels) and two hash
+    * aggregates: the (src, label) count, then the winner as min over the
+    * packed long label − cnt·2³² (LpaLabelSpan), NEVER a per-node
+    * window — a hub's neighbour-label counts combine in partials, so a
+    * degree-10⁶ node costs its edge count, not a single-task sort. The
+    * labels are materialized, so their measured size decides the join:
+    * within spark.sql.autoBroadcastJoinThreshold the planner broadcasts
+    * them and the edges stream from their checkpoint with no exchange;
+    * above it they are the SHUFFLE_HASH build, so the edge stream never
+    * pays a sort-merge sort. The edge list is checkpointed once and
+    * reused by all rounds. */
   private def lpaLabels(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val (edges, _) = edgeParts(s, d)
-    // the label side is the SHUFFLE_HASH build of every round: the
-    // labels (|nodes| rows) shuffle and build per-partition hash
-    // tables while the edges (the unbounded side) stream, paying no
-    // sort-merge sort
-    val e = Materialize(edges.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionByName(edges.select(col("pb").as("src"), col("pa").as("dst"))))
-    var lab = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to LpaRounds) {
-      // each round's labels feed exactly one consumer, but without a
-      // checkpoint the final plan nests 4 join-agg rounds and the edge
-      // scan re-executes per round under AQE re-planning
-      val counts = e
-        .join(lab.select(col("node").as("dst"), col("label"))
-          .hint("shuffle_hash"), "dst")
+    val e = Materialize(symmetric(edgeParts(s, d)._1, "src", "dst")
+      .select(lpaInRange(col("src").between(0L, LpaLabelSpan - 1), col("src"))
+        .as("src"), col("dst")))
+    // each round's labels feed exactly one consumer, but without a
+    // checkpoint the final plan nests the join-agg rounds and the edge
+    // scan re-executes per round under AQE re-planning
+    var lab = Materialize(e.groupBy(col("src")).agg(min(col("dst")).as("label"))
+      .select(col("src").as("node"), col("label")))
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    for (_ <- 2 to LpaRounds) {
+      val labels = lab.select(col("node").as("dst"), col("label"))
+      val fits = lab.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+      val counts = e.join(if (fits) labels else labels.hint("shuffle_hash"), "dst")
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       lab = Materialize(counts.groupBy(col("src"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-          .as("w"))
-        .select(col("src").as("node"), col("w.l").as("label")))
+        .agg(min(lpaInRange(col("cnt") < (1L << 31),
+          col("label") - col("cnt") * LpaLabelSpan)).as("w"))
+        .select(col("src").as("node"), pmod(col("w"), lit(LpaLabelSpan)).as("label")))
     }
     (e, lab)
   }
@@ -680,9 +706,11 @@ object Graph {
   /** The shared CTE chain of the LPA oracles: symmetrized co-purchase
     * edges, identity labels, and one (count → max → min-label) block
     * per round — the same deterministic tie-break as the Spark side's
-    * min(struct(-cnt, label)) aggregate, unrolled from the same
-    * LpaRounds constant. Pure integer arithmetic: no quantization
-    * contract needed anywhere. */
+    * packed min(label − cnt·2³²) winner, unrolled from the same
+    * LpaRounds constant. Round 1 is unrolled generically here too, so
+    * the oracle checks the Spark side's closed-form min(dst) round.
+    * Pure integer arithmetic: no quantization contract needed
+    * anywhere. */
   private def lpaCtes: String = {
     def roundBlock(i: Int): String =
       s"""c$i AS (

@@ -11,7 +11,9 @@ import graft.Materialize
   * real events corpus through a MemoryStream in fixed-size chunks and
   * drives each representative twin to completion, reporting rows/s,
   * per-batch latency, and state-store size from the engine's own
-  * StreamingQueryProgress — the numbers a production deployment reads
+  * StreamingQueryProgress (in bytes: the store's estimate of every
+  * state version it keeps cached, and the custom metric
+  * stateOnCurrentVersionSizeBytes, the current version alone) — the numbers a production deployment reads
   * off its monitoring before sizing executors.
   *
   * MemoryStream is driver-fed by design (it IS the test source Spark
@@ -28,7 +30,7 @@ object StreamBench {
 
   case class TwinResult(name: String, rows: Long, wallSec: Double,
       rowsPerSec: Double, batches: Int, maxBatchMs: Long,
-      stateRows: Long, stateBytes: Long)
+      stateRows: Long, stateBytesAllVersions: Long, stateBytesCurrent: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -98,12 +100,14 @@ object StreamBench {
       val batches = progress.length
       val maxBatch = if (progress.isEmpty) 0L
         else progress.map(_.batchDuration).max
-      val (stRows, stBytes) = progress.reverse
+      val (stRows, stAllVersions, stCurrent) = progress.reverse
         .find(_.stateOperators.nonEmpty)
         .map { p =>
-          (p.stateOperators.map(_.numRowsTotal).sum,
-            p.stateOperators.map(_.memoryUsedBytes).sum)
-        }.getOrElse((0L, 0L))
+          val ops = p.stateOperators.toSeq
+          (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum,
+            ops.map(o => Option(o.customMetrics.get("stateOnCurrentVersionSizeBytes"))
+              .fold(0L)(_.longValue)).sum)
+        }.getOrElse((0L, 0L, 0L))
       q2.stop()
       // temp checkpoint dirs otherwise accumulate across runs (ADVICE r13)
       try {
@@ -112,11 +116,11 @@ object StreamBench {
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
       } catch { case _: Throwable => () }
       val r = TwinResult(name, nFeed, wall,
-        nFeed / wall, batches, maxBatch, stRows, stBytes)
+        nFeed / wall, batches, maxBatch, stRows, stAllVersions, stCurrent)
       println(f"[streambench] $name%-16s ${r.rowsPerSec}%10.0f rows/s  " +
         f"wall ${r.wallSec}%6.2f s  batches ${r.batches}%3d  " +
-        f"maxBatch ${r.maxBatchMs} ms  state ${r.stateRows} rows / " +
-        f"${r.stateBytes / 1024 / 1024} MiB")
+        f"maxBatch ${r.maxBatchMs} ms  state ${r.stateRows} rows, " +
+        f"${r.stateBytesCurrent} B current / ${r.stateBytesAllVersions} B all versions")
       r
     }
 
@@ -125,7 +129,9 @@ object StreamBench {
         s""""rows":${r.rows},"wall_sec":${f"${r.wallSec}%.3f"},""" +
         s""""rows_per_sec":${f"${r.rowsPerSec}%.0f"},""" +
         s""""batches":${r.batches},"max_batch_ms":${r.maxBatchMs},""" +
-        s""""state_rows":${r.stateRows},"state_bytes":${r.stateBytes}}"""
+        s""""state_rows":${r.stateRows},""" +
+        s""""state_bytes_current":${r.stateBytesCurrent},""" +
+        s""""state_bytes_all_versions":${r.stateBytesAllVersions}}"""
     }.mkString("{", ",", "}")
     val line = s"""{"sf":"$sfDir","chunk":$chunk,"twins":$qs}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

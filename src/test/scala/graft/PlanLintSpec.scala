@@ -144,15 +144,42 @@ class PlanLintSpec extends SparkSpec {
       "q_dedup_keep_best" -> cc,
       "q_graph_anf" -> "registers: AnfRegisters rows per node (8·|V|)",
       "q_graph_kcore" -> "keep set: at most one row per node (|V|)",
-      "q_graph_khop" -> "frontier: at most one row per node (|V|)",
-      "q_graph_lpa" -> "labels: one row per node (|V|)",
-      "q_graph_modularity" -> "the q_graph_lpa label rounds (|V| rows)")
+      "q_graph_khop" -> "frontier: at most one row per node (|V|)")
   }
 
   private def shjOffences(name: String, shapes: Seq[PlanShape]): Seq[String] =
     if (shjAllowed.contains(name)) Nil
     else shapes.flatMap(_.joins).filter(_.strategy == "SHJ")
       .map(j => s"$name: unreviewed SHJ on ${j.leftKeys.mkString(",")}")
+
+  /** Reviewed sort aggregates, each with the aggregate that needs one:
+    * a struct or string buffer is not UnsafeRow-mutable, so Spark plans
+    * it as a SortAggregate, which sorts its input on the grouping keys
+    * before the partial and again before the final aggregate. An
+    * aggregate whose order key packs into one long (q_graph_lpa's
+    * winner) stays a HashAggregate. */
+  private val sortAggAllowed = Map(
+    "q_dedup_cdc" -> "keep-first chunk: min(struct(id, chunk)) per chunk content hash",
+    "q_dedup_keep_best" ->
+      "best doc per cluster: max_by(doc_id, struct(quality, -doc_id)), quality a double",
+    "q_dedup_nearest" ->
+      "nearest neighbour: max_by(struct(best, jaccard), struct(jaccard, -best))",
+    "q_events_gapfill" -> "last observed bucket: max(struct(m, sum_value))",
+    "q_events_interpolate" ->
+      "bracketing observations: max and min of struct(m, sum_value)",
+    "q_events_ohlc" -> "open/close: min_by/max_by(value, struct(ts_us, event_id))",
+    "q_events_streaks" -> "longest streak: max_by(start day string, struct(len, start_day))",
+    "q_merge_upsert" -> "latest row per key: max_by(struct(row), struct(ts_us, event_id))",
+    "q_nb_langid" -> "best class per doc: min(struct(-score, cl)), score a double",
+    "q_profile" -> "per-column min/max, string columns included")
+
+  private def sortAggregates(shapes: Seq[PlanShape]): Int =
+    shapes.map(_.aggregates.count(_ == "SortAggregate")).sum
+
+  private def sortAggOffences(name: String, shapes: Seq[PlanShape]): Seq[String] =
+    if (sortAggAllowed.contains(name)) Nil
+    else if (sortAggregates(shapes) == 0) Nil
+    else Seq(s"$name: unreviewed SortAggregate ×${sortAggregates(shapes)}")
 
   private def small(p: LogicalPlan): Boolean =
     p.maxRows.exists(_ <= SmallSide)
@@ -202,6 +229,15 @@ class PlanLintSpec extends SparkSpec {
       col("o_custkey") === col("c_custkey"))
     assert(shjOffences("q_planted", Seq(PlanShape.of(planted))).nonEmpty,
       "unreviewed SHJ detector is blind")
+    // a min(struct(...)) winner is a SortAggregate; the same order as
+    // one packed long is a HashAggregate
+    val perCust = big.groupBy(col("o_custkey"))
+    assert(sortAggOffences("q_planted", Seq(PlanShape.of(perCust.agg(
+        min(struct(col("o_totalprice"), col("o_orderkey"))))))).nonEmpty,
+      "unreviewed SortAggregate detector is blind")
+    assert(sortAggOffences("q_planted", Seq(PlanShape.of(perCust.agg(
+        min(col("o_orderkey") - col("o_totalprice").cast("long") * (1L << 32)))))).isEmpty,
+      "packed-long min falsely flagged as a SortAggregate")
     // whole-relation window → partitionSpec-less Window, unbounded child
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))
     val unpart = big.withColumn("rk", row_number().over(w))
@@ -388,6 +424,16 @@ class PlanLintSpec extends SparkSpec {
     val offences =
       registered.flatMap(b => shjOffences(b.name, PlanShape.of(b.df) +: b.materialized))
     assert(offences.isEmpty, s"unreviewed SHJ:\n${offences.mkString("\n")}")
+  }
+
+  test("every sort aggregate, final or materialized, is reviewed; no review is stale") {
+    val shapes = registered.map(b => b.name -> (PlanShape.of(b.df) +: b.materialized)).toMap
+    val offences = shapes.toSeq.flatMap { case (name, ss) => sortAggOffences(name, ss) }
+    val stale = sortAggAllowed.keys.toSeq.sorted
+      .filter(n => !shapes.get(n).exists(ss => sortAggregates(ss) > 0))
+      .map(n => s"$n: on sortAggAllowed but plans no SortAggregate")
+    assert(offences.isEmpty && stale.isEmpty,
+      s"sort aggregates:\n${(offences.sorted ++ stale).mkString("\n")}")
   }
 
   test("building every registered query leaves nothing in the session cache") {
