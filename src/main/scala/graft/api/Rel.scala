@@ -106,13 +106,6 @@ final case class Rel(df: DataFrame) {
 
   // ---- beyond-the-reference verbs (graft.operators wrappers) -------
 
-  /** AS-OF join — latest right payload at-or-before each left row
-    * (graft.operators.AsofJoin union-sort shape). */
-  def asofJoin(right: Rel, keyCol: String, timeCol: String,
-      payloadCols: Seq[String]): Rel =
-    Rel(graft.operators.AsofJoin.asofPrefixed(
-      df, right.df, keyCol, timeCol, payloadCols))
-
   /** lead with a PER-ROW offset — the reference's callable offset
     * (api.py:842); rank self-join in graft.operators.VarNav. */
   def varLead(partitionCols: Seq[String], orderCols: Seq[Column],

@@ -14,16 +14,16 @@ import org.apache.spark.sql.functions._
   *      counts — at corpus scale the vocabulary is orders of magnitude
   *      smaller than the row table, and the expensive quadratic work
   *      must only ever see the vocabulary;
-  *   2. block on a COMPOUND key: the caller's cheap key (e.g. last
-  *      token / phonetic code) PLUS a length band of width maxDist+1,
-  *      so the self-join is an equi-join — never a cartesian
-  *      BroadcastNestedLoopJoin — and a hot caller-key block (a very
-  *      common last token) is subdivided by length instead of going
-  *      quadratic. |len a − len b| ≤ maxDist is a levenshtein lower
-  *      bound, so qualifying pairs sit in the same or adjacent bands;
-  *      the probe side is exploded into its 3 adjacent bands (3× the
-  *      vocabulary, a constant) and each qualifying pair then matches
-  *      in EXACTLY one band — no recall loss, no duplicates;
+  *   2. block on the caller's cheap key (e.g. last token / phonetic
+  *      code) with |len a − len b| ≤ maxDist, a levenshtein lower
+  *      bound, in the join condition. graft.plans.BandedRangeJoinRule
+  *      bins that band next to the block key, so the self-join is an
+  *      equi-join on (block, length bin) — never a cartesian
+  *      BroadcastNestedLoopJoin — and a hot block (a very common last
+  *      token) is subdivided by length instead of going quadratic; the
+  *      rule's bins are exact, so no recall loss and no duplicates.
+  *      The band needs maxDist ≥ 1 (the rule bins only a positive
+  *      radius);
   *   3. cheap length-band prefilter before the O(len²) edit distance,
   *      which runs only inside surviving candidate pairs.
   *
@@ -48,21 +48,17 @@ object FuzzyJoin {
       rows: DataFrame, nameCol: String, blockOf: Column => Column,
       maxDist: Int,
       blockOf2: Option[Column => Column] = None): DataFrame = {
-    val bandWidth = maxDist + 1
     val vocab = rows.groupBy(col(nameCol).as("name"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("band", floor(length(col("name")) / lit(bandWidth)))
     def candidates(key: Column => Column): DataFrame = {
       val v = vocab.withColumn("blk", key(col("name")))
       val a = v.select(col("name").as("name_a"), col("n").as("n_a"),
-        col("blk"), col("band"))
+        col("blk").as("blk_a"))
       val b = v.select(col("name").as("name_b"), col("n").as("n_b"),
-        col("blk"),
-        explode(array(col("band") - 1, col("band"), col("band") + 1))
-          .as("band"))
-      a.join(b, Seq("blk", "band"))
-        .where(col("name_a") < col("name_b"))
-        .where(abs(length(col("name_a")) - length(col("name_b"))) <= maxDist)
+        col("blk").as("blk_b"))
+      a.join(b, col("blk_a") === col("blk_b") &&
+          abs(length(col("name_a")) - length(col("name_b"))) <= maxDist &&
+          col("name_a") < col("name_b"))
         .select(col("name_a"), col("name_b"), col("n_a"), col("n_b"))
     }
     val cand = blockOf2.fold(candidates(blockOf))(k2 =>

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Encoder, Encoders}
   * `count_distinct` at 100 TB shuffles the full distinct-value set;
   * this aggregate keeps only the k smallest DISTINCT hash fractions
   * per group. Each task ships ≤ k doubles per group (map-side partial
-  * + final ObjectHashAggregate — the TopKAggregator plan shape), and
-  * the estimator reads the k-th minimum: a uniform [0,1) hash whose
+  * + final ObjectHashAggregate), and the estimator reads the k-th
+  * minimum: a uniform [0,1) hash whose
   * k-th order statistic is h_k implies ≈ (k−1)/h_k distinct values.
   * When fewer than k distinct hashes exist, the buffer IS the distinct
   * hash set and the count is exact — the estimator degrades to exact

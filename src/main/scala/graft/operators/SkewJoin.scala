@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Salted join for skewed keys (SURVEY.md §4).
@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * AQE's skew-join splitting (spark.sql.adaptive.skewJoin) handles
   * sort-merge cases at runtime; explicit salting remains the tool for
-  * aggregations and for engines/joins AQE doesn't rewrite. */
+  * joins AQE doesn't rewrite. A skewed sum or count needs no salt:
+  * Spark's partial aggregate already combines a hot key map-side
+  * before the shuffle. */
 object SkewJoin {
 
   /** Inner equi-join `fact ⋈ build` on `factKey === buildKey`, salted.
@@ -36,21 +38,5 @@ object SkewJoin {
         salted(factKey) === replicated(buildKey) &&
           salted("_salt") === replicated("_salt"))
       .drop("_salt")
-  }
-
-  /** Skewed grouped aggregation: two-phase salt → partial agg on
-    * (key, salt) → final agg on key. For algebraic aggregates
-    * (sum/count/min/max) this is semantically identical to a direct
-    * groupBy while spreading each hot key over saltFactor reducers. */
-  def saltedSumCount(
-      df: DataFrame, key: Column, value: Column, saltFactor: Int): DataFrame = {
-    require(saltFactor > 0, "saltFactor must be positive")
-    df.withColumn("_salt",
-        pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor.toLong)))
-      .groupBy(key.as("k"), col("_salt"))
-      .agg(sum(value.cast("decimal(18,4)")).as("_s"), count(lit(1)).as("_c"))
-      .groupBy(col("k"))
-      .agg(sum(col("_s")).cast("double").as("sum_value"),
-        sum(col("_c")).as("n"))
   }
 }

@@ -8,12 +8,17 @@ import org.apache.spark.sql.functions._
   *
   * The reference engine aggregates sliding frames with a segment tree —
   * O(n log n) per partition (/root/reference/stupidb/associative/
-  * segmenttree.py). Spark's WindowExec instead RECOMPUTES bounded
-  * frames from scratch per row: O(n·w), which the sf0.1 bench exposed
-  * (10s for a 50-row frame over 600k rows). The Spark-first fix is
-  * better than both: sum/count/avg/variance are all derivable from
-  * invertible prefix sums, so two cumulative windows (incremental, O(n))
-  * plus a lag give every frame aggregate:
+  * segmenttree.py). Spark's WindowExec instead RECOMPUTES a bounded
+  * ROWS frame from scratch per row: O(n·w). q_win_stats' statistics
+  * over sf0.1 lineitem (600k rows, 4 local cores, median of 7 runs)
+  * took, as a native ROWS frame against these prefix sums:
+  *
+  *   w = 10: 4.39 s vs 4.47 s      w = 100:  12.7 s vs 4.25 s
+  *   w = 50: 8.56 s vs 4.85 s      w = 1000: 35.9 s vs 3.52 s
+  *
+  * sum/count/avg/variance are all derivable from invertible prefix
+  * sums, so two cumulative windows (incremental, O(n)) plus a lag give
+  * every frame aggregate:
   *
   *   frame_sum(i)  = S(i) − S(i−w),   S = running Σx
   *   frame_sumsq(i)= Q(i) − Q(i−w),   Q = running Σx²
@@ -75,85 +80,5 @@ object SlidingAgg {
       .withColumn(s"${prefix}var_samp", round(varSamp, roundTo))
       .withColumn(s"${prefix}stddev_samp", round(sqrt(varSamp), roundTo))
       .drop("_c", "_s", "_q")
-  }
-
-  /** Append `<prefix>sum` / `<prefix>cnt` over the VALUE-based frame
-    * `RANGE radius PRECEDING .. CURRENT ROW` (ordered by `orderVal`).
-    *
-    * The `lag(_, w)` trick above needs a fixed ROW width, so RANGE
-    * frames can't use it — and Spark's native bounded-start RANGE
-    * frame re-aggregates per row: O(n·w). This is the O(n log n)
-    * union-sort formulation instead:
-    *
-    *   frame(i) = cum(vᵢ) − prefix(vᵢ − radius)
-    *
-    * where cum is the peer-inclusive running aggregate (an incremental
-    * UNBOUNDED..CURRENT RANGE frame) and prefix(k) is the running
-    * aggregate over values STRICTLY below k, read off by sorting a
-    * probe row at key k into the data: probes carry tag 0 < data tag 1,
-    * so at equal keys the probe sees exactly the strictly-smaller
-    * rows — the boundary `v ≥ vᵢ − radius` lands in the frame, as
-    * RANGE semantics require. Sums accumulate in DECIMAL so the
-    * subtraction is exact (same rationale as `slidingStats`).
-    *
-    * Cost: two window passes + one join-back on `uniqueKey`, all
-    * shuffled on the partition key — independent of frame width.
-    *
-    * INPUT CONTRACT: like `slidingStats`, values AND order keys are
-    * snapped to DECIMAL(18,4) (order keys with more than 4 fractional
-    * digits would round); a frame whose values are ALL NULL yields sum 0
-    * (SQL would yield NULL) — pre-filter nulls if that distinction
-    * matters.
-    *
-    * @param uniqueKey row-identity columns for the probe join-back */
-  def slidingRangeSum(
-      df: DataFrame,
-      partitionCols: Seq[String],
-      orderVal: Column,
-      radius: Column,
-      valueCol: Column,
-      uniqueKey: Seq[String],
-      prefix: String = "sr_"): DataFrame = {
-    val p = partitionCols.map(col)
-    val x = valueCol.cast("decimal(18,4)")
-    val zero = lit(0).cast("decimal(18,4)")
-    // the merge key _k is DECIMAL on BOTH sides so the inclusive RANGE
-    // boundary is exact: a double-rounded probe key (v - radius) and a
-    // double-rounded data key round at different ulp scales, which can
-    // land a row whose value equals exactly v - radius on the wrong
-    // side of the frame for decimal order keys
-    val data = df.select(
-      p ++ uniqueKey.map(col) :+
-        orderVal.cast("decimal(18,4)").as("_k") :+
-        lit(1).as("_tag") :+ x.as("_x"): _*)
-    val probe = df.select(
-      p ++ uniqueKey.map(col) :+
-        (orderVal.cast("decimal(18,4)") - radius.cast("decimal(18,4)"))
-          .cast("decimal(18,4)").as("_k") :+
-        lit(0).as("_tag") :+ lit(null).cast("decimal(18,4)").as("_x"): _*)
-    val run = Window.partitionBy(p: _*).orderBy(col("_k"), col("_tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pre = data.unionByName(probe)
-      .withColumn("_ps", sum(col("_x")).over(run))
-      .withColumn("_pc",
-        sum(when(col("_tag") === 1, 1L).otherwise(0L)).over(run))
-      .where(col("_tag") === 0)
-      .select(uniqueKey.map(c => col(c).as(s"_u_$c")) :+
-        col("_ps").as("_pre_s") :+ col("_pc").as("_pre_c"): _*)
-    // same DECIMAL key here: peers of the cumulative frame must be the
-    // rows the probe merge considers equal, or the subtraction misaligns
-    val cumW = Window.partitionBy(p: _*).orderBy(orderVal.cast("decimal(18,4)"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val backCond = uniqueKey.map(c => col(c) === col(s"_u_$c")).reduce(_ && _)
-    df
-      .withColumn("_cum_s", sum(x).over(cumW))
-      .withColumn("_cum_c", count(lit(1)).over(cumW))
-      .join(pre, backCond, "left_outer")
-      .withColumn(s"${prefix}sum",
-        coalesce(col("_cum_s"), zero) - coalesce(col("_pre_s"), zero))
-      .withColumn(s"${prefix}cnt",
-        col("_cum_c") - coalesce(col("_pre_c"), lit(0L)))
-      .drop("_cum_s", "_cum_c", "_pre_s", "_pre_c")
-      .drop(uniqueKey.map(c => s"_u_$c"): _*)
   }
 }

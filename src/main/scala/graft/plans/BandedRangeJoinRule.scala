@@ -6,26 +6,26 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** Optimizer rule: rewrite `|a.t − b.t| <= r` inner theta-joins into
-  * the banded equi-join shape.
+/** Optimizer rule: rewrite `|a.t − b.t| <= r` inner joins into the
+  * banded equi-join shape.
   *
   * Spark plans a join whose only usable predicate is a range band as
-  * BroadcastNestedLoopJoin — O(|A|·|B|), hopeless at scale. But the
-  * band IS an equi-join in disguise (graft.operators.RangeJoin): bucket
-  * `t` into width-r bins, expand the left side to (bin−1, bin, bin+1),
-  * and join on bin equality with the original predicate re-checked.
-  * Any pair within `r` differs by at most one bin, so the rewrite is
-  * exact; the physical plan becomes an ordinary shuffled hash/sort-
-  * merge join.
+  * BroadcastNestedLoopJoin — O(|A|·|B|), hopeless at scale; with a
+  * coarse equi key (an event type) it is a hash join whose every key
+  * holds a large share of both sides, quadratic within the key. But
+  * the band IS an equi-join in disguise: bucket `t` into width-r bins,
+  * expand the left side to (bin−1, bin, bin+1), and join on bin
+  * equality next to any existing equi keys, with the original
+  * predicate re-checked. Any pair within `r` differs by at most one
+  * bin, so the rewrite is exact; the physical plan becomes an ordinary
+  * shuffled hash/sort-merge join on (keys, bin).
   *
   * Fires only when: the join is INNER; a conjunct has the shape
   * `abs(l − r) <= lit` (or `<`, or flipped `>=`/`>`) with one side
   * referencing only the left plan and the other only the right; the
   * operands are integral (epoch micros / row numbers — exact bin
-  * math); and no equi-conjunct already exists (if one does, the hash
-  * join already has a key and expansion would only add work). The
-  * rewritten join contains a bin equi-conjunct, so the rule does not
-  * re-fire on its own output.
+  * math); and the condition does not already equate the rule's own
+  * bin attributes, so it never re-fires on its own output.
   *
   * Registered by [[GraftExtensions]] via `injectOptimizerRule`.
   */
@@ -71,31 +71,23 @@ object BandedRangeJoinRule extends Rule[LogicalPlan] {
     }
   }
 
-  /** True when a conjunct is already a usable equi-join key. */
-  private def isEquiKey(
-      e: Expression, left: LogicalPlan, right: LogicalPlan): Boolean =
-    e match {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(left.outputSet) &&
-          b.references.subsetOf(right.outputSet)) ||
-        (b.references.subsetOf(left.outputSet) &&
-          a.references.subsetOf(right.outputSet))
-      case _ => false
-    }
+  /** Names of the bin attributes the rewrite adds. */
+  private val BinL = "_graft_bin_l"
+  private val BinR = "_graft_bin_r"
 
   private def bin(t: Expression, r: Long): Expression =
     Cast(Floor(Divide(Cast(t, DoubleType), Literal(r.toDouble))), LongType)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, Inner, Some(cond), hint) =>
+    case j @ Join(left, right, Inner, Some(cond), hint)
+        if !cond.references.exists(_.name == BinL) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val band = conjuncts.iterator
         .map(c => asBand(c, left, right)).collectFirst { case Some(b) => b }
       band match {
-        case Some((lt, rt, r))
-            if !conjuncts.exists(isEquiKey(_, left, right)) =>
-          val binL = AttributeReference("_graft_bin_l", LongType)()
-          val binR = AttributeReference("_graft_bin_r", LongType)()
+        case Some((lt, rt, r)) =>
+          val binL = AttributeReference(BinL, LongType)()
+          val binR = AttributeReference(BinR, LongType)()
           // left row visits its own bin and both neighbors: a match
           // within r sits at most one bin away
           val expandedLeft = Expand(
@@ -104,14 +96,14 @@ object BandedRangeJoinRule extends Rule[LogicalPlan] {
             left.output :+ binL,
             left)
           val projectedRight = Project(
-            right.output :+ Alias(bin(rt, r), "_graft_bin_r")(binR.exprId),
+            right.output :+ Alias(bin(rt, r), BinR)(binR.exprId),
             right)
           val newJoin = Join(
             expandedLeft, projectedRight, Inner,
             Some((EqualTo(binL, binR) +: conjuncts).reduce(And)),
             hint)
           Project(j.output, newJoin)
-        case _ => j
+        case None => j
       }
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
   ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** The shape of a physical plan: the facts graft's scale contract is
   * stated in (shuffles and their keys, join strategies, window
@@ -39,6 +39,7 @@ final case class PlanShape(
     joins: Seq[PlanShape.Join],
     sorts: Int,
     windows: Seq[PlanShape.Window],
+    groupLimits: Seq[PlanShape.GroupLimit],
     aggregates: Seq[String],
     topK: Int,
     generates: Seq[String],
@@ -64,6 +65,9 @@ object PlanShape {
   /** ROWS or RANGE, with each bound as SQL (offsets signed). */
   final case class Frame(kind: String, lower: String, upper: String)
   final case class Window(keys: Seq[String], frames: Seq[Frame])
+  /** A per-group limit Spark plans for a `rank <= k` filter: mode
+    * Partial (before the shuffle) or Final, its partition keys and k. */
+  final case class GroupLimit(mode: String, keys: Seq[String], limit: Int)
   final case class Scan(columns: Seq[String], pushed: Seq[String],
     partitionFilters: Seq[String])
 
@@ -91,6 +95,9 @@ object PlanShape {
         Window(w.partitionSpec.map(pretty), w.windowExpression.flatMap(_.collect {
           case f: SpecifiedWindowFrame => Frame(f.frameType.sql, f.lower.sql, f.upper.sql)
         }).distinct)
+      },
+      groupLimits = ns.collect { case g: WindowGroupLimitExec =>
+        GroupLimit(g.mode.toString, g.partitionSpec.map(pretty), g.limit)
       },
       aggregates = ns.collect { case a: BaseAggregateExec => a.nodeName },
       topK = count { case _: TakeOrderedAndProjectExec => },
@@ -157,6 +164,10 @@ object PlanShape {
     case other => other.toString
   }
 
+  // written only when non-empty, so the line of a plan without any
+  // keeps the bytes it had before the field was recorded
+  private val omittedWhenEmpty = Set("groupLimits")
+
   private def js(v: Any): String = v match {
     case s: String => s.flatMap {
       case '"' => "\\\""
@@ -166,6 +177,7 @@ object PlanShape {
     }.mkString("\"", "", "\"")
     case xs: Seq[_] => xs.map(js).mkString("[", ",", "]")
     case p: Product => p.productElementNames.zip(p.productIterator)
+      .filterNot { case (k, x) => omittedWhenEmpty(k) && x == Nil }
       .map { case (k, x) => s"${js(k)}:${js(x)}" }.mkString("{", ",", "}")
     case other => other.toString
   }

@@ -125,10 +125,10 @@ object Events {
     * compiles to Expand, the |rows|×4 shuffle q_profile measured at
     * 10×) and the second aggregate rides the first's (day, user)
     * partitioning. Work is |user-days|·30, linear in activity (at
-    * larger spans the HLL sketch in graft.operators.Sketches is the
-    * documented swap-in). Days beyond the data's edge are clipped by
-    * the day-dimension semi-join, so every output day reflects a full
-    * actual grid. */
+    * larger spans Spark's hll_sketch_agg / hll_union_agg /
+    * hll_sketch_estimate are the documented swap-in). Days beyond the
+    * data's edge are clipped by the day-dimension semi-join, so every
+    * output day reflects a full actual grid. */
   def qEventsWau(s: SparkSession, d: String): DataFrame = {
     val grid = Tables.events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
@@ -366,34 +366,45 @@ object Events {
       .orderBy(col("cohort"), col("week_offset"))
   }
 
-  /** Top-5 events per type by value via the bounded-heap aggregate
-    * (graft.operators.TopK) — only |types|·5 candidates per partition
-    * reach the shuffle, vs the window form shuffling and sorting every
-    * detail row (q_events_topn_user keeps the window form for the
-    * per-user case where |groups| ≈ |rows|; the heap wins when groups
-    * are few and rows are many). Deterministic tiebreak (value DESC,
-    * event_id ASC) makes the oracle hash-exact. */
+  /** Top-5 events per type by value: `row_number() <= 5` over
+    * (value DESC, event_id ASC), the oracle's order, so the result is
+    * hash-exact. With k under
+    * `spark.sql.optimizer.windowGroupLimitThreshold` Spark plans a
+    * partial WindowGroupLimit before the shuffle, so each task sends at
+    * most |types|·5 rows to it. */
   def qTopkHeap(s: SparkSession, d: String): DataFrame = {
-    val topk = graft.operators.TopK.topk(5)
+    val w = Window.partitionBy(col("event_type"))
+      .orderBy(col("value").desc, col("event_id"))
     Tables.events(s, d)
       .where(col("value").isNotNull)
-      .groupBy(col("event_type"))
-      .agg(topk(col("value"), col("event_id")).as("top"))
-      .select(col("event_type"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("event_type"), (col("i") + 1).cast("int").as("rk"),
-        col("s.value").as("value"), col("s.id").as("event_id"))
+      .select(col("event_type"), row_number().over(w).as("rk"),
+        col("value"), col("event_id"))
+      .where(col("rk") <= 5)
       .orderBy(col("event_type"), col("rk"))
   }
 
   /** Banded temporal range join: per event, how many other events of
-    * the same type fall within ±1 minute — graft.operators.RangeJoin
-    * (equi-join on time bins, never a nested-loop theta join). */
+    * the same type fall within ±1 minute. Written as the plain join;
+    * graft.plans.BandedRangeJoinRule bins the `abs(…) <=` band next to
+    * the event_type key, so it is an equi-join on (type, bin), never a
+    * nested loop. The left join-back keeps events with no neighbour at
+    * zero. */
   def qRangeJoin(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-      .withColumn("ts_us", unix_micros(col("ts")))
-    graft.operators.RangeJoin.neighborCounts(
-      ev, partCols = Seq("event_type"), idCol = "event_id",
-      timeCol = "ts_us", radius = 60000000L)
+      .select(col("event_id"), col("event_type"),
+        unix_micros(col("ts")).as("ts_us"))
+    val a = ev.select(col("event_id").as("id_a"), col("event_type").as("ty_a"),
+      col("ts_us").as("t_a"))
+    val b = ev.select(col("event_id").as("id_b"), col("event_type").as("ty_b"),
+      col("ts_us").as("t_b"))
+    val near = a.join(b, col("ty_a") === col("ty_b") &&
+        abs(col("t_a") - col("t_b")) <= lit(60000000L) &&
+        col("id_a") =!= col("id_b"))
+      .groupBy(col("id_a").as("event_id"))
+      .agg(count(lit(1)).as("n_near"))
+    ev.select(col("event_id"))
+      .join(near, Seq("event_id"), "left")
+      .select(col("event_id"), coalesce(col("n_near"), lit(0L)).as("n_near"))
       .orderBy(col("event_id"))
   }
 
@@ -1655,8 +1666,8 @@ object Events {
     * under a 5% hot user: Spark evaluates sliding min/max frames by
     * RE-AGGREGATING the frame per row (no inverse for min/max), so the
     * hot task pays O(n_hot · frame_rows) — quadratic in the hot key's
-    * share, the classic window-skew death. The replacement is the
-    * slidingRangeSum union-merge discipline, O(n log n) with
+    * share, the classic window-skew death. The replacement merges
+    * probe rows into the sorted data, O(n log n) with
     * streaming-frame windows only and NO bounded frame anywhere:
     *
     *   1. each purchase contributes TWO probe rows into a per-user

@@ -33,8 +33,8 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  /** (edges, deg) of the part co-purchase graph — shared by the
-    * triangle family and link prediction.
+  /** The undirected (pa, pb) edges of the part co-purchase graph,
+    * pa < pb — shared by every graph query but PageRank.
     *
     * Round 14: pairs are generated from ONE per-order sorted distinct
     * item array (hash(l_orderkey) exchange + collect_set, pairs via a
@@ -47,13 +47,10 @@ object Graph {
     * the per-order pair array never explodes a task. Same output:
     * distinct items per order == collect_set, ascending array ⇒
     * (ps[i], ps[j]) i<j enumerates exactly the a.part < b.part join. */
-  private def edgeParts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val edges = graft.operators.BasketPairs.pairRows(
+  private def edgeParts(s: SparkSession, d: String): DataFrame =
+    graft.operators.BasketPairs.pairRows(
       Tables.lineitem(s, d), "l_orderkey", "l_partkey")
       .distinct()
-    (edges, degreesOf(edges))
-  }
 
   /** Both orientations of every undirected (pa, pb) edge as (a, b)
     * rows from ONE explode, so the pair plan above it is planned and
@@ -64,19 +61,23 @@ object Graph {
         struct(col("pb").as(a), col("pa").as(b)))).as("ed"))
       .select(col(s"ed.$a").as(a), col(s"ed.$b").as(b))
 
+  /** Node degrees from ONE explode of both endpoints, so the edge plan
+    * is read once (a union of two projections plans it twice). */
   private def degreesOf(edges: DataFrame): DataFrame =
-    edges.select(col("pa").as("node"))
-      .unionAll(edges.select(col("pb").as("node")))
+    edges.select(explode(array(col("pa"), col("pb"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
-  /** Shared triangle machinery: (edges, deg, oriented, closedWedges)
-    * of the part co-purchase graph. The oriented list is checkpointed
-    * once (it feeds both wedge sides and the closing check); closed
-    * wedges carry all three triangle corners (center u, leaves x, y)
-    * so the census and the per-node coefficient share one plan. */
+  /** Shared triangle machinery: (edges, deg, closedWedges) of the part
+    * co-purchase graph. The edge list is materialized once (it feeds
+    * the degrees, both orientation joins and the edge count), and so
+    * is the oriented list (it feeds both wedge sides and the closing
+    * check); closed wedges carry all three triangle corners (center
+    * u, leaves x, y) so the census and the per-node coefficient share
+    * one plan. */
   private def triangleParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (edges, deg) = edgeParts(s, d)
+    val edges = Materialize(edgeParts(s, d))
+    val deg = degreesOf(edges)
     val aLower = col("da") < col("db") ||
       (col("da") === col("db") && col("pa") < col("pb"))
     val oriented = Materialize(edges
@@ -208,11 +209,11 @@ object Graph {
     * (≤ deg·avg-deg candidate rows each). The |nodes|-sized degree
     * table joins un-hinted — AQE broadcasts it only when small. */
   def qGraphCommonNeighbors(s: SparkSession, d: String): DataFrame = {
-    // the edge list feeds FIVE consumers (degrees twice via the union,
-    // adjacency twice, anti-join probe) — checkpoint it once so the
-    // lineitem scan and the pair-generation self-join run a single
-    // time; everything downstream reads the materialized edges
-    val edges = Materialize(edgeParts(s, d)._1)
+    // the edge list feeds FOUR consumers (degrees, adjacency twice,
+    // anti-join probe) — checkpoint it once so the lineitem scan and
+    // the pair-generation self-join run a single time; everything
+    // downstream reads the materialized edges
+    val edges = Materialize(edgeParts(s, d))
     val deg = degreesOf(edges)
     val adj = symmetric(edges, "u", "v")
     val qn = adj.where(col("u") <= LinkQueryCap)
@@ -260,7 +261,7 @@ object Graph {
     // round 2 its estimate (a union under an aggregate) exceeds the
     // adjacency's measured size, so unhinted the planner broadcasts the
     // adjacency instead.
-    val adj = Materialize(symmetric(edgeParts(s, d)._1, "u", "v"))
+    val adj = Materialize(symmetric(edgeParts(s, d), "u", "v"))
     var reached = adj.select(col("u").as("node")).where(col("node") <= LinkQueryCap)
       .distinct().select(col("node"), lit(0).as("hop"))
     for (k <- 1 to KhopLimit) {
@@ -291,7 +292,7 @@ object Graph {
     * is built once for the seed and expansion sides. Integer counts,
     * one final rounded double division — engine-exact. */
   def qGraphNeighborhood(s: SparkSession, d: String): DataFrame = {
-    val adj = symmetric(Materialize(edgeParts(s, d)._1), "u", "v")
+    val adj = symmetric(Materialize(edgeParts(s, d)), "u", "v")
     val seeds = adj.where(col("u") <= LinkQueryCap)
       .select(col("u").as("a"), col("v").as("w"))
     val n1 = seeds.groupBy(col("a"))
@@ -342,7 +343,7 @@ object Graph {
     * generated SQL. R is summed as an exact int (order-independent),
     * clamped at 50 per register, so every step is deterministic. */
   def qGraphAnf(s: SparkSession, d: String): DataFrame = {
-    val adj = Materialize(symmetric(edgeParts(s, d)._1, "u", "v"))
+    val adj = Materialize(symmetric(edgeParts(s, d), "u", "v"))
     val m0 = adj.select(col("u").as("node")).distinct()
       .select(col("node"),
         explode(sequence(lit(0), lit(AnfRegisters - 1))).as("reg"))
@@ -403,7 +404,7 @@ object Graph {
     * whose value at exact powers of two is one ulp from flipping the
     * bucket. Two aggregates (degree, then bucket), nothing else. */
   def qGraphDegreeHist(s: SparkSession, d: String): DataFrame = {
-    val deg = degreesOf(edgeParts(s, d)._1)
+    val deg = degreesOf(edgeParts(s, d))
     deg.select(col("deg"),
         (length(bin(col("deg"))) - 1).as("bucket"))
       .groupBy(col("bucket"))
@@ -451,7 +452,7 @@ object Graph {
     // cross join: Spark sizes a cross join as the product of its
     // sides, so a joined 1-row k multiplied every estimate above it
     // and the final deg0 ⋈ keep planned as a sort-merge join.
-    val sym = Materialize(symmetric(edgeParts(s, d)._1, "a", "b"))
+    val sym = Materialize(symmetric(edgeParts(s, d), "a", "b"))
     val deg0 = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .select(col("a").as("node"), col("deg"))
     val k = sym.agg(expr("count(1) div 2").as("ecnt"))
@@ -498,7 +499,7 @@ object Graph {
     * only when it is genuinely small), one global aggregate. No
     * windows, no pair explosion. */
   def qGraphAssortativity(s: SparkSession, d: String): DataFrame = {
-    val edges = Materialize(edgeParts(s, d)._1)
+    val edges = Materialize(edgeParts(s, d))
     val deg = degreesOf(edges)
     // a union of two projections, not `symmetric`: both read the
     // checkpointed edges, and the one-explode form measured slower here
@@ -574,7 +575,7 @@ object Graph {
     * reused by all rounds. */
   private def lpaLabels(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val e = Materialize(symmetric(edgeParts(s, d)._1, "src", "dst")
+    val e = Materialize(symmetric(edgeParts(s, d), "src", "dst")
       .select(lpaInRange(col("src").between(0L, LpaLabelSpan - 1), col("src"))
         .as("src"), col("dst")))
     // each round's labels feed exactly one consumer, but without a

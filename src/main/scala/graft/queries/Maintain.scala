@@ -348,18 +348,17 @@ object Maintain {
       .agg(count(lit(1)).as("n"),
         sum(round(col("value") * 100).cast("long")).as("sum_c"))
 
-  /** Top-3 leaderboard per type via the bounded-heap TopK aggregate —
-    * map-side-combined, never a per-type rank-window sort of the full
-    * user list. Cent totals ride the heap as doubles (exact below
-    * 2^53 cents ≈ $90 T per user — documented envelope). */
+  /** Top-3 leaderboard per type: `row_number() <= 3` over (sum_c
+    * DESC, user_id), the rebuild oracle's order. Spark plans a partial
+    * WindowGroupLimit before the shuffle, so each task sends at most
+    * |types|·3 rows to it, never the full per-type user list. */
   def leaderboard(totals: DataFrame): DataFrame = {
-    val topk = graft.operators.TopK.topk(3)
+    val w = Window.partitionBy(col("event_type"))
+      .orderBy(col("sum_c").desc, col("user_id"))
     totals
-      .groupBy(col("event_type"))
-      .agg(topk(col("sum_c").cast("double"), col("user_id")).as("top"))
-      .select(col("event_type"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("event_type"), (col("i") + 1).cast("int").as("rk"),
-        col("s.id").as("user_id"), col("s.value").cast("long").as("sum_c"))
+      .select(col("event_type"), row_number().over(w).as("rk"),
+        col("user_id"), col("sum_c"))
+      .where(col("rk") <= 3)
   }
 
   /** Incremental TOP-K maintenance — the leaderboard-shaped FOURTH
@@ -648,7 +647,7 @@ object Maintain {
     * parquet reads the same total bytes as the wide scan (columnar),
     * and the partial aggregation means only DISTINCT values per
     * partition reach the shuffle. At 100 TB the exact distinct is
-    * still the swap-out for `graft.operators.Sketches` (HLL) or the
+    * still the swap-out for Spark's `hll_sketch_agg` (HLL) or the
     * KMV sketch behind q_approx_distinct — one pass, constant state;
     * exact is kept here because the oracle hashes it. */
   def qProfile(spark: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.text.TextAnalysis._
@@ -250,31 +251,23 @@ object Text {
 
   /** The cap core over a (doc_id, source, quality, n_toks) table —
     * split out so the spec can plant a source that exceeds the cap.
-    * Selection runs on the bounded-heap TopK aggregate (map-side
-    * combinable: each task surfaces at most `cap` candidates per
-    * source, so only |sources|·cap rows reach the shuffle), NEVER a
-    * per-source rank window, which would sort every document of a
-    * dominant crawl domain into one task. The heap's (value DESC,
-    * id ASC) total order IS the oracle's ORDER BY quality DESC,
-    * doc_id ASC, so quality goes in as the value and doc_id as the
-    * id — no packing. Quality is 6-dp-rounded, so round(quality·10⁶)
-    * is an exact integer ≤ 2²⁰, exactly representable as the heap's
-    * double value with NO ceiling on doc_id (the r12 pack silently
-    * corrupted the keep set once doc_id ≥ 2²⁴ — any ≥2× ScaleGen
-    * copy; ADVICE r12 item 2). Mixture shares close on the
-    * truncating integer-ppm grid with the numerator widened through
-    * DECIMAL(38,0) (the q_pareto discipline — a 100 TB corpus's
-    * token count overflows ppm-scaled BIGINT). The one nested-loop
-    * join is the cross with the provably 1-row broadcast totals. */
+    * Selection is `row_number() <= cap` over (quality DESC, doc_id),
+    * the oracle's ORDER BY, with no packing and so no ceiling on
+    * doc_id. Spark plans a partial WindowGroupLimit before the
+    * shuffle, so each task sends at most |sources|·cap rows to it and
+    * a dominant crawl domain is never sorted whole in one task.
+    * Mixture shares close on the truncating integer-ppm grid with the
+    * numerator widened through DECIMAL(38,0) (the q_pareto discipline
+    * — a 100 TB corpus's token count overflows ppm-scaled BIGINT). The
+    * one nested-loop join is the cross with the provably 1-row
+    * broadcast totals. */
   def corpusCap(scored: DataFrame, cap: Int): DataFrame = {
-    val topk = graft.operators.TopK.topk(cap)
-    val ranked = scored.withColumn("rank_v",
-      round(col("quality") * 1000000L).cast("double"))
-    val kept = ranked
-      .groupBy(col("source"))
-      .agg(topk(col("rank_v"), col("doc_id")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t.id").as("doc_id"), lit(1L).as("is_kept"))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("quality").desc, col("doc_id"))
+    val kept = scored
+      .select(col("doc_id"), row_number().over(w).as("rk"))
+      .where(col("rk") <= cap)
+      .select(col("doc_id"), lit(1L).as("is_kept"))
     val per = scored
       .join(broadcast(kept), Seq("doc_id"), "left")
       .groupBy(col("source"))
@@ -456,32 +449,28 @@ object Text {
       .orderBy(col("lang"))
   }
 
-  /** Deterministic stratified hash sample: md5-fraction membership per
-    * doc_id with per-language keep rates — reproducible across runs,
-    * partitionings, and engines (graft.operators.Sampling). */
   /** Exactly-k-per-group deterministic sample ("k examples per class",
     * the eval-set/few-shot curation shape): the k docs with the
-    * smallest md5-fraction per language. NOT a row_number window —
-    * that would shuffle+sort the whole corpus on lang; the bounded
-    * TopKAggregator keeps ≤ k candidates per group per task, so only
-    * |groups|·k rows per partition reach the shuffle. Hash order is
-    * engine-portable (the q_sample_stratified fraction), so the picked
-    * set is bit-identical cross-engine. */
+    * smallest md5-fraction per language, by `row_number() <= k` over
+    * (fraction, doc_id). Spark plans a partial WindowGroupLimit before
+    * the shuffle, so each task sends at most |groups|·k rows to it,
+    * not the whole corpus. Hash order is engine-portable (the
+    * q_sample_stratified fraction), so the picked set is bit-identical
+    * cross-engine. */
   def qSamplePergroup(s: SparkSession, d: String): DataFrame = {
     val k = 10
-    val tk = graft.operators.TopK.topk(k)
+    val w = Window.partitionBy(col("lang")).orderBy(
+      graft.operators.Sampling.hashFraction(col("doc_id")), col("doc_id"))
     Tables.documents(s, d)
-      // TopK keeps the LARGEST values; negate the fraction to pick the
-      // smallest (ties broken by doc_id ASC on both engines)
-      .select(col("lang"),
-        (-graft.operators.Sampling.hashFraction(col("doc_id"))).as("v"),
-        col("doc_id"))
-      .groupBy(col("lang"))
-      .agg(tk(col("v"), col("doc_id")).as("picks"))
-      .select(col("lang"), explode(col("picks.id")).as("doc_id"))
+      .select(col("lang"), col("doc_id"), row_number().over(w).as("rk"))
+      .where(col("rk") <= k)
+      .select(col("lang"), col("doc_id"))
       .orderBy(col("lang"), col("doc_id"))
   }
 
+  /** Deterministic stratified hash sample: md5-fraction membership per
+    * doc_id with per-language keep rates — reproducible across runs,
+    * partitionings, and engines (graft.operators.Sampling). */
   def qSampleStratified(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling.stratifiedSample(
       Tables.documents(s, d), keyCol = "doc_id", strataCol = "lang",

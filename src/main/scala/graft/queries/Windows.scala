@@ -56,24 +56,22 @@ object Windows {
 
   /** RANGE frame over a numeric ORDER key — stupidb test_range_window.
     * Frame membership depends on values, not row positions, so ties are
-    * handled identically by both engines. Computed with graft's
-    * O(n log n) union-sort formulation (operators.SlidingAgg
-    * .slidingRangeSum) instead of Spark's native bounded-start RANGE
-    * frame, which re-aggregates per row (O(n·w) — the same trap
-    * q_win_stats avoids with prefix sums); equivalence with the native
-    * frame is spec-asserted. */
-  def qWinRange(s: SparkSession, d: String): DataFrame =
-    graft.operators.SlidingAgg.slidingRangeSum(
-      Tables.orders(s, d),
-      partitionCols = Seq("o_custkey"),
-      orderVal = col("o_totalprice"),
-      radius = lit(10000.0),
-      valueCol = col("o_totalprice"),
-      uniqueKey = Seq("o_orderkey"))
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        col("sr_cnt").as("n_within_10k"),
-        col("sr_sum").cast("double").as("sum_within_10k"))
+    * handled identically by both engines. The order key is the
+    * DECIMAL(18,4) price, so the frame boundary is exact. Spark
+    * re-aggregates a bounded RANGE frame per row, which costs the rows
+    * within 10000 of each order; TPC-H keeps about 10 orders per
+    * customer at every scale factor, so that frame stays small. */
+  def qWinRange(s: SparkSession, d: String): DataFrame = {
+    val w = Win.range(
+      partitionBy = Seq(col("o_custkey")),
+      orderBy = Seq(dec("o_totalprice")),
+      preceding = Some(10000L))
+    Tables.orders(s, d).select(
+      col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
+      count(lit(1)).over(w).as("n_within_10k"),
+      sum(dec("o_totalprice")).over(w).cast("double").as("sum_within_10k"))
       .orderBy(col("o_custkey"), col("o_orderkey"))
+  }
 
   /** Temporal RANGE frame — stupidb test_temporal_range_window
     * (interval preceding over event time). */

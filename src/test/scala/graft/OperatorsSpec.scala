@@ -17,15 +17,6 @@ class OperatorsSpec extends SparkSpec {
     assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
   }
 
-  test("salted two-phase aggregation equals direct groupBy") {
-    val li = Tables.lineitem(spark, sf)
-    val direct = li.groupBy(col("l_returnflag").as("k"))
-      .agg(sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_value"),
-        count(lit(1)).as("n"))
-    val salted = SkewJoin.saltedSumCount(li, col("l_returnflag"), col("l_quantity"), 8)
-    assert(direct.exceptAll(salted).isEmpty && salted.exceptAll(direct).isEmpty)
-  }
-
   test("prefix-sum sliding stats equal Spark's direct frame computation") {
     import org.apache.spark.sql.expressions.Window
     val ord = Seq(col("o_orderdate"), col("o_orderkey"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, SpecifiedWindowFrame,
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.plans.PlanShape
 
@@ -405,6 +407,41 @@ class PlanLintSpec extends SparkSpec {
     spark.conf.set(key, graft.plans.ExactDecimalRule.ruleName)
     try names.foreach(n => assert(bigDecimalPath(plan(n)).nonEmpty, s"$n without the rule"))
     finally spark.conf.unset(key)
+  }
+
+  /** The top-k queries: each must cut its rows to k per group in every
+    * task before the shuffle, the bound a top-k promises at scale. */
+  private val topKQueries =
+    Seq("q_corpus_cap", "q_incremental_topk", "q_sample_pergroup", "q_topk_heap")
+
+  /** True when a Partial WindowGroupLimit runs below a shuffle. */
+  private def partialLimitBeforeShuffle(df: DataFrame): Boolean =
+    PlanShape.nodes(df.queryExecution.executedPlan).exists {
+      case e: ShuffleExchangeLike => PlanShape.nodes(e).exists {
+        case g: WindowGroupLimitExec => g.mode.toString == "Partial"
+        case _ => false
+      }
+      case _ => false
+    }
+
+  test("every top-k query plans a partial group limit before its shuffle") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    // negative control: above Spark's threshold no group limit is
+    // planned, and the check must see that
+    val threshold =
+      spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold").toInt
+    def rowNumberTopK(k: Int) = Tables.events(spark, sf)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("event_type")).orderBy(col("value").desc, col("event_id"))))
+      .where(col("rk") <= k)
+    assert(partialLimitBeforeShuffle(rowNumberTopK(threshold)),
+      "partial group limit detector is blind")
+    assert(!partialLimitBeforeShuffle(rowNumberTopK(threshold + 1)),
+      s"a top-k above the threshold $threshold falsely passes")
+    val byName = registered.map(b => b.name -> b.df).toMap
+    val missing = topKQueries.filterNot(n => partialLimitBeforeShuffle(byName(n)))
+    assert(missing.isEmpty, s"no partial group limit before the shuffle: ${missing.mkString(", ")}")
   }
 
   test("plans.jsonl holds every registered query's current plan shape") {

@@ -67,6 +67,10 @@ class PlanSpec extends SparkSpec {
   test("range join is a banded equi-join — never a nested loop") {
     val p = plan(gq.Events.qRangeJoin(spark, sf))
     assert(!quadratic(p), s"range join degenerated to a quadratic join:\n${p.json}")
+    // the band is BandedRangeJoinRule's bin, keyed next to event_type
+    assert(p.expands == 1 && p.joins.exists(j =>
+        Set("ty_a", "_graft_bin_l").subsetOf(j.leftKeys.toSet)),
+      s"range join is not banded next to its type key:\n${p.json}")
   }
 
   test("stratified sampling is a shuffle-free per-row filter") {
@@ -184,8 +188,10 @@ class PlanSpec extends SparkSpec {
   test("fuzzy join is an equi-join on the compound (block, band) key") {
     val p = plan(gq.Relational.qFuzzyJoin(spark, sf))
     assert(!quadratic(p), s"fuzzy join degenerated to a quadratic join:\n${p.json}")
-    assert(p.joins.exists(j => (j.leftKeys.take(2) == Seq("blk", "band")) ||
-      (j.rightKeys.take(2) == Seq("blk", "band"))),
+    // the length band is BandedRangeJoinRule's bin, keyed next to the block
+    val key = Set("blk_a", "_graft_bin_l")
+    assert(p.joins.exists(j => key.subsetOf(j.leftKeys.toSet) ||
+      key.subsetOf(j.rightKeys.toSet)),
       s"join keys missing the length band:\n${p.json}")
   }
 

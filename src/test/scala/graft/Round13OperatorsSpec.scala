@@ -10,7 +10,7 @@ class Round13OperatorsSpec extends SparkSpec {
     // The r12 double-pack q_ppm*2^24 + (2^24-1-doc_id) went negative in the
     // id term once doc_id >= 2^24 and borrowed from the quality field: doc
     // 30_000_000 (quality 0.9) would lose to doc 1 (quality 0.8). The fix
-    // feeds quality and doc_id to TopK's native (value DESC, id ASC) order.
+    // ranks by (quality DESC, doc_id ASC) directly, with no packing.
     val big = 30000000L // a ScaleGen 3rd-copy id: 3*10^7 > 2^24
     val scored = Seq(
       (big, "src", 0.9, 100L),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Cluster
-import graft.operators.{AsofJoin, RangeJoin, Sampling}
+import graft.operators.{AsofJoin, Sampling}
 
 /** Round-2 operators: as-of join, banded range join, connected
   * components, deterministic sampling — each checked against a naive
@@ -37,19 +37,20 @@ class Round2OperatorsSpec extends SparkSpec {
   }
 
   test("banded range join equals the direct theta-join neighbor count") {
-    val ev = eventsUs.limit(2000)
-    val fast = RangeJoin.neighborCounts(
-      ev, Seq("event_type"), "event_id", "ts_us", radius = 60000000L)
-    val a = ev.select(col("event_type").as("t_a"), col("event_id").as("id_a"),
-      col("ts_us").as("ts_a"))
-    val b = ev.select(col("event_type").as("t_b"), col("event_id").as("id_b"),
-      col("ts_us").as("ts_b"))
-    val naive = a.join(b,
-        col("t_a") === col("t_b") && col("id_a") =!= col("id_b") &&
-          abs(col("ts_a") - col("ts_b")) <= 60000000L, "left")
-      .groupBy(col("id_a").as("event_id"))
-      .agg(count(col("id_b")).as("n_near"))
-    assert(fast.exceptAll(naive).isEmpty && naive.exceptAll(fast).isEmpty)
+    // the reference is computed on the driver: a Spark theta-join is
+    // banded by the same rule as the query, so it is no reference
+    val fast = graft.queries.Events.qRangeJoin(spark, sf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ev = eventsUs.select("event_id", "event_type", "ts_us").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val byType = ev.groupBy(_._2)
+    val naive = ev.map { case (id, ty, t) =>
+      id -> byType(ty).count { case (id2, _, t2) => id2 != id && math.abs(t - t2) <= 60000000L }
+        .toLong
+    }.toMap
+    assert(fast.size == ev.length && fast == naive,
+      "banded neighbor counts differ from the driver-side count")
+    assert(naive.values.exists(_ > 0), "no event has a neighbour: the check is vacuous")
   }
 
   test("connected components label chains, cliques, and separate parts") {
@@ -126,32 +127,6 @@ class Round2OperatorsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(got == Set((1L, 1L, true), (2L, 2L, true), (3L, 1L, false),
       (9L, 9L, true)))
-  }
-
-  test("sharded HLL sketches merge to the same estimate as one pass") {
-    import graft.operators.Sketches
-    val ev = Tables.events(spark, sf)
-    // shard by day, merge back per event_type
-    val sketches = Sketches.shardedSketches(
-      ev.withColumn("day", to_date(col("ts"))),
-      groupCols = Seq("event_type"), shardCol = "day", valueCol = "user_id")
-    val merged = Sketches.mergedEstimates(sketches, Seq("event_type"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // one-pass sketch over the unsharded data must agree exactly
-    // (HLL union is lossless for same-lgK sketches)
-    val direct = ev.groupBy(col("event_type"))
-      .agg(Sketches.hllEstimate(
-        Sketches.hllSketch(col("user_id"))).as("approx_distinct"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(merged == direct, s"merge lost information: $merged vs $direct")
-    // and the estimate is close to the exact distinct count
-    val exact = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (k, n) =>
-      assert(math.abs(merged(k) - n) <= math.max(3, n * 0.05),
-        s"$k: estimate ${merged(k)} vs exact $n")
-    }
   }
 
   test("hash sampling is deterministic, nested by rate, and unbiased-ish") {

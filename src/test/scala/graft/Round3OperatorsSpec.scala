@@ -27,40 +27,6 @@ class Round3OperatorsSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
-  test("slidingRangeSum equals Spark's native RANGE frame") {
-    val orders = Tables.orders(spark, sf)
-    val got = graft.operators.SlidingAgg.slidingRangeSum(
-      orders,
-      partitionCols = Seq("o_custkey"),
-      orderVal = col("o_totalprice"),
-      radius = lit(10000.0),
-      valueCol = col("o_totalprice"),
-      uniqueKey = Seq("o_orderkey"))
-      .select(col("o_orderkey"), col("sr_sum"), col("sr_cnt"))
-    val want = orders.select(
-      col("o_orderkey"),
-      expr("""sum(cast(o_totalprice AS DECIMAL(18,4))) OVER (
-              PARTITION BY o_custkey ORDER BY o_totalprice
-              RANGE BETWEEN 10000.0 PRECEDING AND CURRENT ROW)""").as("sr_sum"),
-      expr("""count(1) OVER (PARTITION BY o_custkey ORDER BY o_totalprice
-              RANGE BETWEEN 10000.0 PRECEDING AND CURRENT ROW)""").as("sr_cnt"))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-  }
-
-  test("slidingRangeSum handles duplicate order values (peer rows)") {
-    import spark.implicits._
-    // peers at v=5 must all see both peers in-frame; boundary v=3 with
-    // radius 2 is INSIDE the frame of v=5
-    val df = Seq((1L, 10L, 3.0), (1L, 11L, 5.0), (1L, 12L, 5.0),
-      (1L, 13L, 8.0)).toDF("g", "k", "v")
-    val got = graft.operators.SlidingAgg.slidingRangeSum(
-      df, Seq("g"), col("v"), lit(2.0), col("v"), Seq("k"))
-      .select(col("k"), col("sr_sum").cast("double"), col("sr_cnt"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
-    assert(got == Set((10L, 3.0, 1L), (11L, 13.0, 3L), (12L, 13.0, 3L),
-      (13L, 8.0, 1L)))
-  }
-
   test("varFrameAgg negative preceding can empty the frame") {
     import spark.implicits._
     // preceding = -1, following = 0 → frame [rn+1, rn]: always empty

@@ -352,17 +352,4 @@ class Round8OperatorsSpec extends SparkSpec {
     assert(fwd.isNullAt(2) && fwd.getString(3) == "near_b",
       s"forward fill mixed rows: $fwd")
   }
-
-  test("top-k aggregator rejects k <= 0 and keeps buffer sorted") {
-    intercept[IllegalArgumentException](new graft.operators.TopKAggregator(0))
-    intercept[IllegalArgumentException](new graft.operators.TopKAggregator(-3))
-    val a = new graft.operators.TopKAggregator(3)
-    import graft.operators.ScoredId
-    val fed = Seq(5.0 -> 1L, 1.0 -> 2L, 3.0 -> 3L, 9.0 -> 4L, 3.0 -> 0L)
-      .foldLeft(a.zero) { case (b, (v, i)) => a.reduce(b, ScoredId(v, i)) }
-    assert(fed == Seq(ScoredId(9.0, 4L), ScoredId(5.0, 1L), ScoredId(3.0, 0L)),
-      s"splice order wrong: $fed")
-    val merged = a.merge(fed, Seq(ScoredId(7.0, 9L)))
-    assert(merged == Seq(ScoredId(9.0, 4L), ScoredId(7.0, 9L), ScoredId(5.0, 1L)))
-  }
 }
