@@ -1,9 +1,10 @@
 package graft
 /** Timed run of the registered queries: warm-up, then per query the min
-  * of 3 noop-sink passes. Optional argument: a comma-separated query
-  * subset (`runMain graft.Bench q_tpch1,q_tpch3`); without one every
-  * registered query runs. Input dir from `SPARK_GRAFT_SF_DIR`, record
-  * path from `SPARK_GRAFT_BENCH_OUT`. */
+  * of 3 noop-sink passes (the record also keeps all three). Optional
+  * argument: a comma-separated query subset (`runMain graft.Bench
+  * q_tpch1,q_tpch3`); without one every registered query runs. Input
+  * dir from `SPARK_GRAFT_SF_DIR`, record path from
+  * `SPARK_GRAFT_BENCH_OUT`. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val selected = SparkEntry.select(args.headOption)
@@ -52,28 +53,32 @@ object Bench {
         // a failed query reports -1, never a misleading partial elapsed time
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
-      (name, if (times.exists(_ < 0)) -1.0 else times.min)
+      (name, if (times.exists(_ < 0)) -1.0 else times.min, times)
     }
     // stdout: one small line per query, then ONE closing total line.
     // A reader that keeps only the tail of the output cut the old
     // single-line per-query map mid-line; short lines survive any tail
     // cut whole, and the total line always comes last.
-    results.foreach { case (name, sec) =>
+    results.foreach { case (name, sec, _) =>
       println(s"""{"metric":"query","query":"$name","value":$sec,"unit":"sec","stat":"min_of_3"}""")
     }
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+    val failed = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val head =
       s"""{"metric":"total","value":$total,"unit":"sec","stat":"min_of_3","n":${results.size},"failed":$failed,"sf":"$sfDir""""
     println(head + "}")
     // bench.json keeps the whole record on one line: the total line's
-    // fields plus the per-query map. The path is env-overridable and
-    // logged ABSOLUTE so a run from another cwd can't silently leave a
-    // stale repo-root snapshot looking current.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    // fields, the per-query min (`queries`) and every pass's time
+    // (`reps`, so the spread between passes is on record too). The
+    // path is env-overridable and logged ABSOLUTE so a run from another
+    // cwd can't silently leave a stale repo-root snapshot looking current.
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val line = s"""$head,"queries":$qs}"""
+    val reps = results
+      .map { case (k, _, ts) => "\"" + k + "\":" + ts.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val line = s"""$head,"queries":$qs,"reps":$reps}"""
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
       .toAbsolutePath

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.classic {
 
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.catalyst.plans.logical.Statistics
   import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
   import org.apache.spark.sql.execution.LogicalRDD
@@ -16,6 +18,13 @@ package org.apache.spark.sql.classic {
       Dataset(ds.sparkSession,
         rdd.copy()(ds.sparkSession, Some(stats), Some(rdd.constraints)))(ds.encoder)
     }
+  }
+
+  /** The Spark-private Column ↔ Expression conversions graft's native
+    * expressions (graft.plans.VecCosine, VecLshSignature) are built with. */
+  object GraftColumns {
+    def apply(build: Seq[Expression] => Expression, children: Column*): Column =
+      ExpressionUtils.column(build(children.map(ExpressionUtils.expression)))
   }
 }
 

@@ -3,31 +3,19 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Materialize
+import graft.graph.Edges
 
 /** Connected components over a near-duplicate pair list — the final
   * step of every corpus dedup pipeline: candidate PAIRS (from MinHash /
   * SimHash / exact Jaccard) become duplicate CLUSTERS, and one
   * canonical document (the minimum id) survives per cluster.
   *
-  * Two interchangeable algorithms:
-  *
-  *   - `connectedComponents`: iterative min-label propagation. Rounds
-  *     needed = graph diameter; dedup similarity graphs are
-  *     overwhelmingly tiny cliques (diameter 1-2), so this converges in
-  *     1-2 rounds and is the default. Convergence checks are FUSED:
-  *     two propagation rounds run per driver action, so the common
-  *     diameter-≤2 case pays one count() job instead of two.
-  *
-  *   - `connectedComponentsStar`: the alternating large-star/small-star
-  *     algorithm (Kiveris et al., "Connected Components in MapReduce
-  *     and Beyond", SOCC'14). Converges in O(log n) rounds regardless
-  *     of diameter, and per-round work stays proportional to the
-  *     (shrinking) edge set — the right choice when the near-dup graph
-  *     has a skewed giant component (hub pages, boilerplate), where
-  *     plain propagation re-shuffles the hot component's full frontier
-  *     every round for diameter-many rounds.
-  *
-  * Both: each round is shuffle joins + aggregations; `localCheckpoint`
+  * The algorithm is iterative min-label propagation. Rounds needed =
+  * graph diameter; dedup similarity graphs are overwhelmingly tiny
+  * cliques (diameter 1-2), so it converges in 1-2 rounds. Convergence
+  * checks are FUSED: two propagation rounds run per driver action, so
+  * the common diameter-≤2 case pays one count() job instead of two.
+  * Each round is shuffle joins + aggregations; `localCheckpoint`
   * truncates the growing lineage so round N's plan does not replay
   * rounds 1..N−1 (the classic iterative-algorithm trap on Spark).
   */
@@ -43,18 +31,8 @@ object Cluster {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    // both directions once; reused by every round. ONE explode scans
-    // the pair plan once (the union-of-two-projections form ran the
-    // full upstream pair pipeline twice when the caller had not
-    // checkpointed it), and the dedup rides the hash(src) exchange
-    // (subset rule — hash(src) clusters (src, dst)).
-    val edges = Materialize(pairs
-      .select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("ed"))
-      .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst"))
+    // both directions once; reused by every round
+    val edges = Materialize(Edges.undirected(pairs, aCol, bCol))
 
     // one propagation round: each vertex takes min(label, neighbors')
     // and carries a change flag, so convergence folds into the pass.
@@ -158,84 +136,6 @@ object Cluster {
       .join(subRep, newVerts("id") === subRep("_rep"))
       .select(newVerts("id"), col("_nl").as("cluster_id"))
     updatedExisting.unionByName(updatedNew)
-  }
-
-  /** Alternating large-star/small-star connected components
-    * (Kiveris et al., SOCC'14) — the skew-resistant variant.
-    *
-    * Each round rewires the edge set toward stars centered at
-    * component minima:
-    *   - LARGE-STAR (per center u over the undirected neighborhood):
-    *     attach every strictly-larger neighbor to
-    *     m = min(N(u) ∪ {u}). Detaches high-degree hubs' big
-    *     neighbors from each other in one pass.
-    *   - SMALL-STAR (per center u over edges oriented big→small):
-    *     attach u and all its smaller neighbors to m = min(N(u) ∪ {u}).
-    *
-    * Both are groupBy-min + join (agg-then-join, not a window over the
-    * edge list — the per-center min table is small and AQE broadcasts
-    * it). Edge count is non-increasing after the first round and the
-    * rounds needed are O(log n) independent of diameter; at fixpoint
-    * the edges ARE the component assignment (v → component min).
-    *
-    * @param pairs undirected edges, one per row
-    * @param maxIter bound on large+small rounds; a graph that needs
-    *                more throws instead of returning upper-bound labels */
-  def connectedComponentsStar(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 30): DataFrame = {
-    val vertices = Materialize(pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id")))
-      .distinct())
-    // oriented big→small, self-loops dropped
-    var edges = Materialize(pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct())
-    var edgeCount = edges.count()
-
-    // m = min over the undirected neighborhood of each center (incl u)
-    def centerMin(nbrs: DataFrame): DataFrame =
-      nbrs.groupBy(col("u")).agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("_mn"), col("u")).as("m"))
-
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // ---- large-star ----
-      val nbrs = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val ls = nbrs.join(centerMin(nbrs), "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m ⇒ oriented
-        .distinct()
-      // ---- small-star (input already oriented big→small) ----
-      val ss0 = ls
-      val sm = centerMin(ss0)
-      val next = Materialize(ss0.join(sm, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(ss0.select(col("u"), col("v")).join(sm, "u")
-          .select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct())
-      // convergence: the edge multiset is stable (next ⊆ prev by
-      // anti-join emptiness + equal counts ⇒ sets equal). Edge counts
-      // are non-increasing, so the count also tracks the shrinkage.
-      val nextCount = next.count()
-      val grew = next.join(edges, Seq("u", "v"), "left_anti").limit(1).count()
-      converged = nextCount == edgeCount && grew == 0
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within maxIter=$maxIter rounds; " +
-          "its labels would only be an upper bound on the true components")
-    // fixpoint edges are stars (v, componentMin); centers label themselves.
-    val lbl = edges.groupBy(col("u").as("vid")).agg(min(col("v")).as("lbl"))
-    vertices.join(lbl, vertices("id") === lbl("vid"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
   }
 
   /** Cluster assignment + canonical flag for a document table given its

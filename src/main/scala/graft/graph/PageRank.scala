@@ -1,26 +1,24 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Materialize
 
 /** Distributed PageRank over an edge list — the web-graph importance
   * signal corpus-curation pipelines use to weight crawl documents
   * (reference semantics: Page et al. 1999; same iterate-join shape as
   * graft.dedup.Cluster's label propagation).
   *
-  * Scale shape: the symmetrized edge list is built with ONE explode +
-  * ONE distinct (a union of two projections would scan the input
-  * twice; distinct-then-union-then-distinct would shuffle three
-  * times), enriched with the SOURCE degree once, and materialized with
-  * `localCheckpoint` so iterations read it instead of re-running its
-  * shuffle (SURVEY §3.6 iterative recipe). Each iteration is then
-  * exactly ONE join (rank table against the edge list on src — AQE
-  * broadcasts the rank side while it fits, shuffles it on the shared
-  * src key when it doesn't) and ONE dst aggregate with map-side
-  * partial sums: O(|E|) per round, never node² anywhere. The node
-  * count is a single count job over the checkpointed edges, as in any
-  * production graph engine.
+  * Scale shape: the symmetrized edge list comes from
+  * [[Edges.undirected]] (one explode, one hash(src) shuffle that also
+  * serves the degree aggregate and the enrich join), and the whole
+  * computation is ONE lazy plan: no driver action, no checkpoint. The
+  * node count rides along as a broadcast 1-row aggregate, and runtime
+  * exchange reuse shares the edge build's shuffle with every
+  * consumer. Each iteration is exactly ONE join (rank table against
+  * the edge list on src — AQE broadcasts the rank side while it fits,
+  * shuffles it on the shared src key when it doesn't) and ONE dst
+  * aggregate with map-side partial sums: O(|E|) per round, never
+  * node² anywhere.
   *
   * Engine portability (what lets q_graph_pagerank carry a full
   * hash-checked oracle): rank state is an INTEGER in pico-units
@@ -57,81 +55,12 @@ object PageRank {
   def pagerank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = DefaultIters): DataFrame = {
-    // Few iterations: ONE lazy plan (no driver action, no eager
-    // checkpoint) is ~1.7× faster end-to-end — runtime exchange reuse
-    // collapses the edge build's shuffle across all consumers. Deep
-    // iteration counts flip the trade: the e-subtree is re-planned and
-    // its post-shuffle aggregates recomputed once per iteration, so
-    // lineage truncation via localCheckpoint wins there.
-    if (iters <= 4) pagerankOneJob(edges, srcCol, dstCol, iters)
-    else pagerankCheckpointed(edges, srcCol, dstCol, iters)
-  }
-
-  /** Single-job variant: no driver collect, no eager checkpoint — the
-    * node count rides along as a broadcast 1-row aggregate and the
-    * edge build's exchange is shared by every consumer via runtime
-    * exchange reuse. Bit-identical output to the checkpointed shape
-    * (spec-asserted). */
-  def pagerankOneJob(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = DefaultIters): DataFrame = {
-    val sym = edges
-      .select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("ed"))
-      .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
+    val sym = Edges.undirected(edges, srcCol, dstCol)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("sdeg"))
     val e = sym.join(deg, "src")
     // node count as a broadcast 1-row aggregate — no driver action
     val nn = deg.agg(count(lit(1)).as("n"))
     val nodes = deg.select(col("src").as("node"), col("sdeg").as("deg"))
-    var ranks = nodes.crossJoin(broadcast(nn))
-      .select(col("node"), expr(s"${Pico}L div n").as("rp"))
-    for (_ <- 1 to iters) {
-      ranks = e
-        .join(ranks.select(col("node").as("src"), col("rp")), "src")
-        .select(col("dst").as("node"), expr("rp div sdeg").as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("sp"))
-        .crossJoin(broadcast(nn))
-        .select(col("node"),
-          (expr(s"${TeleportPico}L div n") +
-            expr("(85L * sp) div 100")).as("rp"))
-    }
-    ranks.join(nodes, "node")
-      .select(col("node"), col("deg"),
-        (expr("(rp + 5000L) div 10000").cast("double") / lit(1e8))
-          .as("rank"))
-  }
-
-  /** Checkpointed variant for deep iteration counts: the degree-
-    * enriched edge list is materialized once (lineage truncation); the
-    * node count rides along as a broadcast 1-row aggregate over the
-    * checkpointed edges (no driver collect — same trick as the
-    * one-job shape, and the aggregate reads the materialized blocks,
-    * not the original shuffle). */
-  def pagerankCheckpointed(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int): DataFrame = {
-    // ONE hash(src) shuffle feeds the whole edge build: hash(src)
-    // satisfies ClusteredDistribution for the (src,dst) dedup, the
-    // degree aggregate, AND the enrich join (subset rule, SURVEY §3.7),
-    // so none of them adds another exchange over the doubled edges
-    val sym = edges
-      .select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("ed"))
-      .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("sdeg"))
-    // degree-enriched edges, materialized once for the iterations
-    val e = Materialize(sym.join(deg, "src"))
-    val nodes = e.groupBy(col("src")).agg(first(col("sdeg")).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-    val nn = e.agg(countDistinct(col("src")).as("n"))
     var ranks = nodes.crossJoin(broadcast(nn))
       .select(col("node"), expr(s"${Pico}L div n").as("rp"))
     for (_ <- 1 to iters) {

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 /** A REAL image codec for the multimodal family: 24-bit uncompressed
   * Windows BMP (BITMAPFILEHEADER + BITMAPINFOHEADER), the standard
   * uncompressed interchange format — encode and decode are exact
@@ -26,25 +28,6 @@ object Bmp {
     * most often gets wrong (exercised by the 3-wide spec fixture). */
   def rowStride(width: Int): Int = (width * 3 + 3) & ~3
 
-  private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-  }
-
-  private def putU32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-    b(off + 2) = ((v >> 16) & 0xff).toByte
-    b(off + 3) = ((v >> 24) & 0xff).toByte
-  }
-
-  private def getU16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
-  private def getI32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /** Encode 8-bit grayscale pixels (row-major, top-down, length w·h,
     * values 0–255) as a 24-bpp bottom-up BMP. */
   def encodeGray(width: Int, height: Int, pix: Array[Int]): Array[Byte] = {
@@ -52,17 +35,18 @@ object Bmp {
       s"pixel buffer ${pix.length} != $width x $height")
     val stride = rowStride(width)
     val out = new Array[Byte](encodedSize(width, height))
-    out(0) = 'B'; out(1) = 'M'
-    putU32(out, 2, out.length)
-    putU32(out, 10, FileHeaderSize + InfoHeaderSize) // pixel data offset
-    putU32(out, 14, InfoHeaderSize)
-    putU32(out, 18, width)
-    putU32(out, 22, height) // positive -> bottom-up rows
-    putU16(out, 26, 1) // planes
-    putU16(out, 28, 24) // bits per pixel
-    putU32(out, 30, 0) // BI_RGB, uncompressed
-    putU32(out, 34, stride * height)
-    putU32(out, 38, 2835); putU32(out, 42, 2835) // 72 dpi
+    ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
+      .put("BM".getBytes("US-ASCII")).putInt(out.length)
+      .putInt(0) // reserved
+      .putInt(FileHeaderSize + InfoHeaderSize) // pixel data offset
+      .putInt(InfoHeaderSize)
+      .putInt(width)
+      .putInt(height) // positive -> bottom-up rows
+      .putShort(1.toShort) // planes
+      .putShort(24.toShort) // bits per pixel
+      .putInt(0) // BI_RGB, uncompressed
+      .putInt(stride * height)
+      .putInt(2835).putInt(2835) // 72 dpi
     var y = 0
     while (y < height) {
       // row y of the image is stored at bottom-up position height-1-y
@@ -90,11 +74,12 @@ object Bmp {
     require(bytes.length >= FileHeaderSize + InfoHeaderSize,
       s"BMP too short: ${bytes.length} bytes")
     require(bytes(0) == 'B' && bytes(1) == 'M', "not a BMP (missing BM magic)")
-    val dataOffset = getI32(bytes, 10)
-    val width = getI32(bytes, 18)
-    val rawHeight = getI32(bytes, 22)
-    val bpp = getU16(bytes, 28)
-    val compression = getI32(bytes, 30)
+    val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val dataOffset = b.getInt(10)
+    val width = b.getInt(18)
+    val rawHeight = b.getInt(22)
+    val bpp = b.getShort(28) & 0xffff
+    val compression = b.getInt(30)
     require(bpp == 24, s"only 24-bpp BMP supported, got $bpp")
     require(compression == 0, s"only uncompressed BMP supported, got $compression")
     require(width > 0 && rawHeight != 0,

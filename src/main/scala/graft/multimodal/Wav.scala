@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 /** Minimal REAL RIFF/WAVE PCM codec — the audio analog of [[Bmp]]
   * (round 13; VERDICT r12 item 4: make a second modality real the way
   * BMP did for images). Encodes and decodes canonical 16-bit PCM WAV
@@ -33,24 +35,12 @@ object Wav {
     HeaderSize + data + (data & 1)
   }
 
-  private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-  }
+  private def le(b: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
 
-  private def putU32(b: Array[Byte], off: Int, v: Long): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-    b(off + 2) = ((v >> 16) & 0xff).toByte
-    b(off + 3) = ((v >> 24) & 0xff).toByte
-  }
+  private def u16(b: ByteBuffer, off: Int): Int = b.getShort(off) & 0xffff
 
-  private def getU16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
-  private def getU32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+  private def u32(b: ByteBuffer, off: Int): Long = b.getInt(off) & 0xffffffffL
 
   private def tag(b: Array[Byte], off: Int): String =
     new String(b, off, 4, "US-ASCII")
@@ -65,24 +55,18 @@ object Wav {
     val dataSize = 2 * samples.length
     val pad = dataSize & 1 // always 0 for 16-bit, kept for spec fidelity
     val out = new Array[Byte](HeaderSize + dataSize + pad)
-    out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    putU32(out, 4, (out.length - 8).toLong)
-    out(8) = 'W'; out(9) = 'A'; out(10) = 'V'; out(11) = 'E'
-    out(12) = 'f'; out(13) = 'm'; out(14) = 't'; out(15) = ' '
-    putU32(out, 16, 16L) // PCM fmt chunk body size
-    putU16(out, 20, 1) // audioFormat = PCM
-    putU16(out, 22, channels)
-    putU32(out, 24, sampleRate.toLong)
-    putU32(out, 28, sampleRate.toLong * channels * 2) // byte rate
-    putU16(out, 32, channels * 2) // block align
-    putU16(out, 34, 16) // bits per sample
-    out(36) = 'd'; out(37) = 'a'; out(38) = 't'; out(39) = 'a'
-    putU32(out, 40, dataSize.toLong)
-    var i = 0
-    while (i < samples.length) {
-      putU16(out, HeaderSize + 2 * i, samples(i) & 0xffff)
-      i += 1
-    }
+    le(out)
+      .put("RIFF".getBytes("US-ASCII")).putInt(out.length - 8)
+      .put("WAVEfmt ".getBytes("US-ASCII"))
+      .putInt(16) // PCM fmt chunk body size
+      .putShort(1.toShort) // audioFormat = PCM
+      .putShort(channels.toShort)
+      .putInt(sampleRate)
+      .putInt(sampleRate * channels * 2) // byte rate
+      .putShort((channels * 2).toShort) // block align
+      .putShort(16.toShort) // bits per sample
+      .put("data".getBytes("US-ASCII")).putInt(dataSize)
+      .asShortBuffer().put(samples)
     out
   }
 
@@ -95,6 +79,7 @@ object Wav {
       s"WAV too short: ${bytes.length} bytes")
     require(tag(bytes, 0) == "RIFF", "not a RIFF file (missing magic)")
     require(tag(bytes, 8) == "WAVE", "not a WAVE file (missing form type)")
+    val b = le(bytes)
     var off = 12
     var sampleRate = -1
     var channels = -1
@@ -102,23 +87,23 @@ object Wav {
     var dataLen = -1
     while (off + 8 <= bytes.length && (dataOff < 0 || channels < 0)) {
       val id = tag(bytes, off)
-      val size = getU32(bytes, off + 4)
+      val size = u32(b, off + 4)
       require(size >= 0 && off + 8 + size <= bytes.length,
         s"chunk '$id' size $size overruns file of ${bytes.length} bytes")
       val body = off + 8
       id match {
         case "fmt " =>
           require(size >= 16, s"fmt chunk too small: $size")
-          val fmt = getU16(bytes, body)
+          val fmt = u16(b, body)
           require(fmt == 1, s"only PCM (format 1) supported, got $fmt")
-          channels = getU16(bytes, body + 2)
+          channels = u16(b, body + 2)
           require(channels > 0 && channels <= 8,
             s"channel count out of range: $channels")
-          val rate = getU32(bytes, body + 4)
+          val rate = u32(b, body + 4)
           require(rate > 0 && rate <= Int.MaxValue,
             s"sample rate out of range: $rate")
           sampleRate = rate.toInt
-          val bits = getU16(bytes, body + 14)
+          val bits = u16(b, body + 14)
           require(bits == 16, s"only 16-bit PCM supported, got $bits-bit")
         case "data" =>
           dataOff = body
@@ -134,11 +119,8 @@ object Wav {
     require(n % channels == 0,
       s"$n samples not a multiple of $channels channels")
     val samples = new Array[Short](n)
-    var i = 0
-    while (i < n) {
-      samples(i) = getU16(bytes, dataOff + 2 * i).toShort
-      i += 1
-    }
+    b.position(dataOff)
+    b.asShortBuffer().get(samples)
     PcmAudio(sampleRate, channels, samples)
   }
 

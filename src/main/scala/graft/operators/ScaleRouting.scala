@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-threshold routing for aggregates whose exact form cannot
-  * survive 100 TB — the execution-path twin of PageRank's iteration
-  * routing (graph/PageRank.scala): the decision is made from
-  * driver-side metadata before any job runs, and BOTH branches are
-  * real, spec-covered plans.
+  * survive 100 TB: the decision is made from driver-side metadata
+  * before any job runs, and BOTH branches are real, spec-covered
+  * plans.
   *
   * Exact `percentile`/`percentile_disc` is an ObjectHashAggregate
   * buffering EVERY group value — at 100 TB that is an executor OOM,

@@ -20,11 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * between scanning 100 TB of embeddings at memory bandwidth and at
   * interpreter speed.
   *
-  * Semantics match graft.similarity.Similarity.cosine exactly
-  * (left-to-right double accumulation, `max(‖a‖·‖b‖, 1e-12)` guard), so
-  * swapping it in cannot change oracle-checked results. Vectors are
-  * assumed equal-length (embedding corpora are fixed-dim); extra
-  * elements on the longer side are ignored.
+  * graft.similarity.Similarity.cosine builds it directly, so it runs
+  * in every session. Semantics: left-to-right double accumulation and
+  * a `max(‖a‖·‖b‖, 1e-12)` guard, bit-identical to the `zip_with` +
+  * `aggregate` formula (spec-asserted).
+  * Vectors are assumed equal-length (embedding corpora are fixed-dim);
+  * extra elements on the longer side are ignored.
   */
 case class VecCosine(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -111,12 +112,12 @@ case class VecCosine(left: Expression, right: Expression)
   * `numPlanes` sign-of-projection bits packed into an int.
   *
   * The planes are deterministic pseudo-random components in [-0.5,0.5)
-  * generated from (globalPlaneIndex, dim) — identical to
-  * graft.similarity.Similarity.planeComponent, so this expression and
-  * the portable column formula produce the same buckets. Codegen emits
-  * one fused loop over (planes × dims) against a reference-object
-  * plane matrix; the portable form pays an interpreted zip_with +
-  * aggregate per plane.
+  * generated from (globalPlaneIndex, dim) by
+  * [[VecLshSignature.component]]. Codegen emits one fused loop over
+  * (planes × dims) against a reference-object plane matrix, where a
+  * higher-order-function formula would pay an interpreted `zip_with` +
+  * `aggregate` per plane. graft.similarity.Similarity.lshSignature
+  * builds it directly, so it runs in every session.
   */
 case class VecLshSignature(child: Expression, numPlanes: Int, table: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -131,12 +132,11 @@ case class VecLshSignature(child: Expression, numPlanes: Int, table: Int)
 
   override def prettyName: String = "vec_lsh"
 
-  /** plane p, dim i — must stay in lockstep with
-    * Similarity.planeComponent (spec-asserted). Pre-tabulated for the
-    * first [[VecLshSignature.PlaneDims]] dims (covers every real
-    * embedding model); dims beyond that fall back to computing the
-    * component on demand, so arbitrary-length vectors stay correct and
-    * identical to the portable column formula. */
+  /** plane p, dim i, pre-tabulated for the first
+    * [[VecLshSignature.PlaneDims]] dims (covers every real embedding
+    * model); dims beyond that compute the component on demand, so
+    * arbitrary-length vectors get the same signature as an uncapped
+    * formula (spec-asserted). */
   @transient private lazy val planes: Array[Array[Double]] =
     Array.tabulate(numPlanes, VecLshSignature.PlaneDims) { (p, i) =>
       VecLshSignature.component(table * numPlanes + p, i)
@@ -205,10 +205,9 @@ object VecLshSignature {
   val PlaneDims: Int = 4096
 
   /** Deterministic pseudo-random component in [-0.5, 0.5): the
-    * md5-fraction of "globalPlane:dim" — identical to the portable
-    * Similarity.planeComponent column formula AND to what DuckDB
-    * computes, so the native expression, the portable fallback, and
-    * the SQL oracle all build the same hyperplanes. */
+    * md5-fraction of "globalPlane:dim" — identical to what DuckDB
+    * computes, so the native expression and the SQL oracle build the
+    * same hyperplanes. */
   def component(globalPlane: Int, dim: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val d = md.digest(s"$globalPlane:$dim".getBytes("UTF-8"))
@@ -217,9 +216,11 @@ object VecLshSignature {
   }
 }
 
-/** Registers graft's native expressions via the public extension point:
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions`). */
+/** Registers graft's optimizer rules, and its native expressions under
+  * their SQL names (`vec_cosine`, `vec_lsh`), via the public extension
+  * point: `spark.sql.extensions=graft.plans.GraftExtensions` (or
+  * `SparkSession.builder.withExtensions`). graft's own kernels build
+  * the expressions directly and do not need the names. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BandedRangeJoinRule)

@@ -179,18 +179,16 @@ object DedupSim {
     * and the 6-dp pair cosines are all engine-portable. */
   def qDedupSemantic(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
-    val cos = Similarity.cosineIn(s) _
-    val cent = Similarity.kmeansRefine(
-      emb, k = derivedCells(s, d), iters = 1, cosineFn = cos)
+    val cent = Similarity.kmeansRefine(emb, k = derivedCells(s, d), iters = 1)
     // feeds both pair sides and the verdict rollup
-    val asg = Materialize(Similarity.ivfAssign(emb, cent, "vec_id", "embedding", 1, cos)
+    val asg = Materialize(Similarity.ivfAssign(emb, cent, "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("cell_id")))
     val v = asg.select(col("vec_id").as("id"), col("embedding").as("v"),
       col("cell_id"))
     val nbrs = v.as("x").join(v.as("y"),
         col("x.cell_id") === col("y.cell_id") &&
         col("x.id") =!= col("y.id"))
-      .withColumn("cs", round(cos(col("x.v"), col("y.v")), 6))
+      .withColumn("cs", round(Similarity.cosine(col("x.v"), col("y.v")), 6))
       .where(col("cs") >= SemThreshold)
       .groupBy(col("x.id").as("vec_id"))
       .agg(count(lit(1)).as("n_near"), min(col("y.id")).as("min_nbr"))
@@ -452,16 +450,14 @@ object DedupSim {
   def qDedupEmbedding(s: SparkSession, d: String): DataFrame =
     Similarity.cosineNearDupPairsGuarded(
       embParallel(s, d), threshold = 0.95,
-      hotCap = Similarity.HotBlockCap, numCells = derivedCells(s, d),
-      cosineFn = Similarity.cosineIn(s))
+      hotCap = Similarity.HotBlockCap, numCells = derivedCells(s, d))
       .orderBy(col("id_a"), col("id_b"))
 
   /** Brute-force cosine top-5 for a bounded query set (vec_id < 20). */
   def qAnnBruteforce(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     Similarity.bruteForceTopK(
-      emb.where(col("vec_id") < 20), emb, k = 5,
-      cosineFn = Similarity.cosineIn(s))
+      emb.where(col("vec_id") < 20), emb, k = 5)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -473,9 +469,7 @@ object DedupSim {
     val emb = embParallel(s, d)
     Similarity.lshTopK(
       emb.where(col("vec_id") < 20), emb, k = 5, numPlanes = LshPlanes,
-      numTables = LshTables,
-      cosineFn = Similarity.cosineIn(s),
-      sigFn = Similarity.lshSignatureIn(s))
+      numTables = LshTables)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -509,9 +503,7 @@ object DedupSim {
     val emb = embParallel(s, d)
     Similarity.lshTopK(
       emb.where(col("vec_id") < 20), emb, k = 5,
-      numPlanes = LshMultiPlanes, numTables = LshMultiTables,
-      cosineFn = Similarity.cosineIn(s),
-      sigFn = Similarity.lshSignatureIn(s))
+      numPlanes = LshMultiPlanes, numTables = LshMultiTables)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -528,8 +520,7 @@ object DedupSim {
     val emb = embParallel(s, d)
     Similarity.ivfTopK(
       emb.where(col("vec_id") < 20), emb, k = 5,
-      numCells = derivedCells(s, d), nProbe = 4,
-      cosineFn = Similarity.cosineIn(s))
+      numCells = derivedCells(s, d), nProbe = 4)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -550,8 +541,7 @@ object DedupSim {
     val emb = embParallel(s, d)
     Similarity.ivfPqTopK(
       emb.where(col("vec_id") < 20), emb, k = 5,
-      numCells = derivedCells(s, d), nProbe = 4,
-      cosineFn = Similarity.cosineIn(s))
+      numCells = derivedCells(s, d), nProbe = 4)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -566,8 +556,7 @@ object DedupSim {
     val emb = embParallel(s, d)
     val cells = Similarity.ivfAssign(
       emb, Similarity.ivfCentroids(emb, derivedCells(s, d)),
-      "vec_id", "embedding", nProbe = 1,
-      cosineFn = Similarity.cosineIn(s))
+      "vec_id", "embedding", nProbe = 1)
     cells.groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
       .agg(
         count(lit(1)).as("n_cells"),
@@ -610,15 +599,13 @@ object DedupSim {
   def qAnnKmeans(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     val cent = Similarity.kmeansRefine(
-      emb, k = KmeansCells, iters = KmeansIters,
-      cosineFn = Similarity.cosineIn(s))
+      emb, k = KmeansCells, iters = KmeansIters)
     // nearest-cell assignment as a per-row array argmax over the ONE
     // broadcast centroid-array row (see Similarity.ivfAssign): no n·K
     // candidate rows, no window, no exchange before the cell rollup —
     // the final groupBy(cell_id) is the only shuffle, a plain codegen
     // HashAggregate with map-side partials
-    val best = array_max(Similarity.scoredCells(
-      col("embedding"), col("_cents"), Similarity.cosineIn(s)))
+    val best = array_max(Similarity.scoredCells(col("embedding"), col("_cents")))
     emb.crossJoin(broadcast(Similarity.packCentroids(cent)))
       .select(best.getField("cell_id").as("cell_id"),
         best.getField("_sim").as("_sim"))
@@ -639,11 +626,10 @@ object DedupSim {
     val emb = embParallel(s, d)
     val cells = Similarity.ivfAssign(
       emb, Similarity.ivfCentroids(emb, derivedCells(s, d)),
-      "vec_id", "embedding",
-      nProbe = 1, cosineFn = Similarity.cosineIn(s))
+      "vec_id", "embedding", nProbe = 1)
     Similarity.cosineNearDupPairs(
       cells, threshold = 0.4, idCol = "vec_id", vecCol = "embedding",
-      blockCol = "cell_id", cosineFn = Similarity.cosineIn(s))
+      blockCol = "cell_id")
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -658,11 +644,10 @@ object DedupSim {
     val emb = embParallel(s, d)
     val cells = Similarity.ivfAssign(
       emb, Similarity.ivfCentroids(emb, derivedCells(s, d)),
-      "vec_id", "embedding",
-      nProbe = 2, cosineFn = Similarity.cosineIn(s))
+      "vec_id", "embedding", nProbe = 2)
     Similarity.cosineNearDupPairs(
       cells, threshold = 0.4, idCol = "vec_id", vecCol = "embedding",
-      blockCol = "cell_id", cosineFn = Similarity.cosineIn(s))
+      blockCol = "cell_id")
       .distinct()
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -680,7 +665,7 @@ object DedupSim {
     import s.implicits._
     val v = embParallel(s, d).select(col("vec_id"), col("embedding"))
     val truth = Materialize(v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
-      .where(round(Similarity.cosineIn(s)(col("x.embedding"),
+      .where(round(Similarity.cosine(col("x.embedding"),
         col("y.embedding")), 6) >= 0.4)
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b")))
     val approx = Materialize(qDedupEmbeddingIvf(s, d)
@@ -726,7 +711,7 @@ object DedupSim {
     val cent = Similarity.groupCentroids(emb, "label")
     val scored = emb.join(broadcast(cent), "label")
       .select(col("vec_id"), col("label"),
-        round(Similarity.cosineIn(s)(col("embedding"), col("centroid")), 6)
+        round(Similarity.cosine(col("embedding"), col("centroid")), 6)
           .as("proto_sim"))
     val ls = scored.groupBy(col("label"))
       .agg(round(sum(col("proto_sim").cast("decimal(18,6)")).cast("double") /
@@ -797,8 +782,7 @@ object DedupSim {
       val sl = emb.select(col("vec_id"),
         slice(col("embedding"), 1, dd).as("embedding"))
       Similarity.bruteForceTopK(
-        sl.where(col("vec_id") < 20), sl, k = 5,
-        cosineFn = Similarity.cosineIn(s))
+        sl.where(col("vec_id") < 20), sl, k = 5)
         .select(lit(dd).as("dim"), col("query_id"), col("vec_id"))
     }.reduce(_ unionByName _)
     val hits = runs.join(truth, Seq("query_id", "vec_id"), "left_semi")
@@ -1001,7 +985,6 @@ object DedupSim {
   private def annApproxRanked(s: SparkSession, d: String): DataFrame = {
     val emb = embParallel(s, d)
     val queries = emb.where(col("vec_id") < 20)
-    val cos = Similarity.cosineIn(s) _
     // ONE materialized centroid pick serves both IVF-family pipelines
     // (each private build repeats a corpus scan + top-K + fetch join).
     // The corpus ASSIGNMENT stays lazy per pipeline on purpose:
@@ -1013,13 +996,13 @@ object DedupSim {
     // persisted assignment — the sharing seam exists; the bench keeps
     // the measured-faster shape.)
     val cents = Materialize(Similarity.ivfCentroids(emb, derivedCells(s, d)))
-    val asgIvf = Similarity.ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
-    val asgPq = Similarity.ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
+    val asgIvf = Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
+    val asgPq = Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
     val ivf = Similarity.ivfTopKFromIndex(queries,
       asgIvf.select(col("vec_id"), col("embedding").as("cv"), col("cell_id")),
-      cents, k = 5, nProbe = 4, cosineFn = cos)
+      cents, k = 5, nProbe = 4)
     val ivfpq = Similarity.ivfPqTopKFromAssign(queries, asgPq, cents, emb,
-      k = 5, nProbe = 4, cosineFn = cos)
+      k = 5, nProbe = 4)
     ivf
       .select(lit("ivf").as("method"), col("query_id"), col("vec_id"),
         col("rk"))
@@ -1133,20 +1116,19 @@ object DedupSim {
     import s.implicits._
     val emb = embParallel(s, d)
     val queries = emb.where(col("vec_id") < 20)
-    val cos = Similarity.cosineIn(s) _
     val cents = Similarity.ivfCentroids(emb, derivedCells(s, d))
     val cells = Similarity
-      .ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
+      .ivfAssign(emb, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("embedding").as("cv"), col("cell_id"))
     val probes = Similarity.ivfProbesRanked(
-      queries, cents, "vec_id", "embedding", ProbeSweepDepths.max, cos)
+      queries, cents, "vec_id", "embedding", ProbeSweepDepths.max)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("probe_rk"), col("cell_id"))
     // candidate scores computed ONCE for the deepest probe set; every
     // shallower depth is a probe_rk filter over this table
     val cand = Materialize(probes.join(cells, "cell_id")
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cos(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(Similarity.cosine(col("qv"), col("cv")), 6))
       .select(col("query_id"), col("vec_id"), col("probe_rk"), col("sim")))
     val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
     val pdim = ProbeSweepDepths.toDF("nprobe")
@@ -1189,15 +1171,14 @@ object DedupSim {
     import s.implicits._
     val emb = embParallel(s, d)
     val queries = emb.where(col("vec_id") < 20)
-    val cos = Similarity.cosineIn(s) _
     val cents = Similarity.ivfCentroids(emb, derivedCells(s, d))
     val cbRow = Similarity.pqCodebookRow(emb, "vec_id", "embedding")
     val index = Similarity.pqEncode(
-      Similarity.ivfAssign(emb, cents, "vec_id", "embedding", 1, cos)
+      Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
         .crossJoin(broadcast(cbRow)), "embedding")
       .select(col("vec_id"), col("cell_id"), col("codes"))
     val probes = Similarity.ivfProbesRanked(
-      queries, cents, "vec_id", "embedding", ProbeSweepDepths.max, cos)
+      queries, cents, "vec_id", "embedding", ProbeSweepDepths.max)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("probe_rk"), col("cell_id"))
     val adc = Materialize(probes.join(index, "cell_id")
@@ -1221,7 +1202,7 @@ object DedupSim {
       .orderBy(col("sim").desc, col("vec_id"))
     val topk = shortlist
       .join(emb.select(col("vec_id"), col("embedding").as("cv")), "vec_id")
-      .withColumn("sim", round(cos(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(Similarity.cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(wSim))
       .where(col("rk") <= 5)
     val bf = Materialize(qAnnBruteforce(s, d).select(col("query_id"), col("vec_id")))
@@ -1264,10 +1245,8 @@ object DedupSim {
     val seedsMax = Materialize(Similarity.ivfCentroids(emb, KmeansElbowKs.max))
     KmeansElbowKs.map { k =>
       val cent = Similarity.kmeansRefineFrom(
-        seedsMax.where(col("cell_id") <= k), emb, iters = KmeansIters,
-        cosineFn = Similarity.cosineIn(s))
-      val best = array_max(Similarity.scoredCells(
-        col("embedding"), col("_cents"), Similarity.cosineIn(s)))
+        seedsMax.where(col("cell_id") <= k), emb, iters = KmeansIters)
+      val best = array_max(Similarity.scoredCells(col("embedding"), col("_cents")))
       emb.crossJoin(broadcast(Similarity.packCentroids(cent)))
         .select(best.getField("cell_id").as("cell_id"),
           best.getField("_sim").as("_sim"))

@@ -2,13 +2,18 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.classic.GraftColumns
 import org.apache.spark.sql.functions._
+import graft.plans.{VecCosine, VecLshSignature}
 
 /** Vector similarity search over an `array<float>` embedding column
   * (SURVEY.md §2, similarity block).
   *
-  * Vector math is higher-order column expressions (`zip_with` +
-  * `aggregate`) — codegen'd, no UDFs, accumulating in double. Two
+  * Cosine and LSH signatures are graft's native codegen'd expressions
+  * (graft.plans.VecCosine / VecLshSignature), built straight into the
+  * Column, so every session runs them whatever extensions it was built
+  * with; the rest of the vector math is higher-order column expressions
+  * (`zip_with` + `aggregate`) accumulating in double, no UDFs. Two
   * search paths:
   *   - brute force: exact, for correctness baselines and small query
   *     sets (cost = |queries| × |corpus|, distributed as a broadcast
@@ -24,19 +29,10 @@ object Similarity {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Portable cosine from higher-order built-ins (interpreted —
-    * CodegenFallback; fine for bounded work, see `cosineIn`). */
+  /** Σaᵢbᵢ / max(‖a‖·‖b‖, 1e-12), accumulated left-to-right in double
+    * over float or double arrays: one fused codegen'd loop (VecCosine). */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / greatest(norm(a) * norm(b), lit(1e-12))
-
-  /** Best cosine available in this session: graft's codegen'd
-    * VecCosine when GraftExtensions is installed (bit-identical
-    * semantics, one fused primitive loop), else the portable form. */
-  def cosineIn(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("vec_cosine")) call_function("vec_cosine", a, b)
-    else cosine(a, b)
+    GraftColumns(e => VecCosine(e(0), e(1)), a, b)
 
   /** Exact top-k neighbors for each query vector: broadcast the bounded
     * query set against the corpus, rank per query. Rank on the ROUNDED
@@ -44,15 +40,14 @@ object Similarity {
     * reorder results. */
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(
       col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     c.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cosineFn(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("sim"), col("rk"))
@@ -64,53 +59,28 @@ object Similarity {
   def cosineNearDupPairs(
       vecs: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      blockCol: String = "label",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      blockCol: String = "label"): DataFrame = {
     val v = vecs.select(
       col(idCol).as("id"), col(vecCol).as("v"), col(blockCol).as("blk"))
     v.as("x").join(v.as("y"),
         col("x.blk") === col("y.blk") && col("x.id") < col("y.id"))
-      .withColumn("cos_sim", round(cosineFn(col("x.v"), col("y.v")), 6))
+      .withColumn("cos_sim", round(cosine(col("x.v"), col("y.v")), 6))
       .where(col("cos_sim") >= threshold)
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"), col("cos_sim"))
   }
 
   // ---- Random-hyperplane LSH ---------------------------------------
 
-  /** Deterministic pseudo-random hyperplane component: a value in
-    * [-0.5, 0.5) derived from (plane, dim) via the md5-fraction of
-    * "plane:dim" — reproducible across executors with no broadcast
-    * state, and ENGINE-PORTABLE (DuckDB computes the identical double,
-    * which is what lets q_ann_lsh carry a full hash-checked oracle).
-    * Kept in lockstep with graft.plans.VecLshSignature.component
-    * (spec-asserted) so the native and portable signatures agree. */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    conv(substring(md5(
-      concat(lit(s"$plane:"), dim.cast("string"))), 1, 6), 16, 10)
-      .cast("long").cast("double") / 16777216.0 - 0.5
-
-  /** Best LSH signature available in this session: the codegen'd
-    * vec_lsh expression when GraftExtensions is installed, else the
-    * portable per-plane column formula. */
-  def lshSignatureIn(spark: org.apache.spark.sql.SparkSession)(
-      vec: Column, numPlanes: Int, table: Int): Column =
-    if (spark.catalog.functionExists("vec_lsh"))
-      call_function("vec_lsh", vec, lit(numPlanes), lit(table))
-    else lshSignature(vec, numPlanes, table)
-
   /** Sign-of-projection bit signature (numPlanes bits) as an int; the
     * `table` index offsets the plane seeds so multiple independent
-    * hash tables can be built from one formula. */
-  def lshSignature(vec: Column, numPlanes: Int, table: Int = 0): Column = {
-    val bits = (0 until numPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(table * numPlanes + p, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1), p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
+    * hash tables can be built from one formula. The hyperplane
+    * components are md5 fractions of "plane:dim" in [-0.5, 0.5)
+    * (VecLshSignature.component) — reproducible across executors with
+    * no broadcast state, and engine-portable: DuckDB computes the
+    * identical doubles, which is what lets q_ann_lsh carry a full
+    * hash-checked oracle. */
+  def lshSignature(vec: Column, numPlanes: Int, table: Int = 0): Column =
+    GraftColumns(e => VecLshSignature(e.head, numPlanes, table), vec)
 
   // ---- IVF (inverted-file) coarse quantization ----------------------
 
@@ -143,12 +113,10 @@ object Similarity {
   def cosineNearDupPairsGuarded(
       vecs: DataFrame, threshold: Double, hotCap: Int, numCells: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      blockCol: String = "label",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame =
+      blockCol: String = "label"): DataFrame =
     cosineNearDupPairs(
-      guardedBlockKeys(vecs, hotCap, numCells, idCol, vecCol, blockCol,
-        cosineFn),
-      threshold, idCol, vecCol, "_blk", cosineFn)
+      guardedBlockKeys(vecs, hotCap, numCells, idCol, vecCol, blockCol),
+      threshold, idCol, vecCol, "_blk")
 
   /** The guard's blocking keys (exposed for the spec): `_blk` is the
     * block itself for cold blocks, (block, ivf cell) for hot ones. The
@@ -156,11 +124,9 @@ object Similarity {
     * assignment is the per-row broadcast argmax of `ivfAssign`. */
   private[graft] def guardedBlockKeys(
       vecs: DataFrame, hotCap: Int, numCells: Int,
-      idCol: String, vecCol: String, blockCol: String,
-      cosineFn: (Column, Column) => Column): DataFrame = {
+      idCol: String, vecCol: String, blockCol: String): DataFrame = {
     val counts = vecs.groupBy(col(blockCol)).agg(count(lit(1)).as("_bn"))
-    ivfAssign(vecs, ivfCentroids(vecs, numCells, idCol, vecCol),
-        idCol, vecCol, 1, cosineFn)
+    ivfAssign(vecs, ivfCentroids(vecs, numCells, idCol, vecCol), idCol, vecCol)
       .join(broadcast(counts), blockCol)
       .withColumn("_blk", concat(col(blockCol).cast("string"), lit("#"),
         when(col("_bn") > hotCap, col("cell_id")).otherwise(lit(0))
@@ -217,10 +183,8 @@ object Similarity {
     * engines because assignments are identical. */
   def kmeansRefine(
       corpus: DataFrame, k: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame =
-    kmeansRefineFrom(ivfCentroids(corpus, k, idCol, vecCol),
-      corpus, iters, idCol, vecCol, cosineFn)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    kmeansRefineFrom(ivfCentroids(corpus, k, idCol, vecCol), corpus, iters, idCol, vecCol)
 
   /** [[kmeansRefine]] from a PREBUILT seed table — lets a k-ladder
     * query (q_ann_kmeans_elbow) derive all its seed sets from ONE
@@ -230,11 +194,10 @@ object Similarity {
     * identical refinement plan, identical declared results. */
   def kmeansRefineFrom(
       seeds: DataFrame, corpus: DataFrame, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     var cent = seeds
     for (_ <- 1 to iters) {
-      val asg = ivfAssign(corpus, cent, idCol, vecCol, 1, cosineFn)
+      val asg = ivfAssign(corpus, cent, idCol, vecCol, 1)
       cent = asg
         .select(col("cell_id"), posexplode(col(vecCol)).as(Seq("pos", "x")))
         .groupBy(col("cell_id"), col("pos"))
@@ -261,11 +224,9 @@ object Similarity {
     * similarity (cell_id tiebreak) keeps the choice bit-stable across
     * engines and cluster sizes: distributed float noise below 1e-6 can
     * never flip a cell. */
-  def scoredCells(
-      vec: Column, cents: Column,
-      cosineFn: (Column, Column) => Column): Column =
+  def scoredCells(vec: Column, cents: Column): Column =
     transform(cents, c => struct(
-      round(cosineFn(vec, c.getField("centroid")), 6).as("_sim"),
+      round(cosine(vec, c.getField("centroid")), 6).as("_sim"),
       (-c.getField("cell_id")).as("_negCell"),
       c.getField("cell_id").as("cell_id")))
 
@@ -284,10 +245,9 @@ object Similarity {
   def ivfAssign(
       vecs: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String,
-      nProbe: Int = 1,
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      nProbe: Int = 1): DataFrame = {
     val base = vecs.crossJoin(broadcast(packCentroids(centroids)))
-    val scored = scoredCells(col(vecCol), col("_cents"), cosineFn)
+    val scored = scoredCells(col(vecCol), col("_cents"))
     val passthrough = vecs.columns.toSeq.map(col)
     if (nProbe <= 1)
       base.select(passthrough :+
@@ -312,10 +272,9 @@ object Similarity {
     * the shared-assignment backbone of the probe-count tuning sweep. */
   def ivfProbesRanked(
       vecs: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, nProbe: Int,
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String, vecCol: String, nProbe: Int): DataFrame = {
     val base = vecs.crossJoin(broadcast(packCentroids(centroids)))
-    val scored = scoredCells(col(vecCol), col("_cents"), cosineFn)
+    val scored = scoredCells(col(vecCol), col("_cents"))
     val ranked = transform(scored, s => struct(
       (-s.getField("_sim")).as("_negSim"),
       s.getField("cell_id").as("cell_id")))
@@ -334,13 +293,11 @@ object Similarity {
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       numCells: Int, nProbe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centroids = ivfCentroids(corpus, numCells, idCol, vecCol)
-    val cells = ivfAssign(corpus, centroids, idCol, vecCol, 1, cosineFn)
+    val cells = ivfAssign(corpus, centroids, idCol, vecCol, 1)
       .select(col(idCol).as("vec_id"), col(vecCol).as("cv"), col("cell_id"))
-    ivfTopKFromIndex(queries, cells, centroids, k, nProbe,
-      idCol, vecCol, cosineFn)
+    ivfTopKFromIndex(queries, cells, centroids, k, nProbe, idCol, vecCol)
   }
 
   /** [[ivfTopK]] from a PREBUILT index — `cells` is the corpus
@@ -353,15 +310,14 @@ object Similarity {
   def ivfTopKFromIndex(
       queries: DataFrame, cells: DataFrame, centroids: DataFrame,
       k: Int, nProbe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
-    val probes = ivfAssign(queries, centroids, idCol, vecCol, nProbe, cosineFn)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val probes = ivfAssign(queries, centroids, idCol, vecCol, nProbe)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"), col("cell_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     probes.join(cells, "cell_id")
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cosineFn(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("sim"), col("rk"))
@@ -371,10 +327,9 @@ object Similarity {
     * standard multi-table LSH: a true neighbor missed by one table is
     * usually caught by another, trading recall for candidate volume. */
   private def lshBuckets(
-      vec: Column, numPlanes: Int, numTables: Int,
-      sigFn: (Column, Int, Int) => Column): Column =
+      vec: Column, numPlanes: Int, numTables: Int): Column =
     explode(array((0 until numTables).map { t =>
-      struct(lit(t).as("tbl"), sigFn(vec, numPlanes, t).as("bucket"))
+      struct(lit(t).as("tbl"), lshSignature(vec, numPlanes, t).as("bucket"))
     }: _*))
 
   /** Bucketed approximate top-k: candidates share ANY of the query's
@@ -383,17 +338,15 @@ object Similarity {
   def lshTopK(
       queries: DataFrame, corpus: DataFrame, k: Int, numPlanes: Int,
       numTables: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine,
-      sigFn: (Column, Int, Int) => Column = lshSignature): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(
       col(idCol).as("query_id"), col(vecCol).as("qv"),
-      lshBuckets(col(vecCol), numPlanes, numTables, sigFn).as("tb"))
+      lshBuckets(col(vecCol), numPlanes, numTables).as("tb"))
       .select(col("query_id"), col("qv"),
         col("tb.tbl").as("q_tbl"), col("tb.bucket").as("q_bucket"))
     val c = corpus.select(
       col(idCol).as("vec_id"), col(vecCol).as("cv"),
-      lshBuckets(col(vecCol), numPlanes, numTables, sigFn).as("tb"))
+      lshBuckets(col(vecCol), numPlanes, numTables).as("tb"))
       .select(col("vec_id"), col("cv"),
         col("tb.tbl").as("c_tbl"), col("tb.bucket").as("c_bucket"))
     val w = Window.partitionBy(col("query_id"))
@@ -404,7 +357,7 @@ object Similarity {
         col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"), col("qv"), col("cv"))
       .distinct() // a pair colliding in several tables scores once
-      .withColumn("sim", round(cosineFn(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("sim"), col("rk"))
@@ -499,12 +452,11 @@ object Similarity {
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       numCells: Int, nProbe: Int, refineFactor: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centroids = ivfCentroids(corpus, numCells, idCol, vecCol)
-    val asg = ivfAssign(corpus, centroids, idCol, vecCol, 1, cosineFn)
+    val asg = ivfAssign(corpus, centroids, idCol, vecCol, 1)
     ivfPqTopKFromAssign(queries, asg, centroids, corpus, k, nProbe,
-      refineFactor, idCol, vecCol, cosineFn)
+      refineFactor, idCol, vecCol)
   }
 
   /** [[ivfPqTopK]] from a PREBUILT coarse index — `asg` is the corpus
@@ -517,15 +469,14 @@ object Similarity {
       queries: DataFrame, asg: DataFrame, centroids: DataFrame,
       corpus: DataFrame, k: Int,
       nProbe: Int, refineFactor: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cbRow = pqCodebookRow(corpus, idCol, vecCol)
     // the "index": cell + codes only — the full vector is dropped,
     // which is the whole point at scale
     val index = pqEncode(
       asg.crossJoin(broadcast(cbRow)), vecCol)
       .select(col(idCol).as("vec_id"), col("cell_id"), col("codes"))
-    val probes = ivfAssign(queries, centroids, idCol, vecCol, nProbe, cosineFn)
+    val probes = ivfAssign(queries, centroids, idCol, vecCol, nProbe)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"), col("cell_id"))
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adist_e6"), col("vec_id"))
@@ -542,7 +493,7 @@ object Similarity {
     shortlist
       .join(corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv")),
         "vec_id")
-      .withColumn("sim", round(cosineFn(col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(wSim))
       .where(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("sim"), col("rk"))

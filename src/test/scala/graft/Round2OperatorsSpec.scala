@@ -88,11 +88,6 @@ class Round2OperatorsSpec extends SparkSpec {
         edges.toDF("id_a", "id_b"), "id_a", "id_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"trial $trial diverged (edges=$edges)")
-      // the skew-resistant variant must produce the identical labeling
-      val gotStar = Cluster.connectedComponentsStar(
-        edges.toDF("id_a", "id_b"), "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotStar == want, s"trial $trial star-CC diverged (edges=$edges)")
     }
   }
 
@@ -105,17 +100,13 @@ class Round2OperatorsSpec extends SparkSpec {
     val hub = (0L until 1000L).filter(_ != 500L).map(v => (500L, v))
     val chain = (2000L until 2030L).map(v => (v, v + 1))
     val pairs = (hub ++ chain ++ Seq((5000L, 5001L))).toDF("id_a", "id_b")
-    val got = Cluster.connectedComponentsStar(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want =
       (0L until 1000L).map(v => v -> 0L).toMap ++
         (2000L to 2030L).map(v => v -> 2000L).toMap ++
         Map(5000L -> 5000L, 5001L -> 5000L)
-    assert(got == want)
-    // and both algorithms agree on it
-    val gotProp = Cluster.connectedComponents(pairs, "id_a", "id_b", maxIter = 40)
+    val got = Cluster.connectedComponents(pairs, "id_a", "id_b", maxIter = 40)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotProp == want)
+    assert(got == want)
   }
 
   test("dedupClusters keeps non-paired docs as singleton canonicals") {

@@ -100,8 +100,7 @@ class SimilaritySpec extends SparkSpec {
       Seq((900L, vec(0, 1), "hot"), (901L, vec(0, 1).updated(7, 0.002), "hot"))
     val vecs = spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
     val keyed = Similarity.guardedBlockKeys(
-      vecs, hotCap = 16, numCells = 8, "vec_id", "embedding", "label",
-      Similarity.cosine)
+      vecs, hotCap = 16, numCells = 8, "vec_id", "embedding", "label")
     val nb = keyed.groupBy(col("label"))
       .agg(countDistinct(col("_blk")).as("nb")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
